@@ -24,9 +24,15 @@ object Bench {
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
-      ordered.foreach { case (_, fn) =>
-        try fn(spark, warmDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
+      ordered.foreach { case (name, fn) =>
+        // NonFatal only: a fatal warmup error must surface, not leave a cold
+        // query to be timed as if it were warm (JobProfile's discipline);
+        // stderr, so the stdout lines stay exactly the bench's record
+        try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] warmup of $name failed (its timing below is cold): ${e.getMessage}")
+        }
       }
     // Drop warmup debris (persisted dedup frames, cached model predictions)
     // before timing: the timed loop should pay each operator's own cost,
@@ -105,11 +111,20 @@ object Bench {
       .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"query_steal":$stealQs,"sf":"$sfDir","steal_pct":$stealJson,"n_errors":${errors.size},"errors":$errJson}"""
-    try {
-      val out = java.nio.file.Paths.get(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"))
-      java.nio.file.Files.write(out, fullJson.getBytes("UTF-8")): Unit
-    } catch { case _: Throwable => () }
+    // A failed record write is reported and fails the run (after the
+    // stdout lines, which stay as they are): a run whose durable record is
+    // missing must not read as a success.
+    val recordWritten =
+      try {
+        val out = java.nio.file.Paths.get(
+          sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json"))
+        java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))
+        true
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[bench] writing the run record failed: $e")
+          false
+      }
     // Stdout, engineered for a 2000-char tail window:
     //   line 1 — every query at 3-decimal precision, CHEAPEST FIRST with
     //     the envelope at the end, so the only thing a tail cut can lose
@@ -139,5 +154,6 @@ object Bench {
     println(line1)
     println(line2)
     spark.stop()
+    if (!recordWritten) sys.exit(1)
   }
 }

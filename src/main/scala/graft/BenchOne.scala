@@ -19,9 +19,14 @@ object BenchOne {
     GraftSession.tune(spark)
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
-    // same warmup discipline as Bench: JIT/codegen paid at the small SF
+    // same warmup discipline as Bench: JIT/codegen paid at the small SF;
+    // NonFatal only, and a failed warmup is said on stderr (the stdout line
+    // is the record), so a cold best-of-N is identifiable
     try fn(spark, "/root/testdata/sf0.001").queryExecution.toRdd.count()
-    catch { case _: Throwable => () }
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench-one] warmup failed (the times below are cold): ${e.getMessage}")
+    }
     // fresh mode (SPARK_GRAFT_FRESH_MEMO=1): drop the per-(session, dir)
     // trained-artifact memos before every iteration, so best-of-N times
     // the query BUILD-INCLUSIVE — how a family's alphabetically-first

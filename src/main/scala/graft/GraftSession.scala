@@ -29,7 +29,10 @@ object GraftSession {
       // JOB per read of a 33..128-dir table — a ~0.15 s roundtrip to list
       // KB of names, paid on EVERY lake re-read in the streaming refresh
       // gates (their state lakes are 64-shard by contract). Tables larger
-      // than 128 dirs still get the distributed listing.
+      // than 128 dirs still get the distributed listing. Its sibling, the
+      // schema-inference job a schema-less read launches to read ONE
+      // footer, has no threshold to raise: graft.sources.Tables.parquet
+      // reads that footer on the driver instead (no conf involved).
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
       // managed (bucketed) tables live in scratch space, never the repo cwd
       .config("spark.sql.warehouse.dir",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Incremental, Snapshot, TextOps}
+import graft.sources.Tables
 
 /** Scale probe for the incremental pipeline (D30): measures the claim the
   * sf-gate cannot — that a refresh with a FIXED-SIZE delta costs the
@@ -82,8 +83,8 @@ object IncrScale {
     Incremental.batch(prev, "doc_id", "text", keep, mt, ov, budget, shards,
         docShard)
       .write.mode("overwrite").parquet(s"$stateDir/packed")
-    val prevLedger = spark.read.parquet(s"$stateDir/ledger")
-    val prevPacked = spark.read.parquet(s"$stateDir/packed")
+    val prevLedger = Tables.parquet(spark, s"$stateDir/ledger")
+    val prevPacked = Tables.parquet(spark, s"$stateDir/packed")
 
     // wall time AND shuffle-write records (the BloomScale discipline): on
     // a cluster the corpus-wide shuffle is network, and records is the
@@ -155,9 +156,9 @@ object IncrScale {
     st0.scrubbed.write.mode("overwrite").parquet(s"$sDir/scrubbed")
     Dedup.unpersistIntermediates()
     val stP = IncrementalScrub.State(
-      spark.read.parquet(s"$sDir/wins"),
-      spark.read.parquet(s"$sDir/df"),
-      spark.read.parquet(s"$sDir/scrubbed"))
+      Tables.parquet(spark, s"$sDir/wins"),
+      Tables.parquet(spark, s"$sDir/df"),
+      Tables.parquet(spark, s"$sDir/scrubbed"))
     val (tScrubBatch, _, shScrubBatch, sbScrubBatch) = timed {
       Dedup.spanScrub(curr, "doc_id", "text", 8, 2)
         .queryExecution.toRdd.count()

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Scale-proof corpus builder: multiplies the `documents`, `embeddings`,
   * and `events` tables by an integer factor so scaling claims can be
   * measured one decade past the driver-provided SFs (sf0.1 × 10 ≈ sf1)
@@ -40,7 +42,7 @@ object ScaleGen {
     spark.sparkContext.setLogLevel("WARN")
     val OFF = 10000000L // id offset per copy; testdata ids are ≪ 10M
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.parquet(spark, s"$src/documents.parquet")
     val docCopies = (0 until factor).map { k =>
       if (k == 0) docs
       else {
@@ -64,7 +66,7 @@ object ScaleGen {
     // maps TIMESTAMP(NANOS) to long at read; written back as plain int64
     // it reads as long again). The id offset is a multiple of 10 so the
     // pmod-10 cohort/region distributions are preserved exactly.
-    val ev = spark.read.parquet(s"$src/events.parquet")
+    val ev = Tables.parquet(spark, s"$src/events.parquet")
     val evCopies = (0 until factor).map { k =>
       if (k == 0) ev
       else ev
@@ -74,7 +76,7 @@ object ScaleGen {
     evCopies.repartition(factor * 4)
       .write.mode("overwrite").parquet(s"$dst/events.parquet")
 
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
+    val emb = Tables.parquet(spark, s"$src/embeddings.parquet")
     val embCopies = (0 until factor).map { k =>
       if (k == 0) emb
       else emb.select(

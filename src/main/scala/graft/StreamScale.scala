@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Dedup, Incremental}
+import graft.sources.Tables
 import graft.streaming.{IncrementalStream, ScrubStream}
 
 /** Scale probe for the STREAMING refresh loops (E9/E10): the claim is
@@ -105,7 +106,7 @@ object StreamScale {
     // curr), so the second run is identical compute with JIT/codegen paid
     def directOnce(): Unit =
       Incremental.refreshInPlace(
-        spark.read.parquet(s"$base/direct/ledger"), s"$base/direct/packed",
+        Tables.parquet(spark, s"$base/direct/ledger"), s"$base/direct/packed",
         curr, wave.select("doc_id"), "doc_id", "text", keep,
         mt, ov, budget, shards, docShard)
         .write.mode("overwrite").parquet(s"$base/direct/ledger_next")
@@ -123,8 +124,8 @@ object StreamScale {
     }
     timed(streamOnce()): Unit
     tStream = timed(streamOnce())
-    val a = spark.read.parquet(s"$base/direct/packed")
-    val b = spark.read.parquet(s"$base/stream/packed")
+    val a = Tables.parquet(spark, s"$base/direct/packed")
+    val b = Tables.parquet(spark, s"$base/stream/packed")
       .select(a.columns.map(col): _*)
     equalPipe = Some(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     }
@@ -146,7 +147,7 @@ object StreamScale {
     }
     timed(scrubOnce()): Unit
     tScrubStream = timed(scrubOnce())
-    val gotScrub = spark.read.parquet(s"$base/scrub/scrub")
+    val gotScrub = Tables.parquet(spark, s"$base/scrub/scrub")
       .select("id", "scrubbed_text", "n_tokens", "n_removed")
     val wantScrub = Dedup.spanScrub(curr, "doc_id", "text", 8, 2)
       .select(col("doc_id").as("id"), col("scrubbed_text"),

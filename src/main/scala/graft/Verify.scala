@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Tables
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -30,7 +31,7 @@ object Verify {
     val expected = Seq("documents" -> 500L, "embeddings" -> 500L,
       "events" -> 10000L)
     val actual = expected.map { case (t, _) =>
-      t -> spark.read.parquet(s"$sfDir/$t.parquet").count() }
+      t -> Tables.parquet(spark, s"$sfDir/$t.parquet").count() }
     if (actual != expected) {
       val msg =
         s"""|[verify] WRONG CORPUS for golden oracles: expected

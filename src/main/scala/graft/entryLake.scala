@@ -75,7 +75,7 @@ private[graft] object LakeEntries {
         curr, Snapshot.diff(prev, curr, "doc_id", "text"),
         "doc_id", "text", incrKeep,
         maxTokens = 32, overlap = 8, budget = 256L, shards = 64, incrShard): Unit
-      s.read.parquet(path).select(
+      Tables.parquet(s, path).select(
         col("doc_id"), col("chunk_id"), col("n_tokens"),
         col("shard").cast("int").as("shard"), col("seq_id"))
     }),
@@ -185,7 +185,7 @@ private[graft] object LakeEntries {
       Sink.writePartitioned(
         Tables.events(s, d).select(col("event_id"), to_date(col("ts")).as("day"), col("value")),
         path, "day")
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .groupBy("day")
         .agg(count(lit(1)).as("n_rows"), sum("value").as("total_value"))
     }),
@@ -200,7 +200,7 @@ private[graft] object LakeEntries {
       Sink.writeSorted(
         Tables.events(s, d).select(col("event_id"), col("ts"), col("value")),
         path, Seq("ts"), files = 8)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
           col("ts") < lit("2024-01-15 00:00:00").cast("timestamp"))
         .agg(count(lit(1)).as("n_rows"),
@@ -225,7 +225,7 @@ private[graft] object LakeEntries {
         path,
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date")),
         col("user_id"), files = 16)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
           col("ts") < lit("2024-01-15 00:00:00").cast("timestamp") &&
           col("user_id") >= 100 && col("user_id") < 300)
@@ -245,7 +245,7 @@ private[graft] object LakeEntries {
         path,
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date")),
         col("user_id"), col("value"), files = 16)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("ts") >= lit("2024-01-08 00:00:00").cast("timestamp") &&
           col("ts") < lit("2024-01-15 00:00:00").cast("timestamp") &&
           col("user_id") >= 100 && col("user_id") < 300 &&
@@ -267,7 +267,7 @@ private[graft] object LakeEntries {
         Tables.events(s, d).select(
           col("event_id"), to_date(col("ts")).as("day"), col("ts"), col("value")),
         path, "day", Seq("ts"), files = 16)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("day") >= lit("2024-01-08").cast("date") &&
           col("day") <= lit("2024-01-14").cast("date") &&
           col("ts") >= lit("2024-01-10 06:00:00").cast("timestamp") &&
@@ -297,7 +297,7 @@ private[graft] object LakeEntries {
         .withColumn("version", lit(1))
       Sink.upsertPartitioned(s, path, updates,
         keys = Seq("event_id"), orderCol = "version", tieBreak = "event_id", partitionCol = "day")
-      s.read.parquet(path).select("event_id", "value")
+      Tables.parquet(s, path).select("event_id", "value")
     }),
 
     "bucketed_layout" -> ((s, d) => {

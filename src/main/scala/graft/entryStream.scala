@@ -99,7 +99,7 @@ private[graft] object StreamEntries {
         .write.mode("append").parquet(landing)
       EventStream.upsertStream(s, landing, tbl, ckpt, availableNow = true)
         .awaitTermination()
-      s.read.parquet(tbl).select("event_id", "value")
+      Tables.parquet(s, tbl).select("event_id", "value")
     }),
     "stream_jsonl_ingest" -> ((s, d) => {
       // The corpus boundary as a STREAM: the JSONL landing prefix (with
@@ -135,7 +135,7 @@ private[graft] object StreamEntries {
             Jsonl.ingestProfile(batch, "lang", "n_chars"), out, batchId)
         }
         .start().awaitTermination()
-      s.read.parquet(out).groupBy("lang", "is_corrupt")
+      Tables.parquet(s, out).groupBy("lang", "is_corrupt")
         .agg(sum("n_docs").as("n_docs"), sum("total_chars").as("total_chars"))
     }),
     "stream_incremental" -> ((s, d) => {
@@ -191,7 +191,7 @@ private[graft] object StreamEntries {
           .coalesce(1).write.mode("append").parquet(landing)
         drain()
       }
-      s.read.parquet(packed).select(
+      Tables.parquet(s, packed).select(
         col("doc_id"), col("chunk_id"), col("n_tokens"),
         col("shard").cast("int").as("shard"), col("seq_id"))
     }),
@@ -245,7 +245,7 @@ private[graft] object StreamEntries {
           .coalesce(1).write.mode("append").parquet(landing)
         drain()
       }
-      s.read.parquet(scrub).select(col("id").as("doc_id"),
+      Tables.parquet(s, scrub).select(col("id").as("doc_id"),
         md5(col("scrubbed_text")).as("scrub_hash"),
         col("n_tokens"), col("n_removed"))
     }),
@@ -291,7 +291,7 @@ private[graft] object StreamEntries {
       Seq(model, margins, vocab).foreach(_.unpersist())
       // drop the batch-stamped sink's delivery-ledger partition column —
       // the gate compares score content, not delivery bookkeeping
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select("doc_id", "n_bigrams", "n_oov", "logprob_sum", "avg_nll",
           "ppl", "keep")
     }),
@@ -335,7 +335,7 @@ private[graft] object StreamEntries {
       EventStream.knScoreStream(s, landing, schema, frames, "doc_id", "text",
         out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
       held.foreach(_.unpersist())
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select("doc_id", "n_trigrams", "n_hit3", "n_hit2", "logprob_sum",
           "avg_nll", "ppl", "keep")
     }),
@@ -395,7 +395,7 @@ private[graft] object StreamEntries {
         cuts, "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1)
         .awaitTermination()
       Seq(model, margins, vocab).foreach(_.unpersist())
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select("doc_id", "n_bigrams", "n_oov", "avg_nll", "bucket")
     }),
     "stream_seq_packing" -> ((s, d) => {
@@ -424,7 +424,7 @@ private[graft] object StreamEntries {
         .write.mode("append").parquet(landing)
       EventStream.packingStream(s, landing, schema, out, ckpt,
         budget = 128, shards = 2).awaitTermination()
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select(col("doc_id"), col("n_tokens"),
           col("shard").cast("long").as("shard"), col("seq_id"))
     }),
@@ -455,7 +455,7 @@ private[graft] object StreamEntries {
         .write.mode("append").parquet(landing)
       EventStream.domainCapStream(s, landing, schema, out, ckpt, cap = 15L)
         .awaitTermination()
-      s.read.parquet(out).select("doc_id", "domain", "seen_rank", "kept")
+      Tables.parquet(s, out).select("doc_id", "domain", "seen_rank", "kept")
     }),
     "stream_provenance" -> ((s, d) => {
       // E17 (r19): D34b's provenance ledger at CRAWL-INGEST — the
@@ -523,7 +523,7 @@ private[graft] object StreamEntries {
         .coalesce(1).write.mode("append").parquet(landing)
       drain()
       index.unpersist()
-      s.read.parquet(out).select(
+      Tables.parquet(s, out).select(
         col("doc_id"), col("domain"), col("pass_url"),
         col("pass_linecut"), col("pass_gopher"), col("pass_lm"),
         col("within_cap"), col("drop_stage"), col("keep"),
@@ -564,7 +564,7 @@ private[graft] object StreamEntries {
       EventStream.lineDedupStream(s, landing, schema, index, "doc_id", "text",
         out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
       index.unpersist()
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .select(col("id").as("doc_id"), col("n_lines"), col("n_cut"),
           col("cleaned_text"))
     }),
@@ -608,7 +608,7 @@ private[graft] object StreamEntries {
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.noveltyStream(s, landing, schema, index, "doc_id", "text",
         out, ckpt, threshold = 0.7, maxFilesPerTrigger = 1).awaitTermination()
-      s.read.parquet(out).filter(col("doc_id") >= 3000000L)
+      Tables.parquet(s, out).filter(col("doc_id") >= 3000000L)
         .select("doc_id", "is_novel")
     }),
     "stream_phash_novelty" -> ((s, d) => {
@@ -673,7 +673,7 @@ private[graft] object StreamEntries {
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt,
         maxFilesPerTrigger = 1).awaitTermination()
-      s.read.parquet(out).select("asset_id", "method", "is_novel")
+      Tables.parquet(s, out).select("asset_id", "method", "is_novel")
     })
   )
 

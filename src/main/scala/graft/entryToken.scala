@@ -499,7 +499,7 @@ private[graft] object TokenEntries {
       Sink.reset(path)
       Sink.exportTokenStream(s, packedStreamEos(s, d), path)
         .queryExecution.toRdd.count(): Unit // land the stream
-      val landed = s.read.parquet(path)
+      val landed = Tables.parquet(s, path)
       // seg_idx = separators seen strictly before this pos + 1; stream
       // order within a sequence IS doc-id order (the packer's window)
       val wSeen = Window.partitionBy("shard", "seq_id").orderBy("pos")

@@ -58,18 +58,6 @@ object Analytics {
     df.groupBy(groupExpr.as(groupName)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Bounded report window (report.py:37-43 ReportConfig(start_date,
-    * end_date): every reference report query is windowed). Inclusive start,
-    * exclusive end; on a natively-typed timestamp column the literals push
-    * down to partition/min-max stats and prune before the scan. NOTE: for
-    * the nanos-long events feed use [[graft.sources.Tables.eventsWindowed]]
-    * instead — a bound written against the CONVERTED ts stays a post-scan
-    * filter there. */
-  def reportWindow(df: DataFrame, start: String, end: String,
-                   tsCol: String = "ts"): DataFrame =
-    df.filter(col(tsCol) >= lit(start).cast("timestamp") &&
-              col(tsCol) < lit(end).cast("timestamp"))
-
   /** DATE_TRUNC-bucketed aggregation (ml.py:861 weekly, ml.py:239 monthly). */
   def timeBucketStats(events: DataFrame, unit: String, tsCol: String = "ts",
                       valueCol: String = "value", idCol: String = "user_id"): DataFrame =

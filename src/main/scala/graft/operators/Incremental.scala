@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Incremental corpus preparation — the loop [[Snapshot]] exists to feed.
   * A production corpus refreshes continuously (the reference's sensor
   * polls for new data and re-materializes stale partitions,
@@ -322,7 +324,7 @@ object Incremental {
     // a re-run after a crash mid-swap must read the healed lake (every
     // shard directory present) before re-planning the refresh
     graft.sources.Sink.healSwaps(spark, packedPath)
-    val prevPacked = spark.read.parquet(packedPath)
+    val prevPacked = Tables.parquet(spark, packedPath)
     val parts = plan(prevLedger, prevPacked, curr, delta, idCol, textCol,
       keep, maxTokens, overlap, budget, shards, docShard, pinAffected = true,
       deltaDocs = deltaDocs)

@@ -204,8 +204,8 @@ object LangIdModel {
     }
   }
 
-  /** md5-prefix bucket — the exact arithmetic of the Column form below
-    * and of DuckDB's `('0x'||substr(md5(t),1,4))::BIGINT % 1024`. */
+  /** md5-prefix bucket — the exact arithmetic of DuckDB's
+    * `('0x'||substr(md5(t),1,4))::BIGINT % 1024`. */
   def bucketJvm(trigram: String): Int = {
     val d = java.security.MessageDigest.getInstance("MD5")
       .digest(trigram.getBytes("UTF-8"))
@@ -284,12 +284,6 @@ object LangIdModel {
   }
 
   // ---- scoring -------------------------------------------------------
-
-  /** Per-gram bucket as a Column (same arithmetic as [[bucketJvm]]) —
-    * kept as the readable reference form; the hot path is
-    * [[scoresKernel]]. */
-  private def bucketCol(t: Column): Column =
-    (conv(substring(md5(t), 1, 4), 16, 10).cast("long") % buckets).cast("int")
 
   // The StaticInvoke fast path (the TextHash discipline): the Column-
   // function form of gram scoring is semantically right but pays an

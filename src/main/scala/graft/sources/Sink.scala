@@ -94,7 +94,7 @@ object Sink {
     // (days), so the driver-side collect is O(days), never O(rows).
     val touched = updates.select(partitionCol).distinct().collect().map(_.get(0))
     if (touched.isEmpty) return
-    val existing = spark.read.parquet(path)
+    val existing = Tables.parquet(spark, path)
       .filter(col(partitionCol).isin(touched: _*))   // partition pruning
       .select(updates.columns.map(col): _*)
     val merged = Dedup.latestWins(
@@ -240,7 +240,7 @@ object Sink {
           if (needyNull.nonEmpty) Some(col(partitionCol).isNull) else None
         (byValue ++ byNull).reduce(_ || _)
       }
-      spark.read.parquet(path)
+      Tables.parquet(spark, path)
         .filter(sel) // pruned
         .repartition(col(partitionCol)) // one task → one file per partition
         .write.mode("overwrite").partitionBy(partitionCol)
@@ -252,7 +252,7 @@ object Sink {
     val audit = before.keys.toSeq.sorted
       .map(n => (decode(n), before(n), after.getOrElse(n, 0)))
       .toDF("__part", "files_before", "files_after")
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(coalesce(col(partitionCol).cast("string"), lit(nullDir)).as("__part"))
       .agg(count(lit(1)).as("n_rows"))
       .join(broadcast(audit), Seq("__part"))
@@ -475,7 +475,7 @@ object Sink {
       .sortWithinPartitions(col("shard"), col("__order"))
       .drop("__order")
       .write.mode("overwrite").partitionBy("shard").parquet(path)
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
       .groupBy(col("shard").cast("long").as("shard"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -519,7 +519,7 @@ object Sink {
       .repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("seq_id"), col("pos"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
-    val base = spark.read.parquet(path)
+    val base = Tables.parquet(spark, path)
       .groupBy(col("shard").cast("long").as("shard"))
     if (hasSegs)
       base.agg(

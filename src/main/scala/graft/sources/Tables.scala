@@ -1,19 +1,77 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver testdata layout
-  * (`<sfDir>/<table>.parquet`).
+  * (`<sfDir>/<table>.parquet`), and [[parquet]], the one parquet read every
+  * table, lake and sink read-back in graft goes through.
   *
-  * Plain `spark.read.parquet` so Catalyst column pruning and predicate
-  * pushdown reach the scan — callers select/filter and the parquet reader
-  * only materializes what the plan needs (verify with
-  * `.explain("formatted")`: `PushedFilters`, `ReadSchema`).
+  * A schema-less `spark.read.parquet` infers its schema by launching a Spark
+  * job (`parallelize(files).mapPartitions(readFooter).collect()`) even when,
+  * with schema merging off, it reads exactly ONE footer: a scheduler
+  * roundtrip (about 0.06 s per read on 4 local cores), paid by every query
+  * before its plan exists. [[parquet]] picks the same file on the driver, reads its footer
+  * on the calling thread with Spark's own footer→schema conversion, and
+  * hands the result to `spark.read.schema(..)`: no job, same schema.
+  * Partition columns are still discovered from the directory names, and
+  * Catalyst column pruning and predicate pushdown still reach the scan —
+  * callers select/filter and the parquet reader only materializes what the
+  * plan needs (verify with `.explain("formatted")`: `PushedFilters`,
+  * `ReadSchema`).
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(paths: _*)` without the schema-inference job.
+    * Where the footer is not the whole story Spark's own read decides,
+    * errors included: schema merging on, summary files (`_metadata`), data
+    * files below non-partition subdirectories, a path with no data file,
+    * and a path the listing or the footer read fails on — missing, a glob,
+    * not parquet (Spark re-raises the failure in its own words). */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    // with schema merging on every footer matters: Spark must read them all
+    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) None
+    else
+      try {
+        val conf = spark.sessionState.newHadoopConf()
+        // a streaming file sink's output is read through its log, not a listing
+        val sinkFiles = if (paths.size == 1) GraftParquetBridge.sinkLogFiles(spark, conf, paths.head) else None
+        val files = sinkFiles.map(_.map(_ -> true)).getOrElse(paths.flatMap(leafFiles(conf, _)))
+        // ParquetUtils.inferSchema without mergeSchema: the first file by full path
+        if (!files.forall(_._2)) None
+        else files.map(_._1).sortBy(_.getPath.toString).headOption
+          .map(GraftParquetBridge.footerSchema(spark, conf, _))
+      } catch { case NonFatal(_) => None }
+
+  /** The files below `root` that Spark's file index lists, by a recursive
+    * listing that skips hidden names exactly as `HadoopFSUtils` does, each
+    * paired with whether the index hands it to schema inference as a data
+    * file: summary files (`_metadata`) and files below a plain (not
+    * `key=value`) subdirectory are not, and make [[parquet]] defer. */
+  private def leafFiles(conf: Configuration, root: String): Seq[(FileStatus, Boolean)] = {
+    val raw = new Path(root)
+    val fs = raw.getFileSystem(conf)
+    def list(dir: Path, partitionDir: Boolean): Seq[(FileStatus, Boolean)] =
+      fs.listStatus(dir).toSeq.filterNot(s => GraftParquetBridge.hiddenName(s.getPath.getName)).flatMap { s =>
+        if (s.isDirectory) list(s.getPath, s.getPath.getName.contains("="))
+        else Seq(s -> (partitionDir && !s.getPath.getName.startsWith("_")))
+      }
+    list(fs.makeQualified(raw), partitionDir = true)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, NgramLm, TextOps, UrlRules}
+import graft.sources.Tables
 
 /** D34b's provenance ledger at CRAWL-INGEST time (r19) — the serving form
   * of the curation chain: the deployed artifacts (corpus line index,
@@ -51,7 +52,7 @@ object CurationStream {
     if (prior.isEmpty)
       Seq.empty[(String, Long)].toDF("domain", "n_prior")
     else
-      spark.read.parquet(prior: _*)
+      Tables.parquet(spark, prior: _*)
         .groupBy("domain").agg(sum("n_pass").as("n_prior"))
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Incremental
-import graft.sources.Sink
+import graft.sources.{Sink, Tables}
 
 /** The incremental corpus refresh ACTUALLY STREAMING — the production
   * shape of the [[Incremental]] loop: a crawler emits delta waves
@@ -74,7 +74,7 @@ object IncrementalStream {
     // a replayed wave whose previous attempt crashed mid-swap must read
     // the healed lake (every partition present) before re-staging
     Sink.healSwaps(spark, rawPath)
-    val prev = spark.read.parquet(rawPath)
+    val prev = Tables.parquet(spark, rawPath)
     val ids = wave.select(col(idCol)).distinct()
     val touched = wave
       .select(docShard(col(idCol)).cast("int").as("__shard")).distinct()
@@ -136,12 +136,12 @@ object IncrementalStream {
           // a replay of a wave that crashed mid-ledger-swap must read the
           // healed (pre-wave) ledger — the recompute then converges
           Sink.healDir(spark, ledgerPath)
-          val prevLedger = spark.read.parquet(ledgerPath)
+          val prevLedger = Tables.parquet(spark, ledgerPath)
           val newLedger = Incremental.refreshInPlace(
             prevLedger, packedPath,
             curr = {
               rawAdvance.await()
-              spark.read.parquet(rawPath).select(col(idCol), col(textCol))
+              Tables.parquet(spark, rawPath).select(col(idCol), col(textCol))
             },
             wave.select(col(idCol)),
             idCol, textCol, keep, maxTokens, overlap, budget, shards,

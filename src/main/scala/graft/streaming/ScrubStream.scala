@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.IncrementalScrub
-import graft.sources.Sink
+import graft.sources.{Sink, Tables}
 
 /** The frequency-delta scrub refresh ACTUALLY STREAMING — the
   * [[IncrementalStream]] loop extended to the stage whose state is not
@@ -80,9 +80,9 @@ object ScrubStream {
   def readState(spark: SparkSession, winsPath: String, dfPath: String,
                 scrubPath: String): IncrementalScrub.State =
     IncrementalScrub.State(
-      spark.read.parquet(winsPath).select("id", "start", "whash"),
-      spark.read.parquet(dfPath).select("whash", "df"),
-      spark.read.parquet(scrubPath)
+      Tables.parquet(spark, winsPath).select("id", "start", "whash"),
+      Tables.parquet(spark, dfPath).select("whash", "df"),
+      Tables.parquet(spark, scrubPath)
         .select("id", "scrubbed_text", "n_tokens", "n_removed"))
 
   // ---- staged-commit protocol -------------------------------------
@@ -212,7 +212,7 @@ object ScrubStream {
         docShard))
     def curr = {
       rawAdvance.await()
-      spark.read.parquet(rawPath).select(col(idCol), col(textCol))
+      Tables.parquet(spark, rawPath).select(col(idCol), col(textCol))
     }
     val prev = readState(spark, winsPath, dfPath, scrubPath)
     val parts = IncrementalScrub.refreshParts(prev, curr,
@@ -242,19 +242,19 @@ object ScrubStream {
     // enter these plans)
     def inParts(c: Column, touched: Array[Int]): Column =
       c.isin(touched.map(Integer.valueOf): _*)
-    val winsLake = spark.read.parquet(winsPath)
+    val winsLake = Tables.parquet(spark, winsPath)
     val winsNew = winsLake
       .filter(inParts(col("__shard"), winsTouched))
       .join(broadcast(parts.dIds), Seq("id"), "left_anti")
       .unionByName(parts.newDeltaWins
         .withColumn("__shard", docShard(col("id")).cast("int")))
-    val dfLake = spark.read.parquet(dfPath)
+    val dfLake = Tables.parquet(spark, dfPath)
     val dfNew = dfLake
       .filter(inParts(col("__hbkt"), dfTouchedBkts))
       .join(broadcast(parts.dfTouched), Seq("whash"), "left_anti")
       .unionByName(parts.dfUpdated.withColumn("__hbkt",
         pmod(col("whash"), lit(hashBuckets.toLong)).cast("int")))
-    val scrubLake = spark.read.parquet(scrubPath)
+    val scrubLake = Tables.parquet(spark, scrubPath)
     val scrubNew = scrubLake
       .filter(inParts(col("__shard"), scrubTouched))
       .join(broadcast(parts.gone), Seq("id"), "left_anti")
