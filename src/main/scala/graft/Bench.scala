@@ -1,16 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark) // bench measures the engine's advertised tuning
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // bench measures the engine's advertised session, filesystem included
+    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup at the smallest SF: codegen + JIT compile once so the timed
     // run measures steady-state operator cost, not whichever query happens
@@ -30,7 +25,7 @@ object Bench {
         // stderr, so the stdout lines stay exactly the bench's record
         try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
         catch {
-          case scala.util.control.NonFatal(e) =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] warmup of $name failed (its timing below is cold): ${e.getMessage}")
         }
       }
@@ -65,9 +60,11 @@ object Bench {
       // .count() lets Catalyst prune the projections under test.
       try { fn(spark, sfDir).queryExecution.toRdd.count() }
       catch {
-        case e: Throwable =>
-          // a failed query must be visibly broken in the artifact, never a
-          // small "fast" timing: record the error keyed by query name
+        // a failed query must be visibly broken in the artifact, never a
+        // small "fast" timing: record the error keyed by query name. NonFatal
+        // only: a fatal error ends the run (non-zero exit) instead of timing
+        // the remaining queries on a broken JVM
+        case NonFatal(e) =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
       }
       val sec = (System.nanoTime() - t0) / 1e9
@@ -121,7 +118,7 @@ object Bench {
         java.nio.file.Files.write(out, fullJson.getBytes("UTF-8"))
         true
       } catch {
-        case scala.util.control.NonFatal(e) =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] writing the run record failed: $e")
           false
       }

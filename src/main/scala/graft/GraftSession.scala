@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.LocalFs
 import org.apache.spark.sql.SparkSession
 
 /** Tuned SparkSession factory for the graft engine.
@@ -9,6 +10,14 @@ import org.apache.spark.sql.SparkSession
   * partitions are sized for the local core count (the 200 default is a
   * cluster-size knob), and auto-broadcast keeps dimension-table joins
   * shuffle-free.
+  *
+  * The builder also installs [[graft.sources.LocalFs]] for `file:` paths,
+  * so a lake write or a streaming checkpoint on a local disk sets each
+  * file's mode in-process instead of forking `chmod` for it (Hadoop does
+  * that without its native library). Only the builder can: `SharedState`
+  * opens the session's `file:` FileSystem when the session starts, and
+  * Hadoop caches that instance for the whole JVM, so a session built
+  * elsewhere keeps stock Hadoop's filesystem and [[tune]] cannot swap it.
   */
 object GraftSession {
   def builder(appName: String = "graft", cores: Int = 32): SparkSession.Builder =
@@ -38,6 +47,10 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // `file:` through graft.sources.LocalFs, for Hadoop's FileSystem and
+      // FileContext APIs: no chmod fork per file written (see above)
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
 
   /** Production streaming state tuning: RocksDB-backed keyed state instead
     * of the default in-JVM-heap HDFSBackedStateStore. At scale the state of
@@ -108,9 +121,9 @@ object GraftSession {
       stealPctOfUser(before, after).map(_.toString).getOrElse("null")
   }
 
-  /** Apply graft runtime tuning to an externally-created session (the driver
-    * builds its own bare session for Verify/Bench). Session-scoped SQL confs
-    * only — master/memory are fixed at creation. */
+  /** Apply graft runtime tuning to an externally-created session.
+    * Session-scoped SQL confs only — master/memory, and the `file:`
+    * filesystem (see the object's doc), are fixed at creation. */
   def tune(spark: SparkSession): SparkSession = {
     val c = spark.conf
     c.set("spark.sql.adaptive.enabled", "true")

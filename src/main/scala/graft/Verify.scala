@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.sources.Tables
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,14 +12,8 @@ object Verify {
     // → full run, contract unchanged)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.builder("graft-verify", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Gate-corpus sentinel: the [GOLDEN @ gate corpus] oracles (fingerprint,
@@ -54,7 +48,9 @@ object Verify {
         System.err.println(s"[verify] running $name")
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        // NonFatal only: a fatal error ends the run (non-zero exit) rather
+        // than dumping the remaining queries from a broken JVM
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           e.getStackTrace.take(25).foreach(f =>
             System.err.println(s"[verify]   at $f"))
