@@ -3,10 +3,8 @@ import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // bench measures the engine's advertised session, filesystem included
-    val spark = GraftSession.builder("graft-bench", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
     // Warmup at the smallest SF: codegen + JIT compile once so the timed
     // run measures steady-state operator cost, not whichever query happens
     // to pay first-touch compilation.
@@ -17,18 +15,8 @@ object Bench {
     // isolated run reproduced the pins exactly. Sorted order keeps
     // round-over-round numbers comparable.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory)
-      ordered.foreach { case (name, fn) =>
-        // NonFatal only: a fatal warmup error must surface, not leave a cold
-        // query to be timed as if it were warm (JobProfile's discipline);
-        // stderr, so the stdout lines stay exactly the bench's record
-        try fn(spark, warmDir).queryExecution.toRdd.count(): Unit
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] warmup of $name failed (its timing below is cold): ${e.getMessage}")
-        }
-      }
+    if (new java.io.File(Harness.WarmDir).isDirectory)
+      ordered.foreach { case (name, fn) => Harness.warm(spark, name, fn) }
     // Drop warmup debris (persisted dedup frames, cached model predictions)
     // before timing: the timed loop should pay each operator's own cost,
     // not the GC pressure of another scale factor's leftovers.
@@ -42,7 +30,7 @@ object Bench {
     // Per-QUERY steal (r19 verdict mandate): sample /proc/stat around each
     // query's own timed window, so a single storm pulse landing on one row
     // (the doc_semantic_dedup 44.7× pattern) adjudicates itself in-run
-    // instead of consuming a round-opening BenchOne batch.
+    // instead of needing an isolated `Harness one` re-run.
     val timed = ordered.map { case (name, fn) =>
       // release every cache the previous query left behind (dedup-tier
       // MEMORY_AND_DISK frames, cached model predictions) and quiesce the
@@ -85,18 +73,6 @@ object Bench {
     // 90+ query names alone exceed that — no single full-precision stdout
     // line can survive it (r1-r7 all lost their head, every round's
     // `parsed` was null). The file is the durable record.
-    // full JSON string escaping (mirrors Verify.q): exception messages can
-    // carry any control character, and one raw U+0000-001F would make the
-    // whole committed artifact unparseable
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // per-query steal_pct (same Δsteal/Δuser convention as the run-level
@@ -104,7 +80,7 @@ object Bench {
     // reads 30%+ steal names its weather without a re-run
     val stealQs = querySteal.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"\"" + k + "\":" + jstr(v) }
+    val errJson = errors.map { case (k, v) => s"\"" + k + "\":" + Harness.jsonString(v) }
       .mkString("{", ",", "}")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"query_steal":$stealQs,"sf":"$sfDir","steal_pct":$stealJson,"n_errors":${errors.size},"errors":$errJson}"""

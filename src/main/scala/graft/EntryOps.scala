@@ -45,11 +45,9 @@ private[graft] object EntryOps {
   }
 
   /** Drop every memoized trained artifact (GBT fit, BPE merges, DSIR
-    * ratio table, quality weights) for `s`. Bench hook: BenchOne's fresh
-    * mode calls this per iteration so a family's first member can be
-    * pinned BUILD-INCLUSIVE — the cost it actually bills inside the full
-    * sorted bench run, where the alphabetically-first sibling pays the
-    * one-time build and the rest score against the memo. */
+    * ratio table, quality weights) for `s`. Benchmark hook: perfbench
+    * calls this before every timed pass, so each pass pays the one-time
+    * builds again instead of scoring against the previous pass's memo. */
   def clearSessionMemos(s: SparkSession): Unit = {
     modelCache.clear(s); bpeMergeCache.clear(s); unigramCache.clear(s)
     wordpieceCache.clear(s)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.sources.LocalFs
 import org.apache.spark.sql.SparkSession
 
@@ -17,10 +19,10 @@ import org.apache.spark.sql.SparkSession
   * that without its native library). Only the builder can: `SharedState`
   * opens the session's `file:` FileSystem when the session starts, and
   * Hadoop caches that instance for the whole JVM, so a session built
-  * elsewhere keeps stock Hadoop's filesystem and [[tune]] cannot swap it.
+  * elsewhere keeps stock Hadoop's filesystem for the JVM's lifetime.
   */
 object GraftSession {
-  def builder(appName: String = "graft", cores: Int = 32): SparkSession.Builder =
+  def builder(appName: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)
@@ -66,13 +68,14 @@ object GraftSession {
     spark
   }
 
-  /** The per-query isolation sweep shared by every harness main that loops
-    * queries in one JVM (Bench, BenchOne, Verify, Explain, CurationScale —
-    * previously five hand-kept copies that had already drifted): tracked
-    * dedup caches (persistTracked) belong to ONE query's lifetime, the
-    * eager curation fns materialize checkpoint blocks at frame-construction
-    * time, and ~200 queries' worth of residue in a single JVM is the exact
-    * driver-heap failure Verify's full run hit before it got this sweep.
+  /** The per-query isolation sweep shared by every harness that loops
+    * queries in one JVM (Bench, Verify, Harness's `one`, `profile` and
+    * `explain` modes, perfbench's runner — previously hand-kept copies
+    * that had already drifted): tracked dedup caches (persistTracked)
+    * belong to ONE query's lifetime, the eager curation fns materialize
+    * checkpoint blocks at frame-construction time, and ~200 queries' worth
+    * of residue in a single JVM is the exact driver-heap failure Verify's
+    * full run hit before it got this sweep.
     * The trailing System.gc() gives the ContextCleaner's weak references a
     * collection point so broadcasts/shuffles don't ride the heap until an
     * allocation failure forces it. */
@@ -104,7 +107,7 @@ object GraftSession {
           val f = line.trim.split("\\s+")
           if (f.length > 8) Some((f(8).toLong, f(1).toLong)) else None
         } finally src.close()
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
 
     /** Percent of user CPU lost to steal between two samples, 1 decimal.
       * None if either sample failed or the user delta is zero (nothing ran). */
@@ -119,26 +122,5 @@ object GraftSession {
     /** JSON fragment value: the pct or `null` — valid JSON either way. */
     def json(before: Option[(Long, Long)], after: Option[(Long, Long)]): String =
       stealPctOfUser(before, after).map(_.toString).getOrElse("null")
-  }
-
-  /** Apply graft runtime tuning to an externally-created session.
-    * Session-scoped SQL confs only — master/memory, and the `file:`
-    * filesystem (see the object's doc), are fixed at creation. */
-  def tune(spark: SparkSession): SparkSession = {
-    val c = spark.conf
-    c.set("spark.sql.adaptive.enabled", "true")
-    c.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    c.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    c.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-    // Day/week bucketing and the tz-naive DuckDB oracle both assume UTC;
-    // an externally-built session on a non-UTC host must not disagree.
-    c.set("spark.sql.session.timeZone", "UTC")
-    // Session-build-time home for the nanos-timestamp reader mapping
-    // (Tables.events re-asserts the same constant for externally-built
-    // sessions, e.g. the driver's smoke-check session).
-    c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // See builder: don't pay a Spark job to list ≤128 partition dirs.
-    c.set("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-    spark
   }
 }

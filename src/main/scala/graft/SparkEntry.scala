@@ -21,8 +21,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.dailyCounts(Tables.events(spark, "/root/testdata/sf0.001"))
 
-  /** Drop every memoized trained artifact for `s` — the BenchOne fresh-
-    * mode hook (see [[EntryOps.clearSessionMemos]]). */
+  /** Drop every memoized trained artifact for `s` — perfbench's
+    * per-pass clear (see [[EntryOps.clearSessionMemos]]). */
   def clearSessionMemos(s: SparkSession): Unit = EntryOps.clearSessionMemos(s)
 
   private def merged[V](parts: Seq[Map[String, V]]): Map[String, V] = {

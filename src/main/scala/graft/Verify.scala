@@ -12,9 +12,7 @@ object Verify {
     // → full run, contract unchanged)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = GraftSession.builder("graft-verify", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Gate-corpus sentinel: the [GOLDEN @ gate corpus] oracles (fingerprint,
     // stratified_sample, multimodal_golden, embedding_dedup, the ANN
@@ -56,20 +54,11 @@ object Verify {
             System.err.println(s"[verify]   at $f"))
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // every key and SQL text fully escaped (Harness.jsonString): a tab or
+    // CR in hand-written oracle SQL would otherwise make the compare's
+    // json.load fail and silently zero the whole correctness check
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${Harness.jsonString(k)}: ${Harness.jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -104,13 +104,15 @@ private[graft] object StreamEntries {
     "stream_jsonl_ingest" -> ((s, d) => {
       // The corpus boundary as a STREAM: the JSONL landing prefix (with
       // the same two planted corrupt lines as jsonl_ingest) drained by an
-      // AvailableNow run of the quarantined parse, maxFilesPerTrigger=2
-      // forcing several real micro-batches; foreachBatch appends each
-      // batch's ingest profile as telemetry. The gate rolls the telemetry
-      // up — counts and char-sums are decomposable, so the rollup must
-      // equal the batch profile EXACTLY no matter how the drain was
-      // split into batches (batch-split independence), pinned by the same
-      // oracle as jsonl_ingest.
+      // AvailableNow run of the quarantined parse (maxFilesPerTrigger=2);
+      // foreachBatch appends each batch's ingest profile as telemetry.
+      // The gate rolls the telemetry up — counts and char-sums are
+      // decomposable, so the rollup must equal the batch profile EXACTLY,
+      // pinned by the same oracle as jsonl_ingest. The testdata tables are
+      // single files, so the landing holds one data file plus the corrupt
+      // one and drains in ONE micro-batch here: this gate does not split
+      // the drain. Batch-split independence is pinned by JsonlSpec's
+      // "multi-batch AvailableNow drain" test (five files, one per trigger).
       val base = sinkPath(d, "stream_jsonl")
       val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
       Sink.reset(base)

@@ -533,9 +533,9 @@ private[graft] object TextEntries {
     "domain_cap" -> ((s, d) =>
       // RefinedWeb-style per-source diversity cap: one ranked window
       // whose mega-domain skew is defused by InferWindowGroupLimit's
-      // map-side group-limit (plan-shape spec + CapScale probe guard
-      // the claim); priority is md5(source:id) so the oracle's window
-      // replays it exactly
+      // map-side group-limit (DomainCapSpec pins the plan shape; the
+      // CapScale probe in BASELINE.md measured the claim); priority is
+      // md5(source:id) so the oracle's window replays it exactly
       Sample.domainCap(Tables.documents(s, d), "doc_id", "source", cap = 10)
         .select("doc_id", "source", "rk")),
     "domain_cap_stats" -> ((s, d) =>
@@ -3003,7 +3003,7 @@ private[graft] object TextEntries {
       // GOLDEN row: the banded (MinHash LSH) near-dup strategy has no
       // DuckDB mirror (hash-derived band buckets), but every stage is
       // deterministic (fixed xxhash64 seeds), so the whole summary row
-      // pins to literals — derived once via RunOne at sf0.01 and equal,
+      // pins to literals — derived once via `Harness rows` at sf0.01 and equal,
       // column for column, to the exact-form corpus_pipeline row above:
       // on this corpus the planted jittered copies are the only >=0.6
       // pairs and they sit at Jaccard ~0.95, where 8x4 banding recall

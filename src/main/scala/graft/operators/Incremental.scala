@@ -201,7 +201,8 @@ object Incremental {
     // from the caller's durable inputs. Broadcast wherever they join a
     // corpus-sized side: the corpus side stays map-only (a delta so
     // large it won't broadcast is a delta so large the caller should
-    // rebuild — the crossover is measured in IncrScale).
+    // rebuild — BASELINE.md's IncrScale probe section measured the
+    // crossover).
     def pin(df: DataFrame): DataFrame = df.localCheckpoint()
     val dIds = pin(delta.select(col(idCol).as("id")))
 

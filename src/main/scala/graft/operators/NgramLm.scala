@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   * exceeds driver memory; at gate scale AQE turns it into a broadcast on
   * its own stats) — with hot bigrams ("the the") handled by AQE skew
   * splitting since the model side carries one row per key (MEASURED,
-  * not trusted: the LmSkewScale probe plants a single-key head at sf10
-  * and the split fires — one skew=true SMJ node in the final adaptive
-  * plan, 1.18× wall saved; LmSkewSpec pins the plan shape). The per-doc
+  * not trusted: the LmSkewScale probe in BASELINE.md planted a single-key
+  * head at sf10 and the split fired — one skew=true SMJ node in the final
+  * adaptive plan, 1.18× wall saved; LmSkewSpec pins the plan shape). The per-doc
   * reduce is an ordinary partial-aggregating groupBy. Nothing touches
   * the driver; every stage is O(token stream) with sublinear state.
   *

@@ -145,10 +145,10 @@ object Sample {
     * so the mega-domain's window task sorts ≤ cap·P rows (P = upstream
     * partitions), never |domain|. The first cut of this operator
     * hand-rolled a two-phase salted ranking instead; the CapScale probe
-    * showed the salted form ships MORE shuffle rows than the pruned
-    * single window (cap·salts·P vs cap·P map-side survivors) — the
-    * optimizer's form wins, so this operator trusts it, and the probe
-    * (naive window with the rule EXCLUDED vs present) guards the claim. */
+    * (BASELINE.md) showed the salted form ships MORE shuffle rows than
+    * the pruned single window (cap·salts·P vs cap·P map-side survivors)
+    * — the optimizer's form wins, so this operator trusts it, and
+    * DomainCapSpec pins both group-limits in the plan. */
   def domainCap(df: DataFrame, idCol: String, domainCol: String,
                 cap: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

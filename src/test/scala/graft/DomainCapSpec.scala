@@ -11,8 +11,8 @@ class DomainCapSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   // zipfian-ish domains: one mega-domain (the skew case InferWindowGroupLimit
-  // defuses — see the operator scaladoc + CapScale probe), a mid one, and
-  // one under the cap
+  // defuses — see the operator scaladoc + BASELINE.md's CapScale probe
+  // section), a mid one, and one under the cap
   private lazy val docs = ((1 to 3000).map(i => (i.toLong, "mega")) ++
     (3001 to 3200).map(i => (i.toLong, "mid")) ++
     (3201 to 3205).map(i => (i.toLong, "tiny")))

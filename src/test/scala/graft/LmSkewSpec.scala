@@ -10,8 +10,8 @@ import graft.operators.NgramLm
   * disabling broadcast) and one bigram key dominates the stream, AQE's
   * OptimizeSkewedJoin must split the hot partition — the scoring join
   * plans as a SortMergeJoin carrying the `skew=true` marker in the FINAL
-  * adaptive plan. The companion LmSkewScale probe measures the same rule
-  * at sf10 (straggler task's shuffle-read rows with the split on vs
+  * adaptive plan. The LmSkewScale probe section of BASELINE.md measured
+  * the same rule at sf10 (wall and skew=true nodes with the split on vs
   * off); this spec pins the plan shape deterministically in CI. */
 class LmSkewSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
