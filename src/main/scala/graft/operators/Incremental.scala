@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{LakeCommit, Tables}
 
 /** Incremental corpus preparation — the loop [[Snapshot]] exists to feed.
   * A production corpus refreshes continuously (the reference's sensor
@@ -303,14 +303,14 @@ object Incremental {
       .write.mode("overwrite").partitionBy("shard").parquet(path)
 
   /** One refresh applied IN PLACE to a [[writePacked]] lake: only the
-    * AFFECTED shard directories are rewritten (dynamic partition
-    * overwrite), unaffected directories are not opened, rewritten, or
-    * even listed by the write — closing the one O(corpus) term [[repack]]
-    * keeps (materializing the untouched mass into a new table). Affected
-    * shards whose repack came back EMPTY (every doc gone) are deleted
-    * explicitly — dynamic overwrite only replaces partitions present in
-    * the written data, and a stale directory would resurrect dropped
-    * documents on the next read.
+    * AFFECTED shard directories are rewritten, unaffected directories are
+    * not opened, rewritten, or even listed by the write — closing the one
+    * O(corpus) term [[repack]] keeps (materializing the untouched mass
+    * into a new table). Affected shards whose repack came back EMPTY
+    * (every doc gone) are deleted, or a stale directory would resurrect
+    * dropped documents on the next read. One lake, no marker
+    * ([[LakeCommit.replace]]): a re-run after a crash reads the healed
+    * lake and recomputes the same shards from the caller's inputs.
     *
     * Returns the new ledger — the state to carry into the next refresh
     * (persist it beside the lake; the packed state IS the lake now). */
@@ -320,30 +320,36 @@ object Incremental {
                      keep: Column => Column,
                      maxTokens: Int, overlap: Int, budget: Long, shards: Int,
                      docShard: Column => Column,
-                     deltaDocs: Option[DataFrame] = None): DataFrame = {
+                     deltaDocs: Option[DataFrame] = None): DataFrame =
+    LakeCommit.replace(prevLedger.sparkSession, packedPath)(
+      stageRefresh(prevLedger, packedPath, curr, delta, idCol, textCol, keep,
+        maxTokens, overlap, budget, shards, docShard, deltaDocs))
+
+  /** The stage half of [[refreshInPlace]]: plan the refresh off the
+    * packed lake and stage the affected shards' repacked rows. Returns the
+    * staged shards and the new ledger. */
+  private[graft] def stageRefresh(prevLedger: DataFrame, packedPath: String,
+                                  curr: => DataFrame, delta: DataFrame,
+                                  idCol: String, textCol: String,
+                                  keep: Column => Column, maxTokens: Int,
+                                  overlap: Int, budget: Long, shards: Int,
+                                  docShard: Column => Column,
+                                  deltaDocs: Option[DataFrame])
+      : (LakeCommit.Staged, DataFrame) = {
     val spark = prevLedger.sparkSession
-    // a re-run after a crash mid-swap must read the healed lake (every
-    // shard directory present) before re-planning the refresh
-    graft.sources.Sink.healSwaps(spark, packedPath)
-    val prevPacked = Tables.parquet(spark, packedPath)
-    val parts = plan(prevLedger, prevPacked, curr, delta, idCol, textCol,
-      keep, maxTokens, overlap, budget, shards, docShard, pinAffected = true,
-      deltaDocs = deltaDocs)
+    val parts = plan(prevLedger, Tables.parquet(spark, packedPath), curr,
+      delta, idCol, textCol, keep, maxTokens, overlap, budget, shards,
+      docShard, pinAffected = true, deltaDocs = deltaDocs)
     val affectedIds = parts.affected.collect().map(_.getInt(0)) // O(|touch|)
-    // stage the repacked rows through a temp directory: the final apply
-    // targets the same path the plan reads (prevPacked) and Spark's
-    // self-overwrite guard inspects the LOGICAL plan, so the lineage
-    // must be cut — a parquet hop does that, materializes the
-    // (delta-bound) frame exactly once, and unlike localCheckpoint
-    // survives an executor loss mid-refresh. The staging is written in
-    // its final shard layout, so the apply is pure directory renames
-    // (Sink.swapStagedPartitions) — the staged bytes move once, never a
-    // second dynamic-overwrite rewrite of the same rows.
-    val staging = s"$packedPath.refresh-staging"
-    val written = graft.sources.Sink.writeStagedPartitioned(parts.repacked,
-      staging, "shard", sortCols = Seq(col("seq_id"), col("chunk_id")))
-    graft.sources.Sink.swapStagedPartitions(spark, staging, packedPath,
-      "shard", affectedIds.toSeq, written)
-    parts.newLedger
+    // stage the repacked rows beside the lake: the apply targets the same
+    // path the plan reads (prevPacked) and Spark's self-overwrite guard
+    // inspects the LOGICAL plan, so the lineage must be cut — a parquet
+    // hop does that, materializes the (delta-bound) frame exactly once,
+    // and unlike localCheckpoint survives an executor loss mid-refresh.
+    // The staging is written in its final shard layout, so the apply is
+    // pure directory renames — the staged bytes move once.
+    (LakeCommit.stage(spark, packedPath,
+      LakeCommit.partitionDirs("shard", affectedIds))(writePacked(parts.repacked, _)),
+      parts.newLedger)
   }
 }

@@ -24,12 +24,12 @@ import graft.operators.Dedup
   *    the update batch touches a handful of days; rewriting the whole table
   *    (or shuffling it) per load would be the scale bug.
   *
-  * All directory manipulation goes through the Hadoop [[FileSystem]] API
-  * resolved from the session's Hadoop conf, so the same code commits on
-  * `file:`, `hdfs://`, and `s3a://` tables (rename is atomic-per-dir on
-  * local/HDFS; on object stores it degrades to copy-commit with the same
-  * ordering guarantees — for heavy S3 traffic front this with a
-  * manifest-committing table format).
+  * Every lake mutation here ([[upsertPartitioned]], [[compactPartitions]],
+  * [[writeBatchStamped]]) commits through [[LakeCommit]]'s one protocol:
+  * stage the replacement beside the lake, swap it in by directory rename,
+  * heal an interrupted swap on entry. Directory work goes through the
+  * Hadoop [[FileSystem]] API resolved from the session's Hadoop conf, so
+  * the same code commits on `file:`, `hdfs://`, and `s3a://` tables.
   */
 object Sink {
 
@@ -38,12 +38,13 @@ object Sink {
     * by the partition column first so each day is written by one task —
     * without this every task holding any row of a day emits its own file
     * per day (tasks × days small files, the classic partitioned-write
-    * mistake at scale). */
-  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    * mistake at scale). The dynamic mode is this writer's option, never
+    * the session's: a session-wide setting would silently turn every later
+    * `mode("overwrite").partitionBy` write in the session dynamic. */
+  def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
     df.repartition(col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-  }
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** Latest-wins upsert of `updates` into the partitioned parquet table at
     * `path` — Postgres `ON CONFLICT (keys) DO UPDATE` semantics with
@@ -53,148 +54,50 @@ object Sink {
     * an event's date never moves across loads), so the merge only needs the
     * partitions present in the update batch: existing rows there are
     * unioned with the updates, deduped by key, and exactly those partitions
-    * are replaced. The merged slice is staged to a side directory (Spark
+    * are replaced. The merged slice is staged beside the table (Spark
     * correctly refuses a plan that reads the same files an overwrite is
-    * deleting) and then each staged partition directory is SWAPPED into the
-    * table — one write job per merge, no second overwrite pass.
+    * deleting) and each staged partition directory is SWAPPED into the
+    * table by [[LakeCommit]] — one write job per merge, no second
+    * overwrite pass. The first load stages the whole table and swaps it in
+    * with one rename.
     *
-    * Crash safety (SINGLE-WRITER, not snapshot isolation): the swap never
-    * destroys the only copy of a row. Per partition the order is (1) rename
-    * the live `day=X` dir to a tombstone OUTSIDE the table root, (2) rename
-    * the staged dir in, (3) delete the tombstone — so a crash at any instant
-    * leaves either the old or the new dir recoverable in full. A CONCURRENT
-    * READER, however, can observe the partition missing between (1) and (2)
-    * — reader-visible atomicity needs a manifest-committing table format,
-    * and two concurrent merges on one table are NOT safe.
-    * Entry first heals leftovers of an interrupted run: orphaned
-    * tombstones whose live partition vanished are renamed back (restoring
-    * the pre-merge rows a replay must read), and a stale staging dir is
-    * cleared so it can never be swapped into the table as old data.
+    * Crash safety (single writer): the swap never destroys the only copy
+    * of a row, and entry first heals an interrupted run — an orphaned
+    * tombstone is renamed back, so the replay merges against the
+    * pre-merge rows, and a stale staging dir is cleared so it can never
+    * be swapped in as current data. A replay of the same batch then
+    * rewrites the merged partitions to the identical state.
     */
   def upsertPartitioned(spark: SparkSession, path: String, updates: DataFrame,
                         keys: Seq[String], orderCol: String, tieBreak: String,
-                        partitionCol: String): Unit = {
-    val fs = fileSystem(spark, path)
-    val tableDir = new Path(path)
-    val staging = new Path(path.stripSuffix("/") + "__staging")
-    val tombs = new Path(path.stripSuffix("/") + "__tombstone")
-    // Heal an interrupted previous merge BEFORE reading `existing`:
-    //  - a tombstone with no live partition is the surviving pre-merge copy
-    //    → move it back so this merge sees those rows;
-    //  - a stale staging dir holds a previous batch's output → delete it,
-    //    otherwise dynamic overwrite would leave its untouched days behind
-    //    and the swap would resurrect them as current data.
-    healTombstones(fs, tableDir, tombs)
-    fs.delete(staging, true)
-    if (!fs.exists(tableDir)) {
-      writePartitioned(updates, path, partitionCol)
-      return
+                        partitionCol: String): Unit =
+    LakeCommit.replace(spark, path) {
+      val fresh = !fileSystem(spark, path).exists(new Path(path))
+      // Partition values in the batch: bounded by the table's partition
+      // count (days), so the driver-side collect is O(days), never O(rows).
+      val touched =
+        if (fresh) Array.empty[Any]
+        else updates.select(partitionCol).distinct().collect().map(_.get(0))
+      def merged = Dedup.latestWins(
+        Tables.parquet(spark, path)
+          .filter(col(partitionCol).isin(touched: _*))   // partition pruning
+          .select(updates.columns.map(col): _*)
+          .unionByName(updates), keys, orderCol, tieBreak)
+      LakeCommit.stage(spark, path, whole = fresh) { dir =>
+        if (fresh) writePartitioned(updates, dir, partitionCol)
+        else if (touched.nonEmpty) writePartitioned(merged, dir, partitionCol)
+      } -> (())
     }
-    // Partition values in the batch: bounded by the table's partition count
-    // (days), so the driver-side collect is O(days), never O(rows).
-    val touched = updates.select(partitionCol).distinct().collect().map(_.get(0))
-    if (touched.isEmpty) return
-    val existing = Tables.parquet(spark, path)
-      .filter(col(partitionCol).isin(touched: _*))   // partition pruning
-      .select(updates.columns.map(col): _*)
-    val merged = Dedup.latestWins(
-      existing.unionByName(updates), keys, orderCol, tieBreak)
-    writePartitioned(merged, staging.toString, partitionCol)
-    swapStaged(fs, tableDir, staging, tombs)
-  }
-
-  /** Restore/clear leftovers of an interrupted per-partition swap: a
-    * tombstone whose live partition vanished is the surviving pre-swap
-    * copy (crash between the two renames) — move it back; a tombstone
-    * whose live partition exists is a completed swap's orphan — delete
-    * it. Shared by [[upsertPartitioned]]'s merge healing and the staged
-    * partial-rewrite swap ([[swapStagedPartitions]]). */
-  private def healTombstones(fs: FileSystem, tableDir: Path, tombs: Path): Unit =
-    if (fs.exists(tombs)) {
-      fs.listStatus(tombs).filter(_.isDirectory).foreach { t =>
-        val live = new Path(tableDir, t.getPath.getName)
-        if (!fs.exists(live)) rename(fs, t.getPath, live)
-        else fs.delete(t.getPath, true)
-      }
-      fs.delete(tombs, true)
-    }
-
-  /** Heal an interrupted partition swap on `lakePath` (see
-    * [[healTombstones]]) — callers that READ a swap-maintained lake before
-    * re-staging a replayed wave run this first, so a crash between the
-    * tombstone rename and the staged rename can never make them read a
-    * lake with a partition missing. */
-  private[graft] def healSwaps(spark: SparkSession, lakePath: String): Unit = {
-    val fs = fileSystem(spark, lakePath)
-    healTombstones(fs, new Path(lakePath),
-      new Path(lakePath.stripSuffix("/") + "__tombstone"))
-  }
-
-  /** WHOLE-DIRECTORY tombstone swap: replace the table at `lakePath` with
-    * the staged table at `stagingPath` by two renames (live → tombstone,
-    * staging → live, tombstone deleted) — the un-partitioned sibling of
-    * [[swapStagedPartitions]], for state tables a refresh rolls forward
-    * wholesale (the incremental ledger reads its own path, so the new
-    * version must be staged; the swap replaces the read-back + full
-    * second overwrite write with metadata renames). A missing staging
-    * dir means the swap already completed — no-op. Callers that READ the
-    * lake before re-staging a replayed wave run [[healDir]] first. */
-  private[graft] def swapDir(spark: SparkSession, stagingPath: String,
-                             lakePath: String): Unit = {
-    val fs = fileSystem(spark, lakePath)
-    val (lake, staging) = (new Path(lakePath), new Path(stagingPath))
-    val tomb = new Path(lakePath.stripSuffix("/") + "__tombstone_dir")
-    healDir(spark, lakePath)
-    if (!fs.exists(staging)) return
-    if (fs.exists(lake)) rename(fs, lake, tomb)
-    rename(fs, staging, lake)
-    fs.delete(tomb, true): Unit
-  }
-
-  /** Heal an interrupted [[swapDir]]: a tombstone with the live dir
-    * missing is the surviving pre-swap copy (crash between the two
-    * renames) — restore it; with the live dir present it is a completed
-    * swap's orphan — delete it. */
-  private[graft] def healDir(spark: SparkSession, lakePath: String): Unit = {
-    val fs = fileSystem(spark, lakePath)
-    val lake = new Path(lakePath)
-    val tomb = new Path(lakePath.stripSuffix("/") + "__tombstone_dir")
-    if (fs.exists(tomb)) {
-      if (!fs.exists(lake)) rename(fs, tomb, lake)
-      else fs.delete(tomb, true): Unit
-    }
-  }
-
-  /** Atomic-per-partition swap of staged partition dirs into the table:
-    * `day=X` dirs carry their own partition value, so renaming them under
-    * the table root is all "commit" means — no second write job, no name
-    * re-derivation (values with URL-escaped encodings move correctly
-    * because the directory name IS the encoding). Tombstone-protected per
-    * partition (see [[upsertPartitioned]]'s crash-safety contract). */
-  private def swapStaged(fs: FileSystem, tableDir: Path, staging: Path,
-                         tombs: Path): Unit = {
-    val staged = fs.listStatus(staging)
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    if (staged.nonEmpty) fs.mkdirs(tombs)
-    staged.foreach { part =>
-      val name = part.getPath.getName
-      val target = new Path(tableDir, name)
-      val tomb = new Path(tombs, name)
-      if (fs.exists(target)) rename(fs, target, tomb)
-      rename(fs, part.getPath, target)
-      fs.delete(tomb, true)
-    }
-    fs.delete(tombs, true)
-    fs.delete(staging, true)
-  }
 
   /** Small-file compaction — the lake-maintenance pass every streamed or
     * micro-batched ingest eventually owes: each partition directory whose
     * data-file count exceeds `maxFilesPerPartition` is rewritten by ONE
     * task into one file (the same one-task-per-partition invariant
-    * [[writePartitioned]] establishes at write time), and swapped in with
-    * the upsert path's tombstone-protected rename, so readers never see a
-    * partially compacted partition and a crash strands no data. Untouched
+    * [[writePartitioned]] establishes at write time), and swapped in by
+    * [[LakeCommit]]'s tombstone-protected rename, so readers never see a
+    * partially compacted partition and a crash strands no data: entry heals
+    * an interrupted swap's tombstones before listing, so an orphaned day is
+    * restored, audited and kept, never deleted. Untouched
     * partitions are not rewritten — the rewrite cost scales with the
     * fragmented fraction, not the table. Returns the per-partition audit
     * frame (partition value, files_before, files_after, n_rows AFTER the
@@ -225,12 +128,9 @@ object Sink {
     val nullDir = "__HIVE_DEFAULT_PARTITION__"
     def decode(name: String): String =
       java.net.URLDecoder.decode(name.substring(name.indexOf('=') + 1), "UTF-8")
-    val before = partDirs().map(p => p.getPath.getName -> dataFiles(p.getPath)).toMap
-    val needy = before.filter(_._2 > maxFilesPerPartition).keys.toSeq
-    if (needy.nonEmpty) {
-      val staging = new Path(path.stripSuffix("/") + "__staging")
-      val tombs = new Path(path.stripSuffix("/") + "__tombstone")
-      fs.delete(staging, true)
+    val before = LakeCommit.replace(spark, path) {
+      val files = partDirs().map(p => p.getPath.getName -> dataFiles(p.getPath)).toMap
+      val needy = files.filter(_._2 > maxFilesPerPartition).keys.toSeq
       val (needyNull, needyVals) = needy.map(decode).partition(_ == nullDir)
       val sel = {
         val byValue =
@@ -238,14 +138,14 @@ object Sink {
           else None
         val byNull =
           if (needyNull.nonEmpty) Some(col(partitionCol).isNull) else None
-        (byValue ++ byNull).reduce(_ || _)
+        (byValue ++ byNull).reduceOption(_ || _)
       }
-      Tables.parquet(spark, path)
-        .filter(sel) // pruned
-        .repartition(col(partitionCol)) // one task → one file per partition
-        .write.mode("overwrite").partitionBy(partitionCol)
-        .parquet(staging.toString)
-      swapStaged(fs, tableDir, staging, tombs)
+      LakeCommit.stage(spark, path) { dir =>
+        sel.foreach(s => Tables.parquet(spark, path)
+          .filter(s) // pruned
+          .repartition(col(partitionCol)) // one task → one file per partition
+          .write.mode("overwrite").partitionBy(partitionCol).parquet(dir))
+      } -> files
     }
     val after = partDirs().map(p => p.getPath.getName -> dataFiles(p.getPath)).toMap
     import spark.implicits._
@@ -415,14 +315,14 @@ object Sink {
     * tasks×days small-file explosion) and `sortWithinPartitions` orders
     * rows inside every file. Dynamic overwrite keeps the daily-reload
     * idempotence of [[writePartitioned]]: re-materializing a day replaces
-    * exactly that day's directory. */
+    * exactly that day's directory (a writer option, as there). */
   def writePartitionedSorted(df: DataFrame, path: String, partitionCol: String,
                              sortCols: Seq[String], files: Int = 32): Unit = {
-    df.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val cols = (partitionCol +: sortCols).map(df.col)
     df.repartitionByRange(files, cols: _*)
       .sortWithinPartitions(cols: _*)
-      .write.mode("overwrite").partitionBy(partitionCol).parquet(path)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
   }
 
   /** Deterministic shard assignment for [[exportShards]]: the first 4 hex
@@ -538,79 +438,19 @@ object Sink {
           .cast("long").as("checksum"))
   }
 
-  /** Write a replacement row-set as PARTITIONED staging parquet — the
-    * stage half of the partial-rewrite primitive the incremental state
-    * lakes share. Rows are repartitioned on the partition column (one
-    * task → one file per partition, the [[writePartitioned]] invariant)
-    * and sorted leading with it (FileFormatWriter's required ordering;
-    * callers add payload sort keys for in-file row order). Returns the
-    * partition values actually written (a driver directory listing — no
-    * Spark job), which [[swapStagedPartitions]] needs to tell an EMPTIED
-    * touched partition (delete its lake dir) from an already-applied one.
-    *
-    * Staging the data in its final partition layout is what lets the
-    * apply step be pure directory renames: the old form staged a flat
-    * copy and then paid a SECOND full Spark write (read-back + shuffle +
-    * rewrite of every staged byte) for the dynamic-overwrite apply. One
-    * write instead of two is the guide-§6 commit economics — at lake
-    * scale the apply moves metadata, not the delta's bytes again. */
-  private[graft] def writeStagedPartitioned(staged: DataFrame,
-      stagingPath: String, partCol: String,
-      sortCols: Seq[Column] = Nil): Array[Int] = {
-    staged.repartition(col(partCol))
-      .sortWithinPartitions(col(partCol) +: sortCols: _*)
-      .write.mode("overwrite").partitionBy(partCol).parquet(stagingPath)
-    val fs = fileSystem(staged.sparkSession, stagingPath)
-    fs.listStatus(new Path(stagingPath))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      .map(_.getPath.getName.substring(partCol.length + 1).toInt)
-  }
-
-  /** Apply a [[writeStagedPartitioned]] staging dir to its lake: heal any
-    * interrupted prior swap, delete the `touched` lake partitions the
-    * staged data emptied (in `touched` but not `written` — deletes run
-    * FIRST so a replay that finds staging already gone can trust that
-    * every effect, deletes included, completed), then tombstone-swap each
-    * staged partition dir into the table ([[swapStaged]] — rename-commit,
-    * no second write of the data). Content-idempotent under replay: a
-    * staged dir already swapped is simply absent and skipped; `written`
-    * must come from stage time (the [[writeStagedPartitioned]] return, or
-    * a frozen commit marker) — re-deriving it from a half-applied staging
-    * dir would misread swapped partitions as emptied. A missing staging
-    * ROOT means the apply already completed (its removal is the swap's
-    * last effect) — the call is then a no-op. */
-  private[graft] def swapStagedPartitions(spark: SparkSession,
-      stagingPath: String, lakePath: String, partCol: String,
-      touched: Iterable[Int], written: Iterable[Int]): Unit = {
-    val fs = fileSystem(spark, lakePath)
-    val tableDir = new Path(lakePath)
-    val tombs = new Path(lakePath.stripSuffix("/") + "__tombstone")
-    healTombstones(fs, tableDir, tombs)
-    val staging = new Path(stagingPath)
-    if (!fs.exists(staging)) return
-    val writtenSet = written.toSet
-    touched.filterNot(writtenSet).foreach { v =>
-      fs.delete(new Path(s"$lakePath/$partCol=$v"), true): Unit
-    }
-    swapStaged(fs, tableDir, staging, tombs)
-  }
-
   /** Idempotent micro-batch append for foreachBatch sinks: the batch's
     * rows land in the batchId-named partition dir `batch=<id>` under
-    * `outDir`, written to a hidden sibling staging dir first and renamed
-    * into place. Structured Streaming's replay unit IS the batchId — a
+    * `outDir`, staged and renamed into place by [[LakeCommit]] (the
+    * staged dir is `batch=<id>` itself, written without `partitionBy`, so
+    * no sort is added). Structured Streaming's replay unit IS the batchId — a
     * micro-batch that fails after a partial write (or completes but loses
     * its offset commit) replays under the SAME id with the SAME rows (the
     * file source pins the batch's files in the checkpoint offset log), so
-    * the delete+rename lands the identical output on the identical
-    * directory: the lake holds exactly ONE copy of every batch's rows
+    * the swap lands the identical output on the identical directory: the lake holds exactly ONE copy of every batch's rows
     * however many times delivery was attempted. Exactly-once lake
     * contents on top of at-least-once execution — the mechanics of Delta/
     * Iceberg's idempotent streaming writes, reduced to the directory-
-    * rename commit this lake already uses ([[upsertPartitioned]]'s
-    * contract: atomic rename on HDFS/local, copy-commit on object
-    * stores; single writer, and a concurrent reader can see the batch
-    * dir mid-swap — reader-snapshot isolation needs a manifest format).
+    * rename commit every lake here uses.
     * Per-batch cost is constant in the lake's size (one staged write +
     * one rename), unlike a keyed MERGE whose read-merge-rewrite grows
     * with the table — the property that keeps a serving stream viable
@@ -618,15 +458,11 @@ object Sink {
     * ordinary Spark partition column: the delivery ledger comes free. */
   def writeBatchStamped(batch: DataFrame, outDir: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = fileSystem(spark, outDir)
-    val staging = new Path(outDir.stripSuffix("/") + s"__stage_batch_$batchId")
-    fs.delete(staging, true)
-    batch.write.mode("overwrite").parquet(staging.toString)
-    val tableDir = new Path(outDir)
-    fs.mkdirs(tableDir)
-    val target = new Path(tableDir, s"batch=$batchId")
-    fs.delete(target, true)
-    rename(fs, staging, target)
+    LakeCommit.replace(spark, outDir) {
+      LakeCommit.stage(spark, outDir) { dir =>
+        batch.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+      } -> (())
+    }
   }
 
   /** Drop a sink table (scratch/test lifecycles). Routed through the
@@ -671,27 +507,22 @@ object Sink {
         // Await EVERY task before returning or rethrowing: an orphaned
         // in-flight Spark write racing a caller's same-JVM retry could
         // rename stale files into a freshly re-staged dir and corrupt the
-        // staged-commit protocol. On the first failure, cancel the tasks
-        // that have not started (cancel(false) — interrupting a thread
-        // blocked on a Spark action would abandon the job, not stop it)
-        // and still join the ones already running.
+        // commit protocol. Nothing is cancelled: the pool has a thread per
+        // task, so every task is already running, and a cancelled
+        // FutureTask's get() returns at once while its thread runs on.
         var firstFailure: Throwable = null
         fs.foreach { f =>
           try f.get()
           catch {
-            case _: java.util.concurrent.CancellationException => () // never ran
             case e: java.util.concurrent.ExecutionException =>
-              if (firstFailure == null) {
-                firstFailure = e.getCause
-                fs.foreach(_.cancel(false): Unit)
-              }
+              if (firstFailure == null) firstFailure = e.getCause
           }
         }
         if (firstFailure != null) throw firstFailure
       } finally { pool.shutdown(): Unit }
     }
 
-  /** Handle for one background Spark action started by [[inBackground]]:
+  /** Handle for one background Spark action started by [[withBackground]]:
     * `await()` joins it and rethrows its failure UNWRAPPED. Await is
     * idempotent, so a data-dependent join point (a by-name frame whose
     * construction must not run until the task completes) and a belt
@@ -711,22 +542,25 @@ object Sink {
     * the first effect-ordering dependency sits (e.g. a lake read that
     * must see the task's completed swap). The same independence contract
     * as inParallel applies up to that point: nothing the caller runs
-    * before `await()` may read a path the task writes. */
-  private[graft] def inBackground(task: () => Unit): Background = {
+    * before `await()` may read a path the task writes. The task is
+    * joined before `body`'s result returns and also before its failure
+    * propagates (the task's own failure then dropped): as in inParallel,
+    * an orphaned lake write racing the caller's retry could rename stale
+    * files into a freshly re-staged dir. */
+  private[graft] def withBackground[T](task: () => Unit)(body: Background => T): T = {
     val ft = new java.util.concurrent.FutureTask[Unit](
       new java.util.concurrent.Callable[Unit] { def call(): Unit = task() })
     val t = new Thread(ft, "graft-bg")
     t.setDaemon(true)
     t.start()
-    new Background(ft)
+    val bg = new Background(ft)
+    val result =
+      try body(bg)
+      catch { case e: Throwable => scala.util.Try(bg.await()); throw e }
+    bg.await()
+    result
   }
 
   private def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
-  /** FileSystem.rename reports failure by returning false (e.g. a missing
-    * parent on HDFS) — surface that instead of silently dropping a commit
-    * step. */
-  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
-    require(fs.rename(from, to), s"rename failed: $from -> $to")
 }

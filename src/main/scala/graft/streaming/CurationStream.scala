@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, NgramLm, TextOps, UrlRules}
-import graft.sources.Tables
+import graft.sources.{Sink, Tables}
 
 /** D34b's provenance ledger at CRAWL-INGEST time (r19) — the serving form
   * of the curation chain: the deployed artifacts (corpus line index,
@@ -25,7 +25,7 @@ import graft.sources.Tables
   *
   * Quota state is a BATCH-STAMPED DELTA LAKE, not a mutable counter: each
   * batch writes its per-domain survivor counts under batch=N (the
-  * [[graft.sources.Sink.writeBatchStamped]] atomic-rename discipline) and
+  * [[graft.sources.Sink.writeBatchStamped]] rename commit) and
   * reads only deltas with batch < N as its prior — so a crashed batch
   * replays onto its own directories and recomputes the identical prior,
   * never double-counting (the E15 crash-window contract). First-arrival
@@ -128,10 +128,37 @@ object CurationStream {
       (survives && col("__seen") <= cap).as("keep"))
   }
 
-  /** The checkpointed AvailableNow ingest: each micro-batch ledgers its
-    * docs against the static artifacts + the quota delta lake, committing
-    * ledger rows AND its quota delta batch-stamped (atomic rename — a
-    * replayed batch rewrites its own dirs idempotently). */
+  /** One micro-batch: ledger its docs against the static artifacts + the
+    * quota delta lake, and commit the ledger rows AND the quota delta
+    * batch-stamped. No marker: the prior reads only batches before
+    * `batchId`, so a replay recomputes the identical result onto its own
+    * directories. Exposed to the spec so crash replays can be driven
+    * directly. */
+  private[graft] def applyBatch(batch: DataFrame, batchId: Long,
+                                outDir: String, quotaDir: String,
+                                lineIndex: DataFrame, model: DataFrame,
+                                margins: DataFrame, vocab: DataFrame,
+                                urlCfg: UrlRules.Cfg, nllKeep: Double,
+                                cap: Long): Unit = {
+    val prior = priorCounts(batch.sparkSession, quotaDir, batchId)
+    val ledger = ledgerBatch(batch, lineIndex, model, margins, vocab,
+      urlCfg, nllKeep, cap, prior).persist()
+    try {
+      // the ledger lake write and the quota-delta write are independent
+      // sinks off the same persisted batch ledger — overlap them (guide
+      // §2.6); each is its own batch-stamped commit
+      Sink.inParallel(Seq(
+        () => Sink.writeBatchStamped(
+          ledger.withColumn("batch_id", lit(batchId)), outDir, batchId),
+        () => Sink.writeBatchStamped(
+          ledger.filter(col("keep") || (col("within_cap") === "fail"))
+            .groupBy("domain").agg(count(lit(1)).as("n_pass")),
+          quotaDir, batchId)))
+    } finally ledger.unpersist()
+  }
+
+  /** The checkpointed AvailableNow ingest: one [[applyBatch]] per
+    * micro-batch. */
   def provenanceStream(spark: SparkSession, landingDir: String,
                        schema: org.apache.spark.sql.types.StructType,
                        outDir: String, quotaDir: String,
@@ -139,35 +166,21 @@ object CurationStream {
                        lineIndex: DataFrame, model: DataFrame,
                        margins: DataFrame, vocab: DataFrame,
                        urlCfg: UrlRules.Cfg = UrlRules.Cfg(),
-                       nllKeep: Double = 6.0, cap: Long = 10L,
-                       maxFilesPerTrigger: Int = 1)
+                       nllKeep: Double = 6.0, cap: Long = 10L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
+      // DELIBERATELY not a knob (the IncrementalStream rationale): the
+      // quota rank follows doc_id order within a batch, which is arrival
+      // order only while each delivery file is its own micro-batch
+      .option("maxFilesPerTrigger", 1)
       .parquet(landingDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val prior = priorCounts(s, quotaDir, batchId)
-        val ledger = ledgerBatch(batch, lineIndex, model, margins, vocab,
-          urlCfg, nllKeep, cap, prior).persist()
-        try {
-          // the ledger lake write and the quota-delta write are
-          // independent sinks off the same persisted batch ledger —
-          // overlap them (guide §2.6); each keeps its own atomic-rename
-          // batch-stamp, so the replay contract is per-write as before
-          graft.sources.Sink.inParallel(Seq(
-            () => graft.sources.Sink.writeBatchStamped(
-              ledger.withColumn("batch_id", lit(batchId)), outDir, batchId),
-            () => graft.sources.Sink.writeBatchStamped(
-              ledger.filter(col("keep") ||
-                  (col("within_cap") === "fail"))
-                .groupBy("domain").agg(count(lit(1)).as("n_pass")),
-              quotaDir, batchId)))
-        } finally ledger.unpersist()
+        applyBatch(batch, batchId, outDir, quotaDir, lineIndex, model,
+          margins, vocab, urlCfg, nllKeep, cap)
       }
       .start()
 }

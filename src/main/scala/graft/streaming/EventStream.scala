@@ -170,12 +170,14 @@ object EventStream {
     * [[graft.sources.Sink.upsertPartitioned]]. Later batches win
     * (batchId is the version); re-delivered keys within a batch resolve by
     * newest `ts`. Exactly-once to the table comes from the idempotence of
-    * the merge + the checkpointed source offsets: if the driver dies after
-    * the sink's tombstone-swap commit but before the offset commit, the
-    * batch REPLAYS under the same batchId and the merge rewrites the
-    * already-merged partitions to the identical state (latest-wins over
-    * equal `__version` resolves identically) — a duplicate rewrite, never
-    * duplicate rows. EventStreamSpec injects exactly this failure.
+    * the merge + the checkpointed source offsets: if the driver dies
+    * anywhere in the sink's [[graft.sources.LakeCommit]] swap or before
+    * the offset commit, the batch REPLAYS under the same batchId, heals
+    * the lake on entry, and the merge rewrites the merged partitions to
+    * the identical state (latest-wins over equal `__version` resolves
+    * identically) — a duplicate rewrite, never duplicate rows.
+    * EventStreamSpec injects the lost offset commit; LakeCommitSweepSpec
+    * kills the merge at every swap step.
     *
     * With `availableNow` the query drains everything currently in the
     * landing area and terminates (Trigger.AvailableNow) — the scheduled

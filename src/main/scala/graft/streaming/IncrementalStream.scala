@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Incremental
-import graft.sources.{Sink, Tables}
+import graft.sources.{LakeCommit, Sink, Tables}
 
 /** The incremental corpus refresh ACTUALLY STREAMING — the production
   * shape of the [[Incremental]] loop: a crawler emits delta waves
@@ -16,14 +16,19 @@ import graft.sources.{Sink, Tables}
   *
   *   1. the RAW corpus lake (`rawPath`, shard-partitioned by the same
   *      doc-keyed routing as the packed lake): only shard directories
-  *      the wave touches are rewritten (dynamic partition overwrite,
-  *      emptied dirs deleted) — the wave's upserts replace, its deletes
-  *      drop, everyone else's directory is never opened;
-  *   2. the PACKED lake (`packedPath`): [[Incremental.refreshInPlace]] —
+  *      the wave touches are rewritten (emptied dirs deleted) — the
+  *      wave's upserts replace, its deletes drop, everyone else's
+  *      directory is never opened;
+  *   2. the PACKED lake (`packedPath`): [[Incremental.stageRefresh]] —
   *      delta-only text work, ledger-recomputed membership, affected
   *      shards only;
-  *   3. the LEDGER (`ledgerPath`): the returned next-refresh state,
-  *      rolled forward through a staging hop (it reads its own path).
+  *   3. the LEDGER (`ledgerPath`): the next-refresh state, replaced whole
+  *      (it reads its own path, so the new version is staged first).
+  *
+  * Packed and ledger commit together under one [[LakeCommit.commit]]
+  * marker keyed by the batch id, so a replay either recomputes from the
+  * untouched pre-wave pair or finishes the swaps from the marker; the raw
+  * advance is a marker-less pre-step, idempotent under recompute.
   *
   * The file-source checkpoint carries the cursor, so a re-run drains
   * only unseen waves (exactly-once per wave); `Trigger.AvailableNow`
@@ -66,33 +71,63 @@ object IncrementalStream {
 
   /** Advance the raw corpus lake by one wave: rewrite ONLY the shard
     * directories the wave touches (upserts replace by id, deletes drop),
-    * delete the ones the wave emptied. Mirrors
-    * [[Incremental.refreshInPlace]]'s write discipline. */
+    * delete the ones the wave emptied — one partitioned staging write,
+    * applied by directory renames ([[LakeCommit.replace]]; its heal makes
+    * a replay read every partition). */
   private[streaming] def advanceRaw(spark: SparkSession, rawPath: String,
                          wave: DataFrame, idCol: String, textCol: String,
-                         docShard: Column => Column): Unit = {
-    // a replayed wave whose previous attempt crashed mid-swap must read
-    // the healed lake (every partition present) before re-staging
-    Sink.healSwaps(spark, rawPath)
-    val prev = Tables.parquet(spark, rawPath)
-    val ids = wave.select(col(idCol)).distinct()
-    val touched = wave
-      .select(docShard(col(idCol)).cast("int").as("__shard")).distinct()
-      .collect().map(_.getInt(0))
-    val newRows = prev
-      .filter(col("__shard").isin(touched.map(Integer.valueOf): _*))
-      .join(broadcast(ids), Seq(idCol), "left_anti")
-      .unionByName(wave.filter(col("op") =!= "delete")
-        .select(col(idCol), col(textCol),
-          docShard(col(idCol)).cast("int").as("__shard")))
-    val staging = s"$rawPath.wave-staging"
-    // shared partial-rewrite primitive: partitioned staging write + per-dir
-    // rename swap + emptied-shard deletes (one Spark write total — the
-    // apply is pure directory renames)
-    val written = Sink.writeStagedPartitioned(newRows, staging, "__shard")
-    Sink.swapStagedPartitions(spark, staging, rawPath, "__shard",
-      touched.toSeq, written)
-  }
+                         docShard: Column => Column): Unit =
+    LakeCommit.replace(spark, rawPath) {
+      val ids = wave.select(col(idCol)).distinct()
+      val touched = wave
+        .select(docShard(col(idCol)).cast("int").as("__shard")).distinct()
+        .collect().map(_.getInt(0))
+      val newRows = Tables.parquet(spark, rawPath)
+        .filter(col("__shard").isin(touched.map(Integer.valueOf): _*))
+        .join(broadcast(ids), Seq(idCol), "left_anti")
+        .unionByName(wave.filter(col("op") =!= "delete")
+          .select(col(idCol), col(textCol),
+            docShard(col(idCol)).cast("int").as("__shard")))
+      LakeCommit.stage(spark, rawPath, LakeCommit.partitionDirs("__shard", touched))(
+        Sink.writePartitioned(newRows, _, "__shard")) -> (())
+    }
+
+  /** One wave through the commit protocol — the foreachBatch body,
+    * exposed to the spec so crash replays can be driven directly. */
+  private[graft] def applyWave(spark: SparkSession, wave: DataFrame,
+                               batchId: Long, rawPath: String,
+                               packedPath: String, ledgerPath: String,
+                               idCol: String, textCol: String,
+                               keep: Column => Column, maxTokens: Int,
+                               overlap: Int, budget: Long, shards: Int,
+                               docShard: Column => Column): Unit =
+    LakeCommit.commit(spark, Seq(packedPath, ledgerPath), batchId) {
+      // Overlap the raw-lake advance with the refresh's ledger-side pin
+      // chain (guide §2.6): the chain reads only the wave and the
+      // ledger/packed lakes — its delta text comes from the wave itself
+      // (deltaDocs), and the one read that needs post-wave corpus text
+      // (the touched-survivor rechunk) goes through the by-name curr
+      // thunk, which JOINS the advance first. Nothing reads rawPath
+      // mid-swap, and the marker lands after the advance completed.
+      Sink.withBackground(() =>
+        advanceRaw(spark, rawPath, wave, idCol, textCol, docShard)) { rawAdvance =>
+        val (packed, newLedger) = Incremental.stageRefresh(
+          Tables.parquet(spark, ledgerPath), packedPath,
+          curr = {
+            rawAdvance.await()
+            Tables.parquet(spark, rawPath).select(col(idCol), col(textCol))
+          },
+          wave.select(col(idCol)),
+          idCol, textCol, keep, maxTokens, overlap, budget, shards,
+          docShard,
+          deltaDocs = Some(wave.filter(col("op") =!= "delete")
+            .select(col(idCol), col(textCol))))
+        // the ledger reads its own path: stage the new version whole, so
+        // the swap rolls it forward by rename, not a second full write
+        Seq(packed, LakeCommit.stage(spark, ledgerPath, whole = true)(
+          newLedger.write.mode("overwrite").parquet(_)))
+      }
+    }
 
   /** Drain the landing directory: one micro-batch per delivery file, each
     * applying one wave to (raw, packed, ledger). `schema` must carry
@@ -117,48 +152,13 @@ object IncrementalStream {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the wave is read several times (raw advance, delta ids) and
         // must not re-pull from the stream source mid-handler
         val wave = batch.localCheckpoint()
         if (!wave.isEmpty) {
-          // Overlap the raw-lake advance with the refresh's ledger-side
-          // pin chain (guide §2.6): the chain reads only the wave and
-          // the ledger/packed lakes — its delta text comes from the wave
-          // itself (deltaDocs), and the one read that needs post-wave
-          // corpus text (the touched-survivor rechunk) goes through the
-          // by-name curr thunk, which JOINS the advance first. Nothing
-          // reads rawPath mid-swap, and the external mutation order
-          // (raw → packed → ledger) is unchanged — the crash-replay
-          // convergence argument is the serial form's.
-          val rawAdvance = Sink.inBackground(() =>
-            advanceRaw(spark, rawPath, wave, idCol, textCol, docShard))
-          // a replay of a wave that crashed mid-ledger-swap must read the
-          // healed (pre-wave) ledger — the recompute then converges
-          Sink.healDir(spark, ledgerPath)
-          val prevLedger = Tables.parquet(spark, ledgerPath)
-          val newLedger = Incremental.refreshInPlace(
-            prevLedger, packedPath,
-            curr = {
-              rawAdvance.await()
-              Tables.parquet(spark, rawPath).select(col(idCol), col(textCol))
-            },
-            wave.select(col(idCol)),
-            idCol, textCol, keep, maxTokens, overlap, budget, shards,
-            docShard,
-            deltaDocs = Some(wave.filter(col("op") =!= "delete")
-              .select(col(idCol), col(textCol))))
-          // belt: refreshInPlace's rechunk already joined the advance via
-          // the curr thunk; await() is idempotent and keeps the ledger
-          // rollforward strictly after the raw advance even if a future
-          // edit makes the rechunk path conditional.
-          rawAdvance.await()
-          // the ledger reads its own path — stage the new version, then
-          // roll forward by directory rename (Sink.swapDir), not a second
-          // full write of the read-back
-          val lst = s"$ledgerPath.staging"
-          newLedger.write.mode("overwrite").parquet(lst)
-          Sink.swapDir(spark, lst, ledgerPath)
+          applyWave(spark, wave, batchId, rawPath, packedPath, ledgerPath,
+            idCol, textCol, keep, maxTokens, overlap, budget, shards, docShard)
         }
       }
       .start()

@@ -171,30 +171,42 @@ class IncrementalSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a stale staging dir from a crashed refresh cannot corrupt the next one") {
-    // crash model: a previous refreshInPlace died after writing
-    // $path.refresh-staging but before (or during) the final overwrite —
-    // the lake itself is intact (the dynamic overwrite is the LAST step),
-    // and the orphaned staging dir must be ignored: the next refresh
-    // overwrites it wholesale, applies cleanly, and removes it.
+    // crash model: a previous refreshInPlace died after writing its
+    // staging dir but before the swap — the lake itself is intact, and the
+    // orphaned staging must never reach it: the next refresh clears it,
+    // applies cleanly, and removes it. The planted junk holds flat files
+    // AND a stale shard dir (shard=63, outside the 16 live shards). A
+    // stale PARTITION dir is what a session left in dynamic overwrite mode
+    // would keep through a `mode("overwrite")` staging write, so the
+    // session runs dynamic here.
     val path = s"${sys.props("java.io.tmpdir")}/graft_incr_stale_staging"
+    val staging = graft.sources.LakeCommit.staging(path)
     graft.sources.Sink.reset(path)
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(mode)
     try {
       Incremental.writePacked(pack(prevDocs), path)
       // plant junk where the staging hop writes — wrong schema, wrong data
       Seq((999L, "junk")).toDF("a", "b")
-        .write.mode("overwrite").parquet(s"$path.refresh-staging")
+        .write.mode("overwrite").parquet(staging)
+      pack(prevDocs).limit(3).withColumn("shard", lit(63))
+        .write.mode("append").partitionBy("shard").parquet(staging)
+      spark.conf.set(mode, "dynamic")
       val led = Incremental.ledger(prevDocs, "doc_id", "text", keep)
       Incremental.refreshInPlace(led, path, currDocs,
         Snapshot.diff(prevDocs, currDocs, "doc_id", "text"),
         "doc_id", "text", keep,
         maxTokens = 8, overlap = 2, budget = 24L, shards = 16, docShard): Unit
       assert(rows(spark.read.parquet(path)) === rows(pack(currDocs)))
-      assert(!new java.io.File(s"$path.refresh-staging").exists(),
+      assert(!new java.io.File(s"$path/shard=63").exists(),
+        "a stale staged shard must never be swapped into the lake")
+      assert(!new java.io.File(staging).exists(),
         "staging dir must be removed after a successful refresh")
     } finally {
+      modeBefore.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
       Dedup.unpersistIntermediates()
       graft.sources.Sink.reset(path)
-      graft.sources.Sink.reset(s"$path.refresh-staging")
+      graft.sources.Sink.reset(staging)
     }
   }
 

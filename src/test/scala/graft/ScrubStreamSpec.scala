@@ -11,7 +11,9 @@ import graft.streaming.ScrubStream
 /** The streamed four-lake scrub refresh: checkpointed waves must land the
   * batch spanScrub's output, rewrite only the partitions they touch in
   * EVERY state lake, and re-drain idempotently — with the df-crossing
-  * ripples landing in different micro-batches than their holders. */
+  * ripples landing in different micro-batches than their holders. Crash
+  * replays, the three windows once hand-picked here included, are swept
+  * step by step in [[LakeCommitSweepSpec]]. */
 class ScrubStreamSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
@@ -110,74 +112,6 @@ class ScrubStreamSpec extends AnyFunSuite with SparkSpec {
       val scrubBefore = snapshot(scrub)
       drain()
       assert(snapshot(scrub) === scrubBefore)
-    } finally {
-      Dedup.unpersistIntermediates()
-      graft.sources.Sink.reset(base)
-    }
-  }
-
-  test("crash replay: a wave killed between commit and apply (or mid-apply) still lands batch scrub") {
-    // foreachBatch is at-least-once, and the frequency-DELTA recompute is
-    // NOT idempotent against a half-applied wave: before the staged-commit
-    // marker, a replay that recomputed with post-wave wins + pre-wave df
-    // would see zero window adjustments and never fix the frequency table.
-    // This gate reproduces the crash windows surgically via the extracted
-    // protocol steps.
-    val base = s"${sys.props("java.io.tmpdir")}/graft_scrub_crash_spec"
-    graft.sources.Sink.reset(base)
-    val (raw, wins, dfl, scrub) =
-      (s"$base/raw", s"$base/wins", s"$base/df", s"$base/scrub")
-    def applyWave(wave: DataFrame, batchId: Long): Unit =
-      ScrubStream.applyWave(spark, wave, batchId, raw, wins, dfl, scrub,
-        "doc_id", "text", W, 2, hashBuckets = 8, docShard)
-    try {
-      ScrubStream.bootstrap(prevDocs, raw, wins, dfl, scrub,
-        "doc_id", "text", W, 2, hashBuckets = 8, docShard)
-      val wave1 = Seq((31L, "delete", null.asInstanceOf[String]))
-        .toDF("doc_id", "op", "text").localCheckpoint()
-      val wave2 = Seq((100L, "upsert", body(100) + tailC),
-        (5L, "upsert", body(5) + " edited suffix"))
-        .toDF("doc_id", "op", "text").localCheckpoint()
-      applyWave(wave1, 0L)
-
-      // CRASH WINDOW 1 — after the commit marker, before any swap:
-      // stageWave is exactly the pre-crash half of the protocol
-      val staged = ScrubStream.stageWave(spark, wave2, 1L, raw, wins,
-        dfl, scrub, "doc_id", "text", W, 2, hashBuckets = 8, docShard)
-      // CRASH WINDOW 2 — deepen it: ONE of the three lakes already
-      // swapped (the wins index advanced, its staging retired; df and
-      // scrub stale) — the exact half-applied state the delta recompute
-      // cannot survive
-      graft.sources.Sink.swapStagedPartitions(spark, s"$wins.wave-staging",
-        wins, "__shard", staged.winsTouched, staged.winsWritten)
-      // the replay: same batch id arrives again
-      applyWave(wave2, 1L)
-
-      // the lakes must equal a fresh batch build over version 2 — if the
-      // replay had recomputed instead of finishing from frozen staging,
-      // the df table would still count doc 31's windows
-      val want = rows(Dedup.spanScrub(currDocs, "doc_id", "text", W, 2)
-        .select(col("doc_id").as("id"), col("scrubbed_text"),
-          col("n_tokens"), col("n_removed")))
-      assert(rows(ScrubStream.readState(spark, wins, dfl, scrub).scrubbed)
-        === want)
-      val fresh = IncrementalScrub.state(currDocs, "doc_id", "text", W, 2)
-      assert(spark.read.parquet(dfl).select("whash", "df")
-        .as[(Long, Long)].collect().toSet
-        === fresh.df.as[(Long, Long)].collect().toSet)
-      // the marker and staging dirs are retired
-      assert(!new java.io.File(s"$scrub.wave-commit").exists())
-      assert(!new java.io.File(s"$wins.wave-staging").exists())
-
-      // CRASH WINDOW 3 — replay AFTER a fully-applied wave (marker gone,
-      // checkpoint lost): the recompute path must converge on settled
-      // state rather than corrupt it
-      applyWave(wave2, 1L)
-      assert(rows(ScrubStream.readState(spark, wins, dfl, scrub).scrubbed)
-        === want)
-      assert(spark.read.parquet(dfl).select("whash", "df")
-        .as[(Long, Long)].collect().toSet
-        === fresh.df.as[(Long, Long)].collect().toSet)
     } finally {
       Dedup.unpersistIntermediates()
       graft.sources.Sink.reset(base)

@@ -46,6 +46,23 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
       (1L, "2024-01-01", 1.0), (3L, "2024-01-03", 3.0), (20L, "2024-01-02", 42.0)))
   }
 
+  test("writePartitioned: the session's partitionOverwriteMode is left as it was") {
+    // dynamic overwrite is the writer's own option: a session-wide setting
+    // would silently turn every later overwrite+partitionBy write dynamic
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(mode)
+    try {
+      spark.conf.set(mode, "static")
+      val path = tmp()
+      Sink.writePartitioned(table((1, "2024-01-01", 1.0, 0)), path, "day")
+      Sink.writePartitionedSorted(table((2, "2024-01-02", 2.0, 0)), path, "day",
+        Seq("id"), files = 1)
+      assert(spark.conf.get(mode) === "static")
+      // and both writes were still dynamic: day 1 survived day 2's write
+      assert(spark.read.parquet(path).count() === 2)
+    } finally before.fold(spark.conf.unset(mode))(spark.conf.set(mode, _))
+  }
+
   test("upsertPartitioned: latest-wins by key, untouched partitions not rewritten") {
     val path = tmp()
     Sink.upsertPartitioned(spark, path,
@@ -154,6 +171,34 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     val again = Sink.compactPartitions(spark, path, "day")
       .as[(String, Long, Int, Int)].collect()
     assert(again.forall(r => r._3 === 1 && r._4 === 1))
+  }
+
+  test("compactPartitions: an interrupted upsert's orphaned tombstone day survives and is audited") {
+    val path = tmp()
+    Sink.upsertPartitioned(spark, path,
+      table((1, "2024-01-01", 1.0, 0), (2, "2024-01-01", 2.0, 0),
+        (3, "2024-01-02", 3.0, 0)),
+      Seq("id"), "version", "id", "day")
+    // an upsert killed between its two renames: day 1's only copy sits in
+    // the tombstone dir
+    val tombs = new java.io.File(path + "__tombstone")
+    assert(tombs.mkdirs())
+    assert(new java.io.File(path + "/day=2024-01-01")
+      .renameTo(new java.io.File(tombs, "day=2024-01-01")))
+    // fragment day 2
+    (10L to 30L).map(i => (i, "2024-01-02", i * 1.0, 0))
+      .toDF("id", "day", "value", "version")
+      .repartition(3, org.apache.spark.sql.functions.col("id"))
+      .write.mode("append").partitionBy("day").parquet(path)
+    val audit = Sink.compactPartitions(spark, path, "day")
+      .as[(String, Long, Int, Int)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(audit.get("2024-01-01").map(_._1) === Some(2L),
+      s"the tombstoned day must be restored and audited: $audit")
+    assert(audit("2024-01-02")._1 === 22L && audit("2024-01-02")._3 === 1)
+    assert(spark.read.parquet(path).select("id").as[Long].collect().sorted
+      === (Seq(1L, 2L, 3L) ++ (10L to 30L)).toArray)
+    assert(!tombs.exists())
   }
 
   test("compactPartitions: a fragmented NULL partition is compacted and audited") {
