@@ -160,10 +160,9 @@ object Harness {
     val t0 = System.nanoTime()
     fn(spark, sfDir).queryExecution.toRdd.count()
     val wall = (System.nanoTime() - t0) / 1e9
-    // give the (async) listener bus a moment to drain before reading —
-    // the public API exposes no waitUntilEmpty; job-end events for a
-    // completed action land within milliseconds
-    Thread.sleep(500)
+    // the listener bus is asynchronous: wait until it has delivered every
+    // event the run posted before reading
+    org.apache.spark.GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     // late job-end events silently dropping rows would skew the very

@@ -21,22 +21,6 @@ import EntryOps._
   * unchanged from the monolithic registration. */
 private[graft] object StreamEntries {
 
-  /** Bootstrap-vs-drain attribution for the two heaviest gate queries
-    * (stream_incremental / stream_scrub — the #1/#2 bench wall since
-    * r13): wrap each phase and print wall-clock when GRAFT_STREAM_TIMING
-    * is set (the GRAFT_FUNNEL_TIMING pattern). The gate shape bootstraps
-    * full lake state in-query and then runs two checkpointed drains —
-    * this probe says which side the seconds live on, so the pin note can
-    * attribute them (gate cost vs serving cost) instead of re-litigating
-    * the absolute number every round. */
-  private def phase[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.contains("GRAFT_STREAM_TIMING"))
-      println(f"[stream-timing] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-    r
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- §E streaming (batch-equivalent plan for the gate) -------------
@@ -82,7 +66,7 @@ private[graft] object StreamEntries {
     }),
     "stream_upsert" -> ((s, d) => {
       // The full sensor loop, actually STREAMING in the gate: two delivery
-      // waves into a landing dir, each drained by an AvailableNow run of
+      // waves into a landing dir, each drained by one EventStream.drain of
       // the file-source → foreachBatch merge (the checkpoint carries the
       // cursor between runs, batchId is the version). Wave 2 re-delivers
       // every 100th event with value+1000 — latest wins in the lake table.
@@ -92,19 +76,17 @@ private[graft] object StreamEntries {
       val ev = Tables.events(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
       ev.write.parquet(landing)
-      EventStream.upsertStream(s, landing, tbl, ckpt, availableNow = true)
-        .awaitTermination()
+      EventStream.upsertStream(s, landing, tbl, ckpt)
       ev.filter(pmod(col("event_id"), lit(100L)) === 0)
         .withColumn("value", col("value") + 1000)
         .write.mode("append").parquet(landing)
-      EventStream.upsertStream(s, landing, tbl, ckpt, availableNow = true)
-        .awaitTermination()
+      EventStream.upsertStream(s, landing, tbl, ckpt)
       Tables.parquet(s, tbl).select("event_id", "value")
     }),
     "stream_jsonl_ingest" -> ((s, d) => {
       // The corpus boundary as a STREAM: the JSONL landing prefix (with
-      // the same two planted corrupt lines as jsonl_ingest) drained by an
-      // AvailableNow run of the quarantined parse (maxFilesPerTrigger=2);
+      // the same two planted corrupt lines as jsonl_ingest) drained by one
+      // EventStream.drain of the quarantined parse (maxFilesPerTrigger=2);
       // foreachBatch appends each batch's ingest profile as telemetry.
       // The gate rolls the telemetry up — counts and char-sums are
       // decomposable, so the rollup must equal the batch profile EXACTLY,
@@ -124,10 +106,8 @@ private[graft] object StreamEntries {
           """this is not json"""))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string, lang string, source string, n_chars long")
-      Jsonl.readStream(s, landing, schema, maxFilesPerTrigger = 2)
+      EventStream.drain(Jsonl.readStream(s, landing, schema, maxFilesPerTrigger = 2)
         .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // batch-stamped idempotent sink (the serving-stream contract):
           // the rollup SUMS per-batch telemetry, so a replayed batch
@@ -135,8 +115,7 @@ private[graft] object StreamEntries {
           // overwrite instead (the batch partition column is the ledger)
           Sink.writeBatchStamped(
             Jsonl.ingestProfile(batch, "lang", "n_chars"), out, batchId)
-        }
-        .start().awaitTermination()
+        }, ckpt)
       Tables.parquet(s, out).groupBy("lang", "is_corrupt")
         .agg(sum("n_docs").as("n_docs"), sum("total_chars").as("total_chars"))
     }),
@@ -144,7 +123,7 @@ private[graft] object StreamEntries {
       // The incremental refresh loop ACTUALLY STREAMING — the production
       // shape: the planted two-version delta arrives as two crawler
       // waves (doc_id, op, text) in a landing dir, each drained by an
-      // AvailableNow run (maxFilesPerTrigger=1, checkpointed cursor —
+      // EventStream.drain (one file per micro-batch, checkpointed cursor —
       // the E7 delivery discipline), and each micro-batch advances ALL
       // the carried state delta-bound: raw corpus lake (touched shard
       // dirs only), packed lake (Incremental.refreshInPlace), ledger
@@ -160,11 +139,9 @@ private[graft] object StreamEntries {
         (s"$base/landing", s"$base/raw", s"$base/packed",
           s"$base/ledger", s"$base/ckpt")
       Sink.reset(base)
-      phase("incr:bootstrap") {
-        IncrementalStream.bootstrap(prev, raw, packed, ledger,
-          "doc_id", "text", incrKeep,
-          maxTokens = 32, overlap = 8, budget = 256L, shards = 64, incrShard)
-      }
+      IncrementalStream.bootstrap(prev, raw, packed, ledger,
+        "doc_id", "text", incrKeep,
+        maxTokens = 32, overlap = 8, budget = 256L, shards = 64, incrShard)
       // pinned once: the delta frame is written twice (one filtered half
       // per wave), and each lazy write would re-execute the Snapshot.diff
       // full-outer join + curr re-join — the wave split should cost two
@@ -181,18 +158,13 @@ private[graft] object StreamEntries {
       def drain(): Unit =
         IncrementalStream.refreshStream(s, landing, schema, raw, packed,
           ledger, ckpt, "doc_id", "text", incrKeep,
-          maxTokens = 32, overlap = 8, budget = 256L, shards = 64,
-          incrShard).awaitTermination()
-      phase("incr:wave1+drain") {
-        waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 0)
-          .coalesce(1).write.mode("append").parquet(landing)
-        drain()
-      }
-      phase("incr:wave2+drain") {
-        waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 1)
-          .coalesce(1).write.mode("append").parquet(landing)
-        drain()
-      }
+          maxTokens = 32, overlap = 8, budget = 256L, shards = 64, incrShard)
+      waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 0)
+        .coalesce(1).write.mode("append").parquet(landing)
+      drain()
+      waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 1)
+        .coalesce(1).write.mode("append").parquet(landing)
+      drain()
       Tables.parquet(s, packed).select(
         col("doc_id"), col("chunk_id"), col("n_tokens"),
         col("shard").cast("int").as("shard"), col("seq_id"))
@@ -218,10 +190,8 @@ private[graft] object StreamEntries {
       Sink.reset(base)
       val shardOf: Column => Column = k =>
         conv(substring(md5(k.cast("string")), 1, 4), 16, 10).cast("long") % 64
-      phase("scrub:bootstrap") {
-        graft.streaming.ScrubStream.bootstrap(prev, raw, wins, dfl, scrub,
-          "doc_id", "text", window = 8, minDf = 2, hashBuckets = 32, shardOf)
-      }
+      graft.streaming.ScrubStream.bootstrap(prev, raw, wins, dfl, scrub,
+        "doc_id", "text", window = 8, minDf = 2, hashBuckets = 32, shardOf)
       // pinned once (the stream_incremental rationale): two filtered wave
       // writes must not re-run the Snapshot.diff pass each
       val waves = Snapshot.diff(prev, curr, "doc_id", "text")
@@ -236,17 +206,13 @@ private[graft] object StreamEntries {
       def drain(): Unit =
         graft.streaming.ScrubStream.refreshStream(s, landing, schema, raw,
           wins, dfl, scrub, ckpt, "doc_id", "text", window = 8, minDf = 2,
-          hashBuckets = 32, shardOf).awaitTermination()
-      phase("scrub:wave1+drain") {
-        waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 0)
-          .coalesce(1).write.mode("append").parquet(landing)
-        drain()
-      }
-      phase("scrub:wave2+drain") {
-        waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 1)
-          .coalesce(1).write.mode("append").parquet(landing)
-        drain()
-      }
+          hashBuckets = 32, shardOf)
+      waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 0)
+        .coalesce(1).write.mode("append").parquet(landing)
+      drain()
+      waves.filter(pmod(xxhash64(col("doc_id")), lit(2)) === 1)
+        .coalesce(1).write.mode("append").parquet(landing)
+      drain()
       Tables.parquet(s, scrub).select(col("id").as("doc_id"),
         md5(col("scrubbed_text")).as("scrub_hash"),
         col("n_tokens"), col("n_removed"))
@@ -283,13 +249,11 @@ private[graft] object StreamEntries {
       probes.filter(col("doc_id") < 3000005L)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.lmScoreStream(s, landing, schema, model, margins, vocab,
-        "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1)
-        .awaitTermination()
+        "doc_id", "text", out, ckpt)
       probes.filter(col("doc_id") >= 3000005L).unionByName(novels)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.lmScoreStream(s, landing, schema, model, margins, vocab,
-        "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1)
-        .awaitTermination()
+        "doc_id", "text", out, ckpt)
       Seq(model, margins, vocab).foreach(_.unpersist())
       // drop the batch-stamped sink's delivery-ledger partition column —
       // the gate compares score content, not delivery bookkeeping
@@ -331,11 +295,11 @@ private[graft] object StreamEntries {
       probes.filter(col("doc_id") < 6000005L)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.knScoreStream(s, landing, schema, frames, "doc_id", "text",
-        out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+        out, ckpt)
       probes.filter(col("doc_id") >= 6000005L).unionByName(novels)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.knScoreStream(s, landing, schema, frames, "doc_id", "text",
-        out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+        out, ckpt)
       held.foreach(_.unpersist())
       Tables.parquet(s, out)
         .select("doc_id", "n_trigrams", "n_hit3", "n_hit2", "logprob_sum",
@@ -389,13 +353,11 @@ private[graft] object StreamEntries {
       probes.filter(col("doc_id") < 3000005L)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.lmBucketStream(s, landing, schema, model, margins, vocab,
-        cuts, "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1)
-        .awaitTermination()
+        cuts, "doc_id", "text", out, ckpt)
       probes.filter(col("doc_id") >= 3000005L).unionByName(novels)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.lmBucketStream(s, landing, schema, model, margins, vocab,
-        cuts, "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1)
-        .awaitTermination()
+        cuts, "doc_id", "text", out, ckpt)
       Seq(model, margins, vocab).foreach(_.unpersist())
       Tables.parquet(s, out)
         .select("doc_id", "n_bigrams", "n_oov", "avg_nll", "bucket")
@@ -421,11 +383,11 @@ private[graft] object StreamEntries {
       docs.filter(col("doc_id") < 250).coalesce(1)
         .write.mode("append").parquet(landing)
       EventStream.packingStream(s, landing, schema, out, ckpt,
-        budget = 128, shards = 2).awaitTermination()
+        budget = 128, shards = 2)
       docs.filter(col("doc_id") >= 250).coalesce(1)
         .write.mode("append").parquet(landing)
       EventStream.packingStream(s, landing, schema, out, ckpt,
-        budget = 128, shards = 2).awaitTermination()
+        budget = 128, shards = 2)
       Tables.parquet(s, out)
         .select(col("doc_id"), col("n_tokens"),
           col("shard").cast("long").as("shard"), col("seq_id"))
@@ -452,11 +414,9 @@ private[graft] object StreamEntries {
       docs.filter(col("doc_id") < 250).sort("doc_id").coalesce(1)
         .write.mode("append").parquet(landing)
       EventStream.domainCapStream(s, landing, schema, out, ckpt, cap = 15L)
-        .awaitTermination()
       docs.filter(col("doc_id") >= 250).sort("doc_id").coalesce(1)
         .write.mode("append").parquet(landing)
       EventStream.domainCapStream(s, landing, schema, out, ckpt, cap = 15L)
-        .awaitTermination()
       Tables.parquet(s, out).select("doc_id", "domain", "seen_rank", "kept")
     }),
     "stream_provenance" -> ((s, d) => {
@@ -517,7 +477,7 @@ private[graft] object StreamEntries {
       def drain(): Unit =
         CurationStream.provenanceStream(s, landing, schema, out, quota,
           ckpt, index, model, margins, vocab,
-          nllKeep = 4.0, cap = 3L).awaitTermination()
+          nllKeep = 4.0, cap = 3L)
       arrivals.filter(col("doc_id") % 2 === 0).sort("doc_id")
         .coalesce(1).write.mode("append").parquet(landing)
       drain()
@@ -535,8 +495,8 @@ private[graft] object StreamEntries {
       // The LINE tier at crawl-ingest time (the serving form of D25d):
       // the corpus line index is built and persisted ONCE, then fresh
       // docs arrive as two delivery waves, each drained by an
-      // AvailableNow run (maxFilesPerTrigger=1 → real micro-batches, the
-      // checkpoint carries the cursor). Each probe doc carries one line
+      // EventStream.drain (one file per micro-batch → real micro-batches,
+      // the checkpoint carries the cursor). Each probe doc carries one line
       // the corpus already contains (its source doc's text, verbatim)
       // plus a novel line — the known line must be cut, the novel one
       // kept, per-doc, regardless of the wave/batch split (verdicts are
@@ -560,11 +520,11 @@ private[graft] object StreamEntries {
       probes.filter(col("doc_id") < 5000002L)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.lineDedupStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+        out, ckpt)
       probes.filter(col("doc_id") >= 5000002L).unionByName(pure)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.lineDedupStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+        out, ckpt)
       index.unpersist()
       Tables.parquet(s, out)
         .select(col("id").as("doc_id"), col("n_lines"), col("n_cut"),
@@ -573,9 +533,9 @@ private[graft] object StreamEntries {
     "stream_novelty" -> ((s, d) => {
       // The incremental-crawl near-dup gate ACTUALLY STREAMING: the same
       // planted probes as novelty_near_dup arrive as two parquet delivery
-      // waves, each drained by an AvailableNow run of the stream-static
-      // banded probe (maxFilesPerTrigger=1 forces real micro-batches; the
-      // checkpoint carries the cursor between runs). The corpus signature
+      // waves, each drained by an EventStream.drain of the stream-static
+      // banded probe (one file per micro-batch forces real micro-batches;
+      // the checkpoint carries the cursor between runs). The corpus signature
       // index is built and persisted ONCE before the drain — micro-batches
       // pay only their own banding + the skinny probe join. Verdicts are
       // per-doc functions of (doc, index), so the drained output must
@@ -605,11 +565,11 @@ private[graft] object StreamEntries {
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string")
       EventStream.noveltyStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt, threshold = 0.7, maxFilesPerTrigger = 1).awaitTermination()
+        out, ckpt, threshold = 0.7)
       jittered.filter(col("doc_id") >= 3000005L).unionByName(novel)
         .repartition(2).write.mode("append").parquet(landing)
       EventStream.noveltyStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt, threshold = 0.7, maxFilesPerTrigger = 1).awaitTermination()
+        out, ckpt, threshold = 0.7)
       Tables.parquet(s, out).filter(col("doc_id") >= 3000000L)
         .select("doc_id", "is_novel")
     }),
@@ -624,7 +584,7 @@ private[graft] object StreamEntries {
       // indexed images must be caught, wholly-new renders must pass as
       // novel. The re-encode family is split ACROSS the two delivery
       // waves, so a verdict depending on wave composition would diverge
-      // from the structural oracle. maxFilesPerTrigger=1 forces real
+      // from the structural oracle. One file per micro-batch forces real
       // micro-batches; the checkpoint carries the cursor between drains.
       val base = sinkPath(d, "stream_phash_novelty")
       val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
@@ -668,13 +628,11 @@ private[graft] object StreamEntries {
       exactCopies.unionByName(
           reencodes.filter(col("asset_id") < Multimodal.ReencodeBase + 3))
         .repartition(2).write.mode("append").parquet(landing)
-      EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt,
-        maxFilesPerTrigger = 1).awaitTermination()
+      EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt)
       reencodes.filter(col("asset_id") >= Multimodal.ReencodeBase + 3)
         .unionByName(resizes).unionByName(novel)
         .repartition(2).write.mode("append").parquet(landing)
-      EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt,
-        maxFilesPerTrigger = 1).awaitTermination()
+      EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt)
       Tables.parquet(s, out).select("asset_id", "method", "is_novel")
     })
   )

@@ -186,14 +186,9 @@ object FatalityModel {
       .setEstimatorParamMaps(sampleGrid(grid, sweepNIter, seed))
       .setTrainRatio(0.8).setSeed(seed)
       .setParallelism(4) // grid points train concurrently on the sample
-    val t0 = System.nanoTime()
     val best = tvs.fit(sweepSample).bestModel.asInstanceOf[GBTRegressionModel]
     val (bestDepth, bestIter) = (best.getMaxDepth, best.getMaxIter)
-    val t1 = System.nanoTime()
     val model = gbt.setMaxDepth(bestDepth).setMaxIter(bestIter).fit(train)
-    val t2 = System.nanoTime()
-    if (sys.env.contains("GRAFT_ML_TIMING"))
-      println(f"[ml-timing] sweep ${(t1 - t0) / 1e9}%.2f s  final-fit ${(t2 - t1) / 1e9}%.2f s")
     train.unpersist()
     // cached: the three evaluator passes + metrics agg + downstream
     // perf/crosstab queries all reread the predictions

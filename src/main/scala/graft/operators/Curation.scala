@@ -88,14 +88,8 @@ object Curation {
     // invalidates a local checkpoint (no lineage to recompute) — is the
     // standard trade every multi-stage production pipeline makes at
     // stage boundaries, and a census/ledger job simply reruns.
-    // GRAFT_FUNNEL_TIMING: the attribution probe lives HERE, around the
-    // eager materialization — the stage work executes inside the cut,
-    // so timing the later census counts would attribute ~nothing.
-    def cut(name: String, df: DataFrame): DataFrame = {
-      val t0 = System.nanoTime()
+    def cut(df: DataFrame): DataFrame = {
       val c = df.localCheckpoint(true)
-      if (sys.env.contains("GRAFT_FUNNEL_TIMING"))
-        println(f"[funnel-timing] $name%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
       onCut(c)
       c
     }
@@ -107,7 +101,7 @@ object Curation {
     val s0 = urlRules match {
       case None => docs.select(col(idCol), col(textCol), col(domainCol))
       case Some(cfg) =>
-        val ids0 = cut("url_rules", UrlRules.urlFilter(docs, idCol, cfg)
+        val ids0 = cut(UrlRules.urlFilter(docs, idCol, cfg)
           .filter(col("pass_url")).select(col(idCol).as("doc_id")))
         out += "url_rules" -> ids0
         docs.select(col(idCol), col(textCol), col(domainCol))
@@ -154,7 +148,7 @@ object Curation {
       },
       () => {
         // stage 2: Gopher rule bitmap, keep pass_all — skinny id frame
-        ids1 = cut("gopher_rules",
+        ids1 = cut(
           TextOps.gopherQualityRules(base, idCol, textCol)
             .filter(col("pass_all")).select(col(idCol).as("doc_id")))
         // stage 2b (opt-in, r20): blocklist-lexicon toxicity gate — the C4
@@ -165,7 +159,7 @@ object Curation {
           case None => ids1
           case Some(cfg) =>
             val sv = base.join(ids1.select(col("doc_id").as(idCol)), Seq(idCol))
-            cut("toxicity", Toxicity.blocklistScore(sv, idCol, textCol, cfg)
+            cut(Toxicity.blocklistScore(sv, idCol, textCol, cfg)
               .filter(col("pass_toxicity")).select(col(idCol).as("doc_id")))
         }
       }))
@@ -179,7 +173,7 @@ object Curation {
     // every survivor bigram is in the full model, so the backoff never
     // fires and verdicts are identical.
     val surv1 = base.join(idsT.select(col("doc_id").as(idCol)), Seq(idCol))
-    val ids2 = cut("lm_keep",
+    val ids2 = cut(
       NgramLm.scoreWithModel(surv1, serving._1, serving._2, serving._3,
           idCol, textCol, nllKeep = nllKeep)
         .filter(col("keep")).select(col("doc_id")))
@@ -187,7 +181,7 @@ object Curation {
 
     // stage 4: exact dedup (min id per content hash) among survivors —
     // one join back to the corpus for text, id+domain carried forward
-    val ids3 = cut("exact_dedup", Dedup.exactByHash(
+    val ids3 = cut(Dedup.exactByHash(
         base.join(ids2.select(col("doc_id").as(idCol)), Seq(idCol)),
         textCol, idCol)
       .select(col(idCol).as("doc_id"), col(domainCol)))
@@ -211,7 +205,7 @@ object Curation {
               sv.withColumn("__block", cfg.block(col(textCol))),
               idCol, textCol, "__block", cfg.n, cfg.threshold)
         val losers = pairs.select(col("id_b").as("doc_id")).distinct()
-        val kept = cut("near_dup", ids3.join(losers, Seq("doc_id"), "left_anti"))
+        val kept = cut(ids3.join(losers, Seq("doc_id"), "left_anti"))
         out += "near_dup" -> kept
         kept
     }
@@ -223,7 +217,7 @@ object Curation {
       case Some(cfg) =>
         val sv = base.join(ids4.select(col("doc_id").as(idCol)), Seq(idCol))
           .select(col(idCol), col(textCol))
-        val kept = cut("span_scrub",
+        val kept = cut(
           Dedup.spanScrub(sv, idCol, textCol, cfg.window, cfg.minDf)
             .filter(col("n_tokens") - col("n_removed") > 0)
             .select(col(idCol).as("doc_id"))

@@ -935,8 +935,7 @@ object Dedup {
     * pass an LSH band or a metadata bucket). */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         blockCol: String, n: Int = 3,
-                        threshold: Double = 0.0,
-                        prefixFilter: Boolean = false): DataFrame = {
+                        threshold: Double = 0.0): DataFrame = {
     // one tokenization pass, persisted: both join legs reuse it (and the
     // caller's block key — often itself a SimHash/LSH derivation — is
     // evaluated once instead of once per leg); hashed shingles keep the
@@ -945,66 +944,22 @@ object Dedup {
       col(idCol).as("id"), col(blockCol).as("block"),
       graft.functions.TextHash.shingleHashesCol(col(textCol), n).as("shh"))
       .transform(persistTracked)
-    if (threshold <= 0.0 || !prefixFilter) {
-      // Block-join form: every within-block pair with its similarity —
-      // the full pairwise-similarity report (thresholded callers get the
-      // filter fused into the same stage). |block|² by definition, so the
-      // CALLER owns keeping blocks bounded (a SimHash band at scale).
-      val a = base.select(col("block"), col("id").as("id_a"), col("shh").as("shh_a"))
-      val b = base.select(col("block"), col("id").as("id_b"), col("shh").as("shh_b"))
-      val pairs = a.join(b, Seq("block"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("inter", size(array_intersect(col("shh_a"), col("shh_b"))))
-        .withColumn("uni", size(array_union(col("shh_a"), col("shh_b"))))
-        .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-        .select("block", "id_a", "id_b", "jaccard")
-      if (threshold <= 0.0) pairs else pairs.filter(col("jaccard") >= threshold)
-    } else {
-      // PREFIX-FILTERED form (Bayardo et al., WWW'07 "Scaling Up All Pairs
-      // Similarity Search"; Chaudhuri et al.'s SSJoin family). Under any
-      // global token order, Jaccard(A,B) >= t forces A and B to share a
-      // token within their first |s| - ceil(t*|s|) + 1 sorted elements —
-      // so candidates come from an inverted-index join on exploded PREFIX
-      // tokens instead of the |block|²-pair self-join. LOSSLESS: no pair
-      // with jaccard >= t can be dropped, and every surviving candidate is
-      // verified with the exact Jaccard before output — identical rows to
-      // the block-join form at the same t (DedupSpec pins the equivalence).
-      //
-      // WHEN TO PICK WHICH (measured, target/sf1): candidate volume is
-      // Σ bucket² over (block, prefix n-gram) buckets — corpus-FREQUENCY
-      // bound, not block bound. On a natural-vocabulary corpus n-gram
-      // buckets are Zipf-thin and this is the standard exact scale path;
-      // on this repo's 45-word synthetic word-soup the trigram space is
-      // so small that hot trigrams hit 13k docs and the candidate space
-      // (3.7G) EXCEEDS the 94.5M block-pair space — the block join wins
-      // there, and the truly corpus-scale answer is the BANDED strategy
-      // (CorpusPipeline.NearDup.banded / minhashNearDups), whose bucket
-      // count grows with the corpus and whose hot buckets are guarded.
-      // |s| - ceil(t*|s|) + 1, computed as floor(|s|*(1-t)) + 1 — the 1e-9
-      // nudge guards the FP product from rounding BELOW an exact integer,
-      // which would shorten the prefix by one and silently drop qualifying
-      // pairs (the long direction only admits extra candidates, which the
-      // exact verify then rejects)
-      val prefLen = (size(col("shh")).cast("double") * (1.0 - threshold)
-        + 1.0 + 1e-9).cast("int")
-      val pref = base
-        .select(col("block"), col("id"),
-          explode(slice(sort_array(col("shh")), lit(1), prefLen)).as("tok"))
-      val cand = pref.select(col("block"), col("tok"), col("id").as("id_a"))
-        .join(pref.select(col("block"), col("tok"), col("id").as("id_b")),
-          Seq("block", "tok"))
-        .filter(col("id_a") < col("id_b"))
-        .select("block", "id_a", "id_b")
-        .dropDuplicates("id_a", "id_b")
-      cand
-        .join(base.select(col("id").as("id_a"), col("shh").as("shh_a")), Seq("id_a"))
-        .join(base.select(col("id").as("id_b"), col("shh").as("shh_b")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("shh_a"), col("shh_b"))))
-        .withColumn("uni", size(array_union(col("shh_a"), col("shh_b"))))
-        .withColumn("jaccard", col("inter").cast("double") / col("uni"))
-        .filter(col("jaccard") >= threshold)
-        .select("block", "id_a", "id_b", "jaccard")
-    }
+    // Block-join form: every within-block pair with its similarity — the
+    // full pairwise-similarity report (thresholded callers get the filter
+    // fused into the same stage). |block|² by definition, so the CALLER
+    // owns keeping blocks bounded (a SimHash band at scale); the
+    // corpus-scale answer is the BANDED strategy
+    // (CorpusPipeline.NearDup.banded / minhashNearDups), whose bucket
+    // count grows with the corpus and whose hot buckets are guarded.
+    val a = base.select(col("block"), col("id").as("id_a"), col("shh").as("shh_a"))
+    val b = base.select(col("block"), col("id").as("id_b"), col("shh").as("shh_b"))
+    val pairs = a.join(b, Seq("block"))
+      .filter(col("id_a") < col("id_b"))
+      .withColumn("inter", size(array_intersect(col("shh_a"), col("shh_b"))))
+      .withColumn("uni", size(array_union(col("shh_a"), col("shh_b"))))
+      .withColumn("jaccard", col("inter").cast("double") / col("uni"))
+      .select("block", "id_a", "id_b", "jaccard")
+    if (threshold <= 0.0) pairs else pairs.filter(col("jaccard") >= threshold)
   }
 
   /** Benchmark decontamination: per training doc, how many of its word

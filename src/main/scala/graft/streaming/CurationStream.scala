@@ -157,8 +157,8 @@ object CurationStream {
     } finally ledger.unpersist()
   }
 
-  /** The checkpointed AvailableNow ingest: one [[applyBatch]] per
-    * micro-batch. */
+  /** The checkpointed ingest: one [[EventStream.drain]] of the landing
+    * directory, one [[applyBatch]] per delivery file. */
   def provenanceStream(spark: SparkSession, landingDir: String,
                        schema: org.apache.spark.sql.types.StructType,
                        outDir: String, quotaDir: String,
@@ -166,21 +166,10 @@ object CurationStream {
                        lineIndex: DataFrame, model: DataFrame,
                        margins: DataFrame, vocab: DataFrame,
                        urlCfg: UrlRules.Cfg = UrlRules.Cfg(),
-                       nllKeep: Double = 6.0, cap: Long = 10L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      // DELIBERATELY not a knob (the IncrementalStream rationale): the
-      // quota rank follows doc_id order within a batch, which is arrival
-      // order only while each delivery file is its own micro-batch
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                       nllKeep: Double = 6.0, cap: Long = 10L): Unit =
+    EventStream.drain(EventStream.landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         applyBatch(batch, batchId, outDir, quotaDir, lineIndex, model,
           margins, vocab, urlCfg, nllKeep, cap)
-      }
-      .start()
+      }, checkpointDir)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming re-expression of the reference's sensor-driven
@@ -25,13 +25,34 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-source stream over a landing directory (the S3 prefix in the
-    * reference). maxFilesPerTrigger bounds per-batch work at scale. */
-  def fromDirectory(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 16): DataFrame =
-    spark.readStream
-      .schema(eventSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
+  /** The parquet landing read of every checkpointed stream: a file-source
+    * stream over a landing directory (the S3 prefix in the reference) with
+    * an explicit schema, reading ONE delivery file per micro-batch.
+    * DELIBERATELY not a knob: wave rows carry no ordering column, so a
+    * trigger that merged two delivery files would apply their rows
+    * unordered — an upsert file followed by a delete file of the same id
+    * would RESURRECT the doc (IncrementalStream's raw advance keeps the
+    * upsert row), two upserts would both survive as duplicate id rows, and
+    * a rank taken in doc_id order within a batch (the domain quotas, the
+    * packer's next-fit walk) equals arrival order only while each delivery
+    * file is its own micro-batch. One file per micro-batch is what makes
+    * "last file wins" and "arrival rank == doc_id rank" true. */
+  def landing(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** Run `writer` as one checkpointed `Trigger.AvailableNow` drain: start
+    * the query and return once it has processed everything landed so far
+    * and terminated — the scheduled "catch-up run" form of the reference's
+    * sensor; the checkpoint carries the cursor to the next drain. A failed
+    * query's exception is rethrown. No wait on `spark.streams.active`:
+    * Spark drops a query from the active set before it releases
+    * `awaitTermination`, so the next drain over the same checkpoint can
+    * start at once (EventStreamSpec pins both). */
+  def drain(writer: DataStreamWriter[_], checkpointDir: String): Unit =
+    writer.option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
 
   /** Tumbling (or, with `slide`, sliding/hopping) window counts + value
     * sums with a watermark. On a stream the watermark bounds state; in
@@ -179,16 +200,13 @@ object EventStream {
     * EventStreamSpec injects the lost offset commit; LakeCommitSweepSpec
     * kills the merge at every swap step.
     *
-    * With `availableNow` the query drains everything currently in the
-    * landing area and terminates (Trigger.AvailableNow) — the scheduled
-    * "catch-up run" form of the sensor, and what lets the correctness gate
-    * drive REAL micro-batches: start, awaitTermination, re-run after the
-    * next delivery wave (the checkpoint carries the cursor across runs). */
+    * Each call is one [[drain]] of everything currently in the landing
+    * area — what lets the correctness gate drive REAL micro-batches:
+    * drain, re-run after the next delivery wave (the checkpoint carries
+    * the cursor across runs). */
   def upsertStream(spark: SparkSession, landingDir: String, tablePath: String,
-                   checkpointDir: String, availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = fromDirectory(spark, landingDir).writeStream
-      .option("checkpointLocation", checkpointDir)
+                   checkpointDir: String): Unit =
+    drain(landing(spark, landingDir, eventSchema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sink.upsertPartitioned(
           batch.sparkSession, tablePath,
@@ -196,28 +214,8 @@ object EventStream {
             .withColumn("__version", lit(batchId)),
           keys = Seq("event_id"), orderCol = "__version", tieBreak = "ts",
           partitionCol = "day")
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer)
-      .start()
-  }
+      }, checkpointDir)
 
-  /** The incremental-crawl near-dup gate as a STREAM: fresh docs land as
-    * parquet files, each micro-batch is probed against a prebuilt corpus
-    * [[graft.operators.Dedup.SignatureIndex]] (stream-static: the index is
-    * computed and persisted ONCE, before the drain — never recomputed per
-    * batch), and every doc's verdict is appended to the output table.
-    *
-    * Because a verdict depends only on (doc, index) — fresh docs are
-    * judged against the corpus, not each other — the drained verdicts are
-    * independent of how the stream was split into micro-batches and equal
-    * the batch [[graft.operators.Dedup.probeNovel]] run over the same
-    * docs (batch-split independence, pinned in EventStreamSpec). That is
-    * what makes this the production shape for a crawler frontier at
-    * scale: the 100 TB corpus index is built once per index refresh,
-    * while each arriving batch pays only its own banding + one skinny
-    * hash-join probe. */
   /** LM model SERVING on a stream — the quality gate applied at crawl
     * ingest time instead of batch curation time: a bigram model trained
     * (and persisted) ONCE from the reference corpus scores every arriving
@@ -239,27 +237,18 @@ object EventStream {
     * constant the frames were trained with — the backoff rungs
     * ln(k/(c1+kV)) are computed here, not baked into the frames. */
   def lmScoreStream(spark: SparkSession, landingDir: String,
-                    schema: org.apache.spark.sql.types.StructType,
+                    schema: StructType,
                     model: DataFrame, margins: DataFrame, vocab: DataFrame,
                     idCol: String, textCol: String, outDir: String,
                     checkpointDir: String, k: Double = 1.0,
-                    nllKeep: Double = 6.0,
-                    maxFilesPerTrigger: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                    nllKeep: Double = 6.0): Unit =
+    drain(landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sink.writeBatchStamped(
           graft.operators.NgramLm.scoreWithModel(
             batch, model, margins, vocab, idCol, textCol, k, nllKeep),
           outDir, batchId)
-      }
-      .start()
+      }, checkpointDir)
 
   /** Kneser-Ney trigram scoring on a stream — the serving form of D31c,
     * the same contract as [[lmScoreStream]] one model rung up: the KN
@@ -272,25 +261,17 @@ object EventStream {
     * over the same docs whatever the wave/batch split. Micro-batches pay
     * their own trigram explode plus five skinny model joins. */
   def knScoreStream(spark: SparkSession, landingDir: String,
-                    schema: org.apache.spark.sql.types.StructType,
+                    schema: StructType,
                     frames: graft.operators.NgramLm.KnFrames,
                     idCol: String, textCol: String, outDir: String,
-                    checkpointDir: String, maxFilesPerTrigger: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                    checkpointDir: String): Unit =
+    drain(landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sink.writeBatchStamped(
           graft.operators.NgramLm.knScoreWithFrames(
             batch, frames, idCol, textCol),
           outDir, batchId)
-      }
-      .start()
+      }, checkpointDir)
 
   /** CCNet stratification at ingest time — the serving form of the D31b
     * tertile gate: the bigram model AND the head/middle/tail cutoffs are
@@ -306,19 +287,12 @@ object EventStream {
     * mid-batch failure replays onto the same batch directory, never
     * appending duplicates. */
   def lmBucketStream(spark: SparkSession, landingDir: String,
-                     schema: org.apache.spark.sql.types.StructType,
+                     schema: StructType,
                      model: DataFrame, margins: DataFrame, vocab: DataFrame,
                      cuts: DataFrame, idCol: String, textCol: String,
-                     outDir: String, checkpointDir: String, k: Double = 1.0,
-                     maxFilesPerTrigger: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                     outDir: String, checkpointDir: String,
+                     k: Double = 1.0): Unit =
+    drain(landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sink.writeBatchStamped(
           graft.operators.NgramLm.assignBuckets(
@@ -328,21 +302,8 @@ object EventStream {
             .select(col("doc_id"), col("n_bigrams"), col("n_oov"),
               col("avg_nll"), col("bucket")),
           outDir, batchId)
-      }
-      .start()
+      }, checkpointDir)
 
-  /** Line-tier dedup at crawl-ingest time — the serving form of
-    * [[graft.operators.Dedup.lineDedupAgainst]]: the corpus line index
-    * ([[graft.operators.Dedup.lineIndex]], persisted by the caller) is
-    * built ONCE per corpus snapshot, and every arriving micro-batch cuts
-    * the lines the corpus already contains, appending the per-doc ledger
-    * + cleaned text to the out lake. Verdicts are per-line functions of
-    * (line, index), so the drained lake must equal the batch form over
-    * the same docs whatever the wave/file split. Micro-batches pay one
-    * explode + a skinny join against the static index. Same EXACTLY-ONCE
-    * batch-stamped sink as [[lmScoreStream]]; the crash-injection replay
-    * spec (EventStreamSpec) pins THIS stream and the other two share the
-    * sink helper verbatim. */
   // public: the state encoder's generated code must see the constructor
   case class PackState(seq: Long, used: Long)
 
@@ -371,26 +332,22 @@ object EventStream {
     *     sorted in ONE task (`rows.toArray.sortBy`), so a task holds
     *     O(batch docs / shards) skinny (id, n, shard) rows — bound the
     *     wave size × shard count so that quotient stays in task memory
-    *     (at the default maxFilesPerTrigger=1, a wave = one landed file);
+    *     (a micro-batch is one landed file, [[landing]]);
     *   - ordering: "equals the batch packer" requires each delivery
     *     wave to arrive as a SINGLE landed file (or doc_id-ordered
-    *     files): with maxFilesPerTrigger=1 each micro-batch is one file
-    *     and the in-batch sort restores doc_id order, but a wave split
+    *     files): each micro-batch is one file ([[landing]]) and the
+    *     in-batch sort restores doc_id order, but a wave split
     *     across files that the file source lists out of doc_id order
     *     packs in file order — a DIFFERENT (still valid, still
     *     exactly-once) assignment. Callers relying on batch-equality
     *     (the gate, the specs) land one file per wave. */
   def packingStream(spark: SparkSession, landingDir: String,
                     schema: StructType, outDir: String, checkpointDir: String,
-                    budget: Long, shards: Int, maxFilesPerTrigger: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                    budget: Long, shards: Int): Unit = {
     import spark.implicits._
     val shardCol = (conv(substring(md5(col("doc_id").cast("string")), 1, 4),
       16, 10).cast("long") % shards).cast("int")
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
+    drain(landing(spark, landingDir, schema)
       .select(col("doc_id").cast("long").as("doc_id"),
         size(graft.operators.TextOps.tokens(col("text"))).cast("long")
           .as("n_tokens"),
@@ -418,10 +375,7 @@ object EventStream {
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .outputMode("append"), checkpointDir)
   }
 
   // public: the state encoder's generated code must see the constructor
@@ -451,14 +405,10 @@ object EventStream {
   def domainCapStream(spark: SparkSession, landingDir: String,
                       schema: StructType, outDir: String,
                       checkpointDir: String, cap: Long,
-                      idCol: String = "doc_id", domainCol: String = "source",
-                      maxFilesPerTrigger: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                      idCol: String = "doc_id",
+                      domainCol: String = "source"): Unit = {
     import spark.implicits._
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
+    drain(landing(spark, landingDir, schema)
       .select(col(idCol).cast("long").as("doc_id"),
         col(domainCol).cast("string").as("domain"))
       .as[(Long, String)]
@@ -480,33 +430,33 @@ object EventStream {
       .writeStream
       .format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .outputMode("append"), checkpointDir)
   }
 
+  /** Line-tier dedup at crawl-ingest time — the serving form of
+    * [[graft.operators.Dedup.lineDedupAgainst]]: the corpus line index
+    * ([[graft.operators.Dedup.lineIndex]], persisted by the caller) is
+    * built ONCE per corpus snapshot, and every arriving micro-batch cuts
+    * the lines the corpus already contains, appending the per-doc ledger
+    * + cleaned text to the out lake. Verdicts are per-line functions of
+    * (line, index), so the drained lake must equal the batch form over
+    * the same docs whatever the wave/file split. Micro-batches pay one
+    * explode + a skinny join against the static index. Same EXACTLY-ONCE
+    * batch-stamped sink as [[lmScoreStream]]; the crash-injection replay
+    * spec (EventStreamSpec) pins THIS stream and the other two share the
+    * sink helper verbatim. */
   def lineDedupStream(spark: SparkSession, landingDir: String,
-                      schema: org.apache.spark.sql.types.StructType,
-                      index: org.apache.spark.sql.DataFrame,
+                      schema: StructType, index: DataFrame,
                       idCol: String, textCol: String, outDir: String,
-                      checkpointDir: String, maxFilesPerTrigger: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                      checkpointDir: String): Unit =
+    drain(landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sources.Sink.writeBatchStamped(
           graft.operators.Dedup.lineDedupAgainst(batch, idCol, textCol, index)
             .select(col("id"), col("n_lines"), col("n_cut"),
               col("cleaned_text")),
           outDir, batchId)
-      }
-      .start()
+      }, checkpointDir)
 
   /** Streaming multimodal novelty gate (E-row stream_phash_novelty): each
     * arriving micro-batch of (asset_id, payload) image rows is judged
@@ -518,18 +468,10 @@ object EventStream {
     * verdicts depend only on (payload, index), so the drained lake equals
     * the batch judgment whatever the wave/batch split. */
   def phashNoveltyStream(spark: SparkSession, landingDir: String,
-                         schema: org.apache.spark.sql.types.StructType,
+                         schema: StructType,
                          index: graft.operators.Multimodal.PhashIndex,
-                         outDir: String, checkpointDir: String,
-                         maxFilesPerTrigger: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                         outDir: String, checkpointDir: String): Unit =
+    drain(landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // per-batch persist with an EXPLICIT release after the sink write
         // materializes the verdicts: the decoded-hash frame feeds three
@@ -541,23 +483,29 @@ object EventStream {
           graft.operators.Multimodal.probeHashedNovelty(hashed, index),
           outDir, batchId)
         finally hashed.unpersist(false): Unit
-      }
-      .start()
+      }, checkpointDir)
 
+  /** The incremental-crawl near-dup gate as a STREAM: fresh docs land as
+    * parquet files, each micro-batch is probed against a prebuilt corpus
+    * [[graft.operators.Dedup.SignatureIndex]] (stream-static: the index is
+    * computed and persisted ONCE, before the drain — never recomputed per
+    * batch), and every doc's verdict is appended to the output table.
+    *
+    * Because a verdict depends only on (doc, index) — fresh docs are
+    * judged against the corpus, not each other — the drained verdicts are
+    * independent of how the stream was split into micro-batches and equal
+    * the batch [[graft.operators.Dedup.probeNovel]] run over the same
+    * docs (batch-split independence, pinned in EventStreamSpec). That is
+    * what makes this the production shape for a crawler frontier at
+    * scale: the 100 TB corpus index is built once per index refresh,
+    * while each arriving batch pays only its own banding + one skinny
+    * hash-join probe. */
   def noveltyStream(spark: SparkSession, landingDir: String,
-                    schema: org.apache.spark.sql.types.StructType,
+                    schema: StructType,
                     index: graft.operators.Dedup.SignatureIndex,
                     idCol: String, textCol: String, outDir: String,
-                    checkpointDir: String, threshold: Double = 0.7,
-                    maxFilesPerTrigger: Int = 2)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+                    checkpointDir: String, threshold: Double = 0.7): Unit =
+    drain(landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val novel = graft.operators.Dedup.probeNovel(
           batch, index, idCol, textCol, threshold)
@@ -567,6 +515,5 @@ object EventStream {
             .select(col(idCol),
               coalesce(col("__novel"), lit(false)).as("is_novel")),
           outDir, batchId)
-      }
-      .start()
+      }, checkpointDir)
 }

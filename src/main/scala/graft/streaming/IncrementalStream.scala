@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Incremental
@@ -31,9 +30,9 @@ import graft.sources.{LakeCommit, Sink, Tables}
   * advance is a marker-less pre-step, idempotent under recompute.
   *
   * The file-source checkpoint carries the cursor, so a re-run drains
-  * only unseen waves (exactly-once per wave); `Trigger.AvailableNow`
-  * with `maxFilesPerTrigger = 1` forces each delivery file through its
-  * own micro-batch. Because every refresh provably equals the batch
+  * only unseen waves (exactly-once per wave); each run is one
+  * [[EventStream.drain]] over [[EventStream.landing]], which puts each
+  * delivery file through its own micro-batch. Because every refresh provably equals the batch
   * rebuild over its corpus version (the [[Incremental]] contract), the
   * final lake is the batch rebuild over the final version NO MATTER how
   * the delta was split into waves — which is exactly what the
@@ -137,21 +136,8 @@ object IncrementalStream {
                     ledgerPath: String, checkpointDir: String,
                     idCol: String, textCol: String,
                     keep: Column => Column, maxTokens: Int, overlap: Int,
-                    budget: Long, shards: Int, docShard: Column => Column)
-      : StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      // DELIBERATELY not a knob: wave rows carry no ordering column, so a
-      // trigger that merged two delivery files would apply their ops
-      // unordered — an upsert file followed by a delete file of the same
-      // id would RESURRECT the doc (advanceRaw keeps the upsert row), and
-      // two upserts would both survive the union as duplicate id rows.
-      // One file per micro-batch is what makes "last file wins" true.
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
+                    budget: Long, shards: Int, docShard: Column => Column): Unit =
+    EventStream.drain(EventStream.landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the wave is read several times (raw advance, delta ids) and
         // must not re-pull from the stream source mid-handler
@@ -160,6 +146,5 @@ object IncrementalStream {
           applyWave(spark, wave, batchId, rawPath, packedPath, ledgerPath,
             idCol, textCol, keep, maxTokens, overlap, budget, shards, docShard)
         }
-      }
-      .start()
+      }, checkpointDir)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.IncrementalScrub
@@ -177,30 +176,20 @@ object ScrubStream {
       }
     }
 
-  /** Drain the landing directory: one micro-batch per delivery file, each
-    * applying one wave to the four lakes through [[applyWave]]. `schema` carries (idCol, op, textCol). */
+  /** Drain the landing directory: one micro-batch per delivery file
+    * ([[EventStream.landing]]), each applying one wave to the four lakes
+    * through [[applyWave]]. `schema` carries (idCol, op, textCol). */
   def refreshStream(spark: SparkSession, landingDir: String,
                     schema: StructType, rawPath: String, winsPath: String,
                     dfPath: String, scrubPath: String, checkpointDir: String,
                     idCol: String, textCol: String, window: Int, minDf: Int,
-                    hashBuckets: Int, docShard: Column => Column)
-      : StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      // DELIBERATELY not a knob (the IncrementalStream rationale): waves
-      // carry no ordering column, so a merged micro-batch would apply an
-      // upsert and a later delete of the same id unordered
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
+                    hashBuckets: Int, docShard: Column => Column): Unit =
+    EventStream.drain(EventStream.landing(spark, landingDir, schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val wave = batch.localCheckpoint()
         if (!wave.isEmpty) {
           applyWave(spark, wave, batchId, rawPath, winsPath, dfPath,
             scrubPath, idCol, textCol, window, minDf, hashBuckets, docShard)
         }
-      }
-      .start()
+      }, checkpointDir)
 }

@@ -44,7 +44,6 @@ class CurationStreamSpec extends AnyFunSuite with SparkSpec {
       CurationStream.provenanceStream(spark, s"$base/landing", schema,
         s"$base/out", s"$base/quota", s"$base/ckpt",
         index, model, margins, vocab, nllKeep = 2.5, cap = cap)
-        .awaitTermination()
     }
     index.unpersist()
     spark.read.parquet(s"$base/out")

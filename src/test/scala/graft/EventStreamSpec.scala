@@ -343,32 +343,6 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     } finally q.stop()
   }
 
-  test("upsertStream: file-source micro-batches merge into the lake table by key") {
-    val root = java.nio.file.Files.createTempDirectory("graft-stream").toFile.getAbsolutePath
-    val (landing, table, ckpt) = (s"$root/landing", s"$root/table", s"$root/ckpt")
-    new java.io.File(landing).mkdirs()
-    // the landing area holds flat parquet objects (S3-style), so each wave
-    // is staged as a directory write and its part file moved in
-    def land(rows: Seq[Ev], name: String): Unit = {
-      val stage = s"$root/stage_$name"
-      rows.toDF().coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles.find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(landing, name))
-    }
-    // wave 1 lands before the stream starts: two events
-    land(Seq(ev(1, "2024-01-01 10:00:00", v = 1.0), ev(2, "2024-01-02 10:00:00", v = 2.0)), "w1.parquet")
-    val q = EventStream.upsertStream(spark, landing, table, ckpt)
-    try {
-      q.processAllAvailable()
-      // wave 2: event 2 re-delivered with a newer ts + new value, event 3 new
-      land(Seq(ev(2, "2024-01-02 11:00:00", v = 22.0), ev(3, "2024-01-03 10:00:00", v = 3.0)), "w2.parquet")
-      q.processAllAvailable()
-      val state = spark.read.parquet(table).select("event_id", "value")
-        .as[(Long, Double)].collect().sortBy(_._1)
-      assert(state === Array((1L, 1.0), (2L, 22.0), (3L, 3.0)))
-    } finally q.stop()
-  }
-
   test("noveltyStream: drained verdicts equal the batch probe, split-independent") {
     import graft.operators.Dedup
     val root = java.nio.file.Files.createTempDirectory("graft-novelty").toFile.getAbsolutePath
@@ -396,10 +370,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
     fresh.filter($"doc_id" <= 102L).repartition(2).write.mode("append").parquet(landing)
     EventStream.noveltyStream(spark, landing, schema, index, "doc_id", "text",
-      out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      out, ckpt)
     fresh.filter($"doc_id" > 102L).write.mode("append").parquet(landing)
     EventStream.noveltyStream(spark, landing, schema, index, "doc_id", "text",
-      out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      out, ckpt)
     val drained = spark.read.parquet(out).select("doc_id", "is_novel")
       .as[(Long, Boolean)].collect()
     assert(drained.length === 4, "each fresh doc judged exactly once across waves")
@@ -422,10 +396,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
     docs.filter($"doc_id" < 5L).coalesce(1).write.mode("append").parquet(landing)
     EventStream.packingStream(spark, landing, schema, out, ckpt,
-      budget = 12L, shards = 1).awaitTermination()
+      budget = 12L, shards = 1)
     docs.filter($"doc_id" >= 5L).coalesce(1).write.mode("append").parquet(landing)
     EventStream.packingStream(spark, landing, schema, out, ckpt,
-      budget = 12L, shards = 1).awaitTermination()
+      budget = 12L, shards = 1)
     val drained = spark.read.parquet(out)
       .select("doc_id", "n_tokens", "shard", "seq_id")
       .as[(Long, Long, Int, Long)].collect().sortBy(_._1)
@@ -446,7 +420,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
       s"wave-spanning bin expected: ${bySeq(4L)} vs ${bySeq(5L)}")
     // third drain with no new files appends nothing (checkpoint cursor)
     EventStream.packingStream(spark, landing, schema, out, ckpt,
-      budget = 12L, shards = 1).awaitTermination()
+      budget = 12L, shards = 1)
     assert(spark.read.parquet(out).count() === 12)
   }
 
@@ -476,14 +450,9 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     // doc 5 into a fresh bin and break row-equality with the batch packer
     val docs = (0L until 12L).map(i => (i, "a b c d e")).toDF("doc_id", "text")
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
-    def drain(): Unit = {
-      val q = EventStream.packingStream(spark, landing, schema, out, ckpt,
+    def drain(): Unit =
+      EventStream.packingStream(spark, landing, schema, out, ckpt,
         budget = 12L, shards = 1)
-      try q.awaitTermination() finally q.stop()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (spark.streams.active.exists(_.id == q.id) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    }
     docs.filter($"doc_id" < 5L).coalesce(1).write.mode("append").parquet(landing)
     drain()
     docs.filter($"doc_id" >= 5L).coalesce(1).write.mode("append").parquet(landing)
@@ -543,11 +512,9 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     docs.filter($"doc_id" <= 4L).sort("doc_id").coalesce(1)
       .write.mode("append").parquet(landing)
     EventStream.domainCapStream(spark, landing, schema, out, ckpt, cap = 3L)
-      .awaitTermination()
     docs.filter($"doc_id" > 4L).sort("doc_id").coalesce(1)
       .write.mode("append").parquet(landing)
     EventStream.domainCapStream(spark, landing, schema, out, ckpt, cap = 3L)
-      .awaitTermination()
     val drained = spark.read.parquet(out)
       .select("doc_id", "domain", "seen_rank", "kept")
       .as[(Long, String, Long, Boolean)].collect().sortBy(_._1)
@@ -568,7 +535,6 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     assert(byId(6L) === ((4L, false)))
     // third drain with no new files appends nothing (checkpoint cursor)
     EventStream.domainCapStream(spark, landing, schema, out, ckpt, cap = 3L)
-      .awaitTermination()
     assert(spark.read.parquet(out).count() === 9)
   }
 
@@ -592,10 +558,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
     fresh.filter($"doc_id" <= 102L).repartition(2).write.mode("append").parquet(landing)
     EventStream.lmScoreStream(spark, landing, schema, model, margins, vocab,
-      "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      "doc_id", "text", out, ckpt)
     fresh.filter($"doc_id" > 102L).write.mode("append").parquet(landing)
     EventStream.lmScoreStream(spark, landing, schema, model, margins, vocab,
-      "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      "doc_id", "text", out, ckpt)
     // project away the batch-stamped sink's delivery-ledger column
     val drained = spark.read.parquet(out)
       .select("doc_id", "n_bigrams", "n_oov", "logprob_sum", "avg_nll",
@@ -606,7 +572,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
       "streamed scores must equal the batch backoff scoring")
     // checkpointed cursor: a third drain with nothing new appends nothing
     EventStream.lmScoreStream(spark, landing, schema, model, margins, vocab,
-      "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      "doc_id", "text", out, ckpt)
     assert(spark.read.parquet(out).count() === 3L, "re-drain is idempotent")
     Seq(model, margins, vocab).foreach(_.unpersist())
   }
@@ -633,10 +599,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
     fresh.filter($"doc_id" <= 102L).repartition(2).write.mode("append").parquet(landing)
     EventStream.knScoreStream(spark, landing, schema, frames, "doc_id", "text",
-      out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      out, ckpt)
     fresh.filter($"doc_id" > 102L).write.mode("append").parquet(landing)
     EventStream.knScoreStream(spark, landing, schema, frames, "doc_id", "text",
-      out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      out, ckpt)
     val drained = spark.read.parquet(out)
       .select("doc_id", "n_trigrams", "n_hit3", "n_hit2", "logprob_sum",
         "avg_nll", "ppl", "keep")
@@ -646,7 +612,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
       "streamed KN scores must equal the batch three-rung ladder")
     // checkpointed cursor: a third drain with nothing new appends nothing
     EventStream.knScoreStream(spark, landing, schema, frames, "doc_id", "text",
-      out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      out, ckpt)
     assert(spark.read.parquet(out).count() === 3L, "re-drain is idempotent")
     held.foreach(_.unpersist())
     graft.operators.Dedup.unpersistIntermediates()
@@ -689,10 +655,10 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
     fresh.filter($"doc_id" <= 102L).repartition(2).write.mode("append").parquet(landing)
     EventStream.lmBucketStream(spark, landing, schema, model, margins, vocab,
-      cuts, "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      cuts, "doc_id", "text", out, ckpt)
     fresh.filter($"doc_id" > 102L).write.mode("append").parquet(landing)
     EventStream.lmBucketStream(spark, landing, schema, model, margins, vocab,
-      cuts, "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      cuts, "doc_id", "text", out, ckpt)
     val drained = spark.read.parquet(out)
       .select("doc_id", "n_bigrams", "n_oov", "avg_nll", "bucket")
       .orderBy("doc_id").collect()
@@ -704,7 +670,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     assert(byId(103L) === "tail", "wholly-OOV doc lands in the tail")
     // checkpointed cursor: a third drain with nothing new appends nothing
     EventStream.lmBucketStream(spark, landing, schema, model, margins, vocab,
-      cuts, "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1).awaitTermination()
+      cuts, "doc_id", "text", out, ckpt)
     assert(spark.read.parquet(out).count() === 4L, "re-drain is idempotent")
     Seq(model, margins, vocab).foreach(_.unpersist())
   }
@@ -726,14 +692,9 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     ).toDF("doc_id", "text")
     val index = Dedup.lineIndex(corpus, "doc_id", "text").persist()
     val schema = org.apache.spark.sql.types.StructType.fromDDL("doc_id long, text string")
-    def drain(): Unit = {
-      val q = EventStream.lineDedupStream(spark, landing, schema, index,
-        "doc_id", "text", out, ckpt, maxFilesPerTrigger = 1)
-      try q.awaitTermination() finally q.stop()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (spark.streams.active.exists(_.id == q.id) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    }
+    def drain(): Unit =
+      EventStream.lineDedupStream(spark, landing, schema, index,
+        "doc_id", "text", out, ckpt)
     Seq((101L, "shared banner line\nnovel line one"))
       .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
     drain()
@@ -778,15 +739,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
       val part = new java.io.File(stage).listFiles.find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(landing, name))
     }
-    def drain(): Unit = {
-      val q = EventStream.upsertStream(spark, landing, table, ckpt, availableNow = true)
-      try q.awaitTermination() finally q.stop()
-      // deregistration from the active set can lag awaitTermination; the
-      // next run's commit-log guard requires it to have completed
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (spark.streams.active.exists(_.id == q.id) && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    }
+    def drain(): Unit = EventStream.upsertStream(spark, landing, table, ckpt)
     land(Seq(ev(1, "2024-01-01 10:00:00", v = 1.0), ev(2, "2024-01-02 10:00:00", v = 2.0)), "w1.parquet")
     drain()
     land(Seq(ev(2, "2024-01-02 11:00:00", v = 22.0), ev(3, "2024-01-03 10:00:00", v = 3.0)), "w2.parquet")
@@ -809,6 +762,74 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
     val after = spark.read.parquet(table).select("event_id", "value")
       .as[(Long, Double)].collect().sortBy(_._1)
     assert(after === expected)
+  }
+
+  test("drain: the query has left the active set when drain returns; the next drain starts at once") {
+    // no stop() and no wait loop: Spark unregisters a terminated query
+    // before it releases awaitTermination, so back-to-back drains over one
+    // checkpoint never meet "another query with same id is already active"
+    import org.apache.spark.sql.DataFrame
+    val root = java.nio.file.Files.createTempDirectory("graft-drain").toFile.getAbsolutePath
+    val (landing, ckpt) = (s"$root/landing", s"$root/ckpt")
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id long")
+    val seen = new java.util.concurrent.atomic.AtomicLong(0L)
+    for (wave <- 0 until 8) {
+      spark.range(wave * 10L, wave * 10L + 10L).coalesce(1)
+        .write.mode("append").parquet(landing)
+      EventStream.drain(EventStream.landing(spark, landing, schema).writeStream
+        .queryName("drain_spec")
+        .foreachBatch { (batch: DataFrame, _: Long) => seen.addAndGet(batch.count()): Unit },
+        ckpt)
+      assert(!spark.streams.active.exists(_.name == "drain_spec"),
+        s"wave $wave: the drained query is still in spark.streams.active")
+      assert(seen.get === wave * 10L + 10L, s"wave $wave drained exactly its own file")
+    }
+  }
+
+  test("drain: a throwing foreachBatch body surfaces from drain") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val root = java.nio.file.Files.createTempDirectory("graft-drainfail").toFile.getAbsolutePath
+    val (landing, ckpt) = (s"$root/landing", s"$root/ckpt")
+    spark.range(5).coalesce(1).write.parquet(landing)
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id long")
+    val e = intercept[StreamingQueryException] {
+      EventStream.drain(EventStream.landing(spark, landing, schema).writeStream
+        .queryName("drain_fail_spec")
+        .foreachBatch { (_: DataFrame, batchId: Long) =>
+          throw new IllegalStateException(s"planted failure in batch $batchId")
+        }, ckpt)
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(t => Option(t.getMessage).exists(_.contains("planted failure in batch 0"))),
+      chain.mkString("\n"))
+    assert(!spark.streams.active.exists(_.name == "drain_fail_spec"))
+  }
+
+  test("src/main sets Trigger.AvailableNow, checkpointLocation and awaitTermination only in EventStream.drain") {
+    val root = new java.io.File("src/main")
+    assume(root.isDirectory)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
+      try f.getPath -> src.getLines().toVector finally src.close()
+    }
+    def code(l: String) = !Seq("*", "/*", "//").exists(l.trim.startsWith)
+    // each hit named by its file and the nearest enclosing `def`
+    def owners(token: String): Seq[String] = sources.flatMap { case (path, lines) =>
+      lines.indices.filter(i => lines(i).contains(token) && code(lines(i))).map { i =>
+        val owner = lines.take(i + 1).reverse.find(l => code(l) && l.contains("def "))
+          .map(_.trim.stripPrefix("private ").stripPrefix("def ").takeWhile(_ != '('))
+        s"$path:${owner.getOrElse("?")}"
+      }
+    }
+    val drain = "src/main/scala/graft/streaming/EventStream.scala:drain"
+    for (token <- Seq("Trigger.AvailableNow", "\"checkpointLocation\"", ".awaitTermination()"))
+      assert(owners(token) === Seq(drain), token)
+    assert(owners("\"maxFilesPerTrigger\"").sorted === Seq(
+      "src/main/scala/graft/sources/Jsonl.scala:readStream",
+      "src/main/scala/graft/streaming/EventStream.scala:landing"))
   }
 
   test("windowedCounts batch plan matches a hand-rolled aggregate") {

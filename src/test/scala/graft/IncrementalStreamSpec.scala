@@ -77,7 +77,6 @@ class IncrementalStreamSpec extends AnyFunSuite with SparkSpec {
         IncrementalStream.refreshStream(spark, landing, schema, raw, packed,
           ledger, ckpt, "doc_id", "text", keep,
           maxTokens = 8, overlap = 2, budget = 24L, shards = 16, docShard)
-          .awaitTermination()
       wave1.coalesce(1).write.mode("append").parquet(landing)
       drain()
       wave2.coalesce(1).write.mode("append").parquet(landing)

@@ -75,17 +75,14 @@ class JsonlSpec extends AnyFunSuite with SparkSpec {
     Jsonl.write(df.repartition(5), landing) // 5 files → 5 micro-batches below
     Files.write(Paths.get(landing, "zz-corrupt.json"),
       java.util.Arrays.asList("""broken"""))
-    Jsonl.readStream(spark, landing, schema, maxFilesPerTrigger = 1)
+    graft.streaming.EventStream.drain(Jsonl.readStream(spark, landing, schema, maxFilesPerTrigger = 1)
       .writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         Jsonl.ingestProfile(
             batch.withColumn("chars", length(col("text"))), "lang", "chars")
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(out)
-      }
-      .start().awaitTermination()
+      }, ckpt)
     val tele = spark.read.parquet(out)
     assert(tele.select("batch_id").distinct().count() >= 2,
       "drain must have split into multiple real micro-batches")

@@ -12,10 +12,10 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{LocalFs, Sink}
+import graft.streaming.EventStream
 
 class LocalFsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
@@ -48,13 +48,9 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
       Sink.upsertPartitioned(spark, s"$root/lake", batch,
         keys = Seq("id"), orderCol = "version", tieBreak = "id", partitionCol = "day")
     base.repartition(2).write.parquet(s"$root/landing")
-    spark.readStream.schema(base.schema).option("maxFilesPerTrigger", 1).parquet(s"$root/landing")
-      .writeStream
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
+    EventStream.drain(EventStream.landing(spark, s"$root/landing", base.schema).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Sink.writeBatchStamped(batch, s"$root/out", batchId) }
-      .start().awaitTermination()
+        Sink.writeBatchStamped(batch, s"$root/out", batchId) }, s"$root/ckpt")
   }
 
   private val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r

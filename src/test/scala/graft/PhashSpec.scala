@@ -203,12 +203,10 @@ class PhashSpec extends AnyFunSuite with SparkSpec {
       "asset_id long, payload binary")
     arrivals.filter($"asset_id" <= 205L).repartition(2)
       .write.mode("append").parquet(landing)
-    EventStream.phashNoveltyStream(spark, landing, schema, index, out, ckpt,
-      maxFilesPerTrigger = 1).awaitTermination()
+    EventStream.phashNoveltyStream(spark, landing, schema, index, out, ckpt)
     arrivals.filter($"asset_id" > 205L)
       .write.mode("append").parquet(landing)
-    EventStream.phashNoveltyStream(spark, landing, schema, index, out, ckpt,
-      maxFilesPerTrigger = 1).awaitTermination()
+    EventStream.phashNoveltyStream(spark, landing, schema, index, out, ckpt)
     val drained = spark.read.parquet(out)
       .select("asset_id", "method", "is_novel")
       .as[(Long, String, Boolean)].collect()

@@ -74,7 +74,6 @@ class ScrubStreamSpec extends AnyFunSuite with SparkSpec {
       def drain(): Unit =
         ScrubStream.refreshStream(spark, landing, schema, raw, wins, dfl,
           scrub, ckpt, "doc_id", "text", W, 2, hashBuckets = 8, docShard)
-          .awaitTermination()
       wave1.coalesce(1).write.mode("append").parquet(landing)
       drain()
       wave2.coalesce(1).write.mode("append").parquet(landing)
