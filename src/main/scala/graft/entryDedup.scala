@@ -688,22 +688,14 @@ private[graft] object DedupEntries {
       // earns its keep when m starves subspaces at production dims.
       // [GOLDEN @ gate corpus: sf0.01, seed=42 — re-derive on SF change;
       //  counts also depend on rotation seed + hash-ordered training caps]
-      """SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(n_hits AS BIGINT) AS n_hits, recall_ok
-         FROM (VALUES (0, 3, TRUE), (1, 5, TRUE), (2, 4, TRUE), (3, 4, TRUE),
-                      (4, 4, TRUE), (5, 4, TRUE), (6, 5, TRUE), (7, 4, TRUE))
-           t(query_id, n_hits, recall_ok)""",
+      ivfRecallGoldenSql,
     "ivf_pq_rerank" ->
       // golden hit counts for the two-stage (ADC shortlist + exact
       // re-rank) tier: strictly dominates plain ivf_pq_ann's counts
       // (33/40 planted neighbors vs 27/40 at the gate corpus)
       // [GOLDEN @ gate corpus: sf0.01, seed=42 — re-derive on SF change;
       //  counts also depend on the hash-ordered coarse+PQ training caps]
-      """SELECT CAST(query_id AS BIGINT) AS query_id,
-           CAST(n_hits AS BIGINT) AS n_hits, recall_ok
-         FROM (VALUES (0, 3, TRUE), (1, 5, TRUE), (2, 4, TRUE), (3, 4, TRUE),
-                      (4, 4, TRUE), (5, 4, TRUE), (6, 5, TRUE), (7, 4, TRUE))
-           t(query_id, n_hits, recall_ok)""",
+      ivfRecallGoldenSql,
     "ivf_pq_ann" ->
       // golden per-query hit counts of the PQ-coded tier against
       // brute-force truth over the planted corpus; recall_ok pins
@@ -872,10 +864,7 @@ private[graft] object DedupEntries {
       // repeated start is >= 8 back), covered tokens as the distinct
       // position union of all repeated windows (a different algorithm
       // than the engine's interval fold — same answer, which is the point)
-      """WITH t AS (
-           SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\s+') AS toks
-           FROM documents),
+      raw"""WITH $dedupToksCte,
          w AS (
            SELECT doc_id, len(toks) AS n,
              CAST(unnest(generate_series(1, greatest(len(toks) - 7, 1), 1))
@@ -922,10 +911,7 @@ private[graft] object DedupEntries {
       // grouped by the passage STRING (the semantic spec the 64-bit hash
       // grouping must agree with), same >= 2 threshold, same char-mass
       // ratio, clean text re-joined with single spaces in window order
-      """WITH t AS (
-           SELECT doc_id,
-             string_split_regex(trim(lower(text)), '\s+') AS toks
-           FROM documents),
+      raw"""WITH $dedupToksCte,
          w AS (
            SELECT doc_id, toks,
              CAST(unnest(generate_series(1, greatest(len(toks), 1), 8))
@@ -1022,43 +1008,19 @@ private[graft] object DedupEntries {
       // planted-probe verdicts: every jittered cross-batch duplicate
       // (ids 3000000-3000009) caught as non-novel, both genuinely novel
       // plants (4000000-4000001) passed
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id, is_novel FROM (VALUES
-           (3000000, FALSE), (3000001, FALSE), (3000002, FALSE),
-           (3000003, FALSE), (3000004, FALSE), (3000005, FALSE),
-           (3000006, FALSE), (3000007, FALSE), (3000008, FALSE),
-           (3000009, FALSE), (4000000, TRUE), (4000001, TRUE))
-           t(doc_id, is_novel)""",
+      noveltyGoldenSql,
     "novelty_bloom" ->
       // identical to novelty_check's oracle BY DESIGN: the Bloom tier's
       // contract is verdict equality with the exact gate (no false
       // negatives; positives exact-verified), so the second engine replays
       // the exact semantics and the bloom path must land on them
-      """WITH dedup AS (
-           SELECT doc_id, lang, source, md5(text) AS h,
-             row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-           FROM documents WHERE doc_id >= 250),
-         corpus AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id < 250)
-         SELECT doc_id, lang, source FROM dedup d
-         WHERE rn = 1 AND NOT EXISTS (SELECT 1 FROM corpus c WHERE c.h = d.h)""",
+      noveltyExactSql,
     "novelty_check" ->
       // NOT EXISTS (not NOT IN): a NULL content hash must stay novel in
       // both engines — NOT IN drops it, the anti-join keeps it
-      """WITH dedup AS (
-           SELECT doc_id, lang, source, md5(text) AS h,
-             row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
-           FROM documents WHERE doc_id >= 250),
-         corpus AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id < 250)
-         SELECT doc_id, lang, source FROM dedup d
-         WHERE rn = 1 AND NOT EXISTS (SELECT 1 FROM corpus c WHERE c.h = d.h)""",
+      noveltyExactSql,
     "corpus_snapshot_diff" ->
-      """WITH prev AS (
-           SELECT doc_id, md5(text) AS prev_hash
-           FROM documents WHERE doc_id < 400),
-         curr AS (
-           SELECT doc_id,
-             md5(CASE WHEN doc_id % 50 = 0 THEN text || ' v2' ELSE text END)
-               AS curr_hash
-           FROM documents WHERE doc_id >= 100)
+      raw"""WITH $snapshotCtes
          SELECT coalesce(p.doc_id, c.doc_id) AS doc_id,
            CASE WHEN prev_hash IS NULL THEN 'added'
                 WHEN curr_hash IS NULL THEN 'removed'
@@ -1068,14 +1030,7 @@ private[graft] object DedupEntries {
          WHERE prev_hash IS NULL OR curr_hash IS NULL
             OR prev_hash <> curr_hash""",
     "corpus_snapshot_summary" ->
-      """WITH prev AS (
-           SELECT doc_id, md5(text) AS prev_hash
-           FROM documents WHERE doc_id < 400),
-         curr AS (
-           SELECT doc_id,
-             md5(CASE WHEN doc_id % 50 = 0 THEN text || ' v2' ELSE text END)
-               AS curr_hash
-           FROM documents WHERE doc_id >= 100)
+      raw"""WITH $snapshotCtes
          SELECT
            CAST(sum(CASE WHEN prev_hash IS NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS n_added,
@@ -1162,11 +1117,7 @@ private[graft] object DedupEntries {
       // exact replay of the bridge: lowerToks tokenize (explicit \s
       // class), md5-prefix bucket mod 64, smoothed IDF ln rounded once
       // at 1e3, integer tf·idf sums per (doc, dim)
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(list_filter(string_split_regex(trim(lower(text)),
-               '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS tok
-           FROM documents),
+      raw"""WITH $embedToksCte,
          tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
          dfq AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
          n AS (SELECT count(*) AS n_docs FROM documents)
@@ -1182,11 +1133,7 @@ private[graft] object DedupEntries {
       // restored via the full query×corpus frame so a sparse miss can't
       // drop a candidate, cosine divided from exact integers in both
       // engines
-      """WITH toks AS (
-           SELECT doc_id,
-             unnest(list_filter(string_split_regex(trim(lower(text)),
-               '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS tok
-           FROM documents),
+      raw"""WITH $embedToksCte,
          tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
          dfq AS (SELECT tok, count(DISTINCT doc_id) AS df FROM toks GROUP BY 1),
          n AS (SELECT count(*) AS n_docs FROM documents),

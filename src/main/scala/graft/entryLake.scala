@@ -393,8 +393,8 @@ private[graft] object LakeEntries {
       // same key arithmetic as Sink.shardAssign/exportShards: first 4 md5
       // hex digits route the shard, first 8 (mod 1e9+7) feed the
       // order-insensitive checksum; token totals recount the source text
-      """SELECT
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
+      raw"""SELECT
+           CAST($docMd5Prefix
              % 8 AS BIGINT) AS shard,
            CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(len(list_filter(string_split_regex(text, '\s+'),

@@ -21,6 +21,42 @@ import EntryOps._
   * unchanged from the monolithic registration. */
 private[graft] object StreamEntries {
 
+  /** The two-wave stream-gate fixture: resets the gate's scratch dir
+    * ([[sinkPath]] of `tag`), appends `wave1` to its landing dir and runs
+    * `drain(landing, out, ckpt)`, then appends `wave2` and drains again
+    * from the same checkpoint. Returns the `out` dir. Callers shape their
+    * own waves (partitioning, order) and own the drain. */
+  private def twoWaveGate(d: String, tag: String, wave1: DataFrame,
+      wave2: DataFrame)(drain: (String, String, String) => Unit): String = {
+    val base = sinkPath(d, tag)
+    val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
+    Sink.reset(base)
+    wave1.write.mode("append").parquet(landing)
+    drain(landing, out, ckpt)
+    wave2.write.mode("append").parquet(landing)
+    drain(landing, out, ckpt)
+    out
+  }
+
+  /** The serving gates' arrivals: the first ten corpus docs re-keyed to
+    * `probeBase + doc_id` with an OOV tail, and two wholly-novel docs at
+    * `novelBase` and `novelBase + 1`. Returns (probes, novels). */
+  private def servingProbes(docs: DataFrame, probeBase: Long,
+      novelBase: Long): (DataFrame, DataFrame) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val probes = docs.filter(col("doc_id") < 10)
+      .select((col("doc_id") + probeBase).as("doc_id"),
+        concat(col("text"), lit(" qq zz qq zz")).as("text"))
+    val novels = Seq(
+      (novelBase, "wholly novel planted stream document zyx about" +
+        " nothing previously modeled qqj at all"),
+      (novelBase + 1, "another genuinely novel planted document kvw" +
+        " carrying entirely fresh content pqz never scored before"))
+      .toDF("doc_id", "text")
+    (probes, novels)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- §E streaming (batch-equivalent plan for the gate) -------------
@@ -227,33 +263,20 @@ private[graft] object StreamEntries {
       // functions of (doc, model), so the drained lake must equal the
       // batch scoreAgainst over the same docs no matter the wave/batch
       // split — the oracle replays exactly that in SQL.
-      import s.implicits._
-      val base = sinkPath(d, "stream_lm_score")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d)
       val (model, margins, vocab) =
         NgramLm.servingFrames(docs, "doc_id", "text")
       Seq(model, margins, vocab).foreach(_.persist())
-      val probes = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 3000000L).as("doc_id"),
-          concat(col("text"), lit(" qq zz qq zz")).as("text"))
-      val novels = Seq(
-        (4000000L, "wholly novel planted stream document zyx about" +
-          " nothing previously modeled qqj at all"),
-        (4000001L, "another genuinely novel planted document kvw" +
-          " carrying entirely fresh content pqz never scored before"))
-        .toDF("doc_id", "text")
+      val (probes, novels) = servingProbes(docs, 3000000L, 4000000L)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string")
-      probes.filter(col("doc_id") < 3000005L)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.lmScoreStream(s, landing, schema, model, margins, vocab,
-        "doc_id", "text", out, ckpt)
-      probes.filter(col("doc_id") >= 3000005L).unionByName(novels)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.lmScoreStream(s, landing, schema, model, margins, vocab,
-        "doc_id", "text", out, ckpt)
+      val out = twoWaveGate(d, "stream_lm_score",
+        probes.filter(col("doc_id") < 3000005L).repartition(2),
+        probes.filter(col("doc_id") >= 3000005L).unionByName(novels)
+          .repartition(2)) { (landing, out, ckpt) =>
+        EventStream.lmScoreStream(s, landing, schema, model, margins, vocab,
+          "doc_id", "text", out, ckpt)
+      }
       Seq(model, margins, vocab).foreach(_.unpersist())
       // drop the batch-stamped sink's delivery-ledger partition column —
       // the gate compares score content, not delivery bookkeeping
@@ -272,34 +295,21 @@ private[graft] object StreamEntries {
       // drained lake must equal the batch ladder over the same probes
       // whatever the wave/batch split — the oracle replays the model,
       // the continuation counts, the probes, and the scoring in SQL.
-      import s.implicits._
-      val base = sinkPath(d, "stream_kn_score")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d)
       val frames = NgramLm.knFrames(docs, "doc_id", "text")
       val held = Seq(frames.tri, frames.ctx2, frames.contb, frames.mid,
         frames.contu, frames.scalars)
       held.foreach(_.persist())
-      val probes = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 6000000L).as("doc_id"),
-          concat(col("text"), lit(" qq zz qq zz")).as("text"))
-      val novels = Seq(
-        (6100000L, "wholly novel planted stream document zyx about" +
-          " nothing previously modeled qqj at all"),
-        (6100001L, "another genuinely novel planted document kvw" +
-          " carrying entirely fresh content pqz never scored before"))
-        .toDF("doc_id", "text")
+      val (probes, novels) = servingProbes(docs, 6000000L, 6100000L)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string")
-      probes.filter(col("doc_id") < 6000005L)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.knScoreStream(s, landing, schema, frames, "doc_id", "text",
-        out, ckpt)
-      probes.filter(col("doc_id") >= 6000005L).unionByName(novels)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.knScoreStream(s, landing, schema, frames, "doc_id", "text",
-        out, ckpt)
+      val out = twoWaveGate(d, "stream_kn_score",
+        probes.filter(col("doc_id") < 6000005L).repartition(2),
+        probes.filter(col("doc_id") >= 6000005L).unionByName(novels)
+          .repartition(2)) { (landing, out, ckpt) =>
+        EventStream.knScoreStream(s, landing, schema, frames, "doc_id",
+          "text", out, ckpt)
+      }
       held.foreach(_.unpersist())
       Tables.parquet(s, out)
         .select("doc_id", "n_trigrams", "n_hit3", "n_hit2", "logprob_sum",
@@ -318,9 +328,6 @@ private[graft] object StreamEntries {
       // the same probes — the oracle replays model, corpus cutoffs, and
       // probe scoring end to end in SQL.
       import s.implicits._
-      val base = sinkPath(d, "stream_perplexity_buckets")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d)
       val trusted = docs.filter(length(col("source")) === 4)
       val (model, margins, vocab) =
@@ -339,25 +346,16 @@ private[graft] object StreamEntries {
         "perplexity cutoffs are null: reference corpus has no scoreable docs")
       val cuts = Seq((cutRow.getDouble(0), cutRow.getDouble(1)))
         .toDF("cut_head", "cut_middle")
-      val probes = docs.filter(col("doc_id") < 10)
-        .select((col("doc_id") + 3000000L).as("doc_id"),
-          concat(col("text"), lit(" qq zz qq zz")).as("text"))
-      val novels = Seq(
-        (4000000L, "wholly novel planted stream document zyx about" +
-          " nothing previously modeled qqj at all"),
-        (4000001L, "another genuinely novel planted document kvw" +
-          " carrying entirely fresh content pqz never scored before"))
-        .toDF("doc_id", "text")
+      val (probes, novels) = servingProbes(docs, 3000000L, 4000000L)
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string")
-      probes.filter(col("doc_id") < 3000005L)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.lmBucketStream(s, landing, schema, model, margins, vocab,
-        cuts, "doc_id", "text", out, ckpt)
-      probes.filter(col("doc_id") >= 3000005L).unionByName(novels)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.lmBucketStream(s, landing, schema, model, margins, vocab,
-        cuts, "doc_id", "text", out, ckpt)
+      val out = twoWaveGate(d, "stream_perplexity_buckets",
+        probes.filter(col("doc_id") < 3000005L).repartition(2),
+        probes.filter(col("doc_id") >= 3000005L).unionByName(novels)
+          .repartition(2)) { (landing, out, ckpt) =>
+        EventStream.lmBucketStream(s, landing, schema, model, margins, vocab,
+          cuts, "doc_id", "text", out, ckpt)
+      }
       Seq(model, margins, vocab).foreach(_.unpersist())
       Tables.parquet(s, out)
         .select("doc_id", "n_bigrams", "n_oov", "avg_nll", "bucket")
@@ -374,20 +372,16 @@ private[graft] object StreamEntries {
       // EQUAL the batch packer's, which is what the oracle replays
       // (the packing recursion in doc_id order). Parquet file-sink
       // transaction log = exactly-once lake.
-      val base = sinkPath(d, "stream_seq_packing")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string")
-      docs.filter(col("doc_id") < 250).coalesce(1)
-        .write.mode("append").parquet(landing)
-      EventStream.packingStream(s, landing, schema, out, ckpt,
-        budget = 128, shards = 2)
-      docs.filter(col("doc_id") >= 250).coalesce(1)
-        .write.mode("append").parquet(landing)
-      EventStream.packingStream(s, landing, schema, out, ckpt,
-        budget = 128, shards = 2)
+      val out = twoWaveGate(d, "stream_seq_packing",
+        docs.filter(col("doc_id") < 250).coalesce(1),
+        docs.filter(col("doc_id") >= 250).coalesce(1)) {
+        (landing, out, ckpt) =>
+          EventStream.packingStream(s, landing, schema, out, ckpt,
+            budget = 128, shards = 2)
+      }
       Tables.parquet(s, out)
         .select(col("doc_id"), col("n_tokens"),
           col("shard").cast("long").as("shard"), col("seq_id"))
@@ -405,18 +399,15 @@ private[graft] object StreamEntries {
       // single-file waves make arrival rank == doc_id rank, which is
       // what the oracle replays. Every doc gets a ledger row, over-quota
       // included. Parquet file-sink transaction log = exactly-once lake.
-      val base = sinkPath(d, "stream_domain_cap")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, source string")
-      docs.filter(col("doc_id") < 250).sort("doc_id").coalesce(1)
-        .write.mode("append").parquet(landing)
-      EventStream.domainCapStream(s, landing, schema, out, ckpt, cap = 15L)
-      docs.filter(col("doc_id") >= 250).sort("doc_id").coalesce(1)
-        .write.mode("append").parquet(landing)
-      EventStream.domainCapStream(s, landing, schema, out, ckpt, cap = 15L)
+      val out = twoWaveGate(d, "stream_domain_cap",
+        docs.filter(col("doc_id") < 250).sort("doc_id").coalesce(1),
+        docs.filter(col("doc_id") >= 250).sort("doc_id").coalesce(1)) {
+        (landing, out, ckpt) =>
+          EventStream.domainCapStream(s, landing, schema, out, ckpt, cap = 15L)
+      }
       Tables.parquet(s, out).select("doc_id", "domain", "seen_rank", "kept")
     }),
     "stream_provenance" -> ((s, d) => {
@@ -503,9 +494,6 @@ private[graft] object StreamEntries {
       // (line, index) functions only). Full DuckDB replay: the oracle
       // rebuilds the probes, the index, and the cut from the raw tables.
       import s.implicits._
-      val base = sinkPath(d, "stream_line_dedup")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d)
       val index = Dedup.lineIndex(docs, "doc_id", "text").persist()
       val probes = docs.filter(col("doc_id") < 4)
@@ -517,14 +505,13 @@ private[graft] object StreamEntries {
         .toDF("doc_id", "text")
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id long, text string")
-      probes.filter(col("doc_id") < 5000002L)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.lineDedupStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt)
-      probes.filter(col("doc_id") >= 5000002L).unionByName(pure)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.lineDedupStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt)
+      val out = twoWaveGate(d, "stream_line_dedup",
+        probes.filter(col("doc_id") < 5000002L).repartition(2),
+        probes.filter(col("doc_id") >= 5000002L).unionByName(pure)
+          .repartition(2)) { (landing, out, ckpt) =>
+        EventStream.lineDedupStream(s, landing, schema, index, "doc_id",
+          "text", out, ckpt)
+      }
       index.unpersist()
       Tables.parquet(s, out)
         .select(col("id").as("doc_id"), col("n_lines"), col("n_cut"),
@@ -542,9 +529,6 @@ private[graft] object StreamEntries {
       // equal the batch form no matter the wave/batch split — the same
       // golden planted-probe rows as novelty_near_dup.
       import s.implicits._
-      val base = sinkPath(d, "stream_novelty")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(col("doc_id") < 250).select("doc_id", "text")
       val index = Dedup.buildSignatureIndex(corpus, "doc_id", "text")
@@ -557,19 +541,18 @@ private[graft] object StreamEntries {
         (4000001L, "another genuinely novel planted document kvw carrying" +
           " entirely fresh content pqz never crawled before"))
         .toDF("doc_id", "text")
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "doc_id long, text string")
       // wave 1: half the jittered probes; wave 2: the rest + the novels —
       // a cross-wave split of the SAME probe family, so a verdict that
       // depended on wave composition would diverge from the golden rows
-      jittered.filter(col("doc_id") < 3000005L)
-        .repartition(2).write.mode("append").parquet(landing)
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id long, text string")
-      EventStream.noveltyStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt, threshold = 0.7)
-      jittered.filter(col("doc_id") >= 3000005L).unionByName(novel)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.noveltyStream(s, landing, schema, index, "doc_id", "text",
-        out, ckpt, threshold = 0.7)
+      val out = twoWaveGate(d, "stream_novelty",
+        jittered.filter(col("doc_id") < 3000005L).repartition(2),
+        jittered.filter(col("doc_id") >= 3000005L).unionByName(novel)
+          .repartition(2)) { (landing, out, ckpt) =>
+        EventStream.noveltyStream(s, landing, schema, index, "doc_id", "text",
+          out, ckpt, threshold = 0.7)
+      }
       Tables.parquet(s, out).filter(col("doc_id") >= 3000000L)
         .select("doc_id", "is_novel")
     }),
@@ -586,9 +569,6 @@ private[graft] object StreamEntries {
       // waves, so a verdict depending on wave composition would diverge
       // from the structural oracle. One file per micro-batch forces real
       // micro-batches; the checkpoint carries the cursor between drains.
-      val base = sinkPath(d, "stream_phash_novelty")
-      val (landing, out, ckpt) = (s"$base/landing", s"$base/out", s"$base/ckpt")
-      Sink.reset(base)
       val docs = Tables.documents(s, d)
       // plantedAssets over docs 0-4 supplies all four probe families
       // (base renders + exact copies at 1e9, BMP re-encodes at 2e9,
@@ -625,14 +605,15 @@ private[graft] object StreamEntries {
         .select((col("asset_id") + 4000000000L).as("asset_id"), col("payload"))
       val schema = org.apache.spark.sql.types.StructType.fromDDL(
         "asset_id long, payload binary")
-      exactCopies.unionByName(
-          reencodes.filter(col("asset_id") < Multimodal.ReencodeBase + 3))
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt)
-      reencodes.filter(col("asset_id") >= Multimodal.ReencodeBase + 3)
-        .unionByName(resizes).unionByName(novel)
-        .repartition(2).write.mode("append").parquet(landing)
-      EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt)
+      val out = twoWaveGate(d, "stream_phash_novelty",
+        exactCopies.unionByName(
+            reencodes.filter(col("asset_id") < Multimodal.ReencodeBase + 3))
+          .repartition(2),
+        reencodes.filter(col("asset_id") >= Multimodal.ReencodeBase + 3)
+          .unionByName(resizes).unionByName(novel)
+          .repartition(2)) { (landing, out, ckpt) =>
+        EventStream.phashNoveltyStream(s, landing, schema, index, out, ckpt)
+      }
       Tables.parquet(s, out).select("asset_id", "method", "is_novel")
     })
   )
@@ -645,11 +626,7 @@ private[graft] object StreamEntries {
       // probes rebuilt from the raw table, the three frozen rungs and the
       // integer avg_nll — the ngram_lm_kn oracle with the stream's
       // train/target split
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
+      raw"""WITH ${wsCte("tws", "documents")},
          probes AS (
            SELECT doc_id + 6000000 AS doc_id,
              text || ' qq zz qq zz' AS text
@@ -661,74 +638,16 @@ private[graft] object StreamEntries {
              (6100001, 'another genuinely novel planted document kvw' ||
                ' carrying entirely fresh content pqz never scored before')
            ) t(doc_id, text)),
-         pws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM probes),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+         ${wsCte("pws", "probes")},
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3),
-         ctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
-                  FROM tri GROUP BY 1, 2),
-         contb AS (SELECT w2, w3, count(*) AS cb FROM tri GROUP BY 1, 2),
-         mid AS (SELECT w2, sum(cb) AS nmid, count(*) AS ndw3
-                 FROM contb GROUP BY 1),
-         tbt AS (
-           SELECT DISTINCT w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
-         sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
-                        (SELECT count(*) FROM contu) AS wtypes,
-                        (SELECT count(DISTINCT tk) FROM
-                          (SELECT unnest(w) AS tk FROM tws) u) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM pws) p),
-         joined AS (
-           SELECT s.doc_id, tri.c3, ctx2.cctx, ctx2.t2, contb.cb,
-             mid.nmid, mid.ndw3, contu.cu, sca.b, sca.wtypes, sca.v
-           FROM str s
-           LEFT JOIN tri ON s.w1 = tri.w1 AND s.w2 = tri.w2 AND s.w3 = tri.w3
-           LEFT JOIN ctx2 ON s.w1 = ctx2.w1 AND s.w2 = ctx2.w2
-           LEFT JOIN contb ON s.w2 = contb.w2 AND s.w3 = contb.w3
-           LEFT JOIN mid ON s.w2 = mid.w2
-           LEFT JOIN contu ON s.w3 = contu.w2
-           CROSS JOIN sca),
-         p1t AS (SELECT *, (greatest(coalesce(cu, 0) - 0.75, 0.0)
-                   + (0.75 * wtypes) / v) / b AS p1 FROM joined),
-         p2t AS (SELECT *, CASE WHEN nmid IS NULL THEN p1
-                   ELSE (greatest(coalesce(cb, 0) - 0.75, 0.0)
-                     + (0.75 * ndw3) * p1) / nmid END AS p2 FROM p1t),
-         p3t AS (SELECT *, CASE WHEN cctx IS NULL THEN p2
-                   ELSE (greatest(coalesce(c3, 0) - 0.75, 0.0)
-                     + (0.75 * t2) * p2) / cctx END AS p3 FROM p2t),
-         sc AS (
-           SELECT doc_id, count(*) AS n_trigrams,
-             cast(sum(CASE WHEN c3 IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit3,
-             cast(sum(CASE WHEN cb IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit2,
-             round(sum(ln(p3)), 4) AS logprob_sum
-           FROM p3t GROUP BY 1),
-         fin AS (
-           SELECT d.doc_id,
-             coalesce(sc.n_trigrams, 0) AS n_trigrams,
-             coalesce(sc.n_hit3, 0) AS n_hit3,
-             coalesce(sc.n_hit2, 0) AS n_hit2,
-             sc.logprob_sum,
-             (CAST(round(-sc.logprob_sum * 10000) AS BIGINT) * 2
-               + sc.n_trigrams) // (sc.n_trigrams * 2) / 10000.0 AS avg_nll
-           FROM (SELECT DISTINCT doc_id FROM probes) d
-           LEFT JOIN sc USING (doc_id))
-         SELECT doc_id, n_trigrams, n_hit3, n_hit2, logprob_sum, avg_nll,
-           round(exp(avg_nll), 4) AS ppl,
-           coalesce(avg_nll <= 3.5, false) AS keep
-         FROM fin""",
+         $knCtxCtes,
+         $knContinuationCtes,
+         $knScaCte,
+         ${knStrCte("pws")},
+         ${knJoinCte("joined")},
+         $knRungCtes,
+         ${knScoreCtes("probes")}""",
     "stream_seq_packing" ->
       // the drained lake must equal the BATCH greedy packer on the same
       // md5 routing in doc_id order — the wave/batch split must be
@@ -759,7 +678,7 @@ private[graft] object StreamEntries {
       // LM vs the corpus model, and the first-arrival quota whose rank
       // the (id%2, id) wave order fixes; batch_id = id parity (one
       // single-file wave per AvailableNow run)
-      """WITH arr AS (
+      raw"""WITH arr AS (
            SELECT doc_id + 7000000 AS doc_id,
              text || chr(10) || 'zz novel ' || doc_id || ' tail' AS text,
              'probeA' AS source
@@ -809,24 +728,7 @@ private[graft] object StreamEntries {
                chr(10) ORDER BY a.idx_), '') AS cleaned
            FROM anrm a LEFT JOIN idx i ON a.nrm = i.nrm
            GROUP BY a.doc_id),
-         gm AS (
-           SELECT doc_id,
-             len(ws) AS n_words,
-             length(regexp_replace(text, '\s+', '', 'g')) AS n_chars,
-             length(text) - length(replace(text, '#', '')) AS hashes,
-             (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses,
-             len(lines) AS n_lines,
-             len(list_filter(lines, l -> regexp_matches(l, '^\s*[-*•]'))) AS bullets,
-             len(list_filter(lines, l -> regexp_matches(l, '\.\.\.\s*$'))) AS ell_lines,
-             len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS alpha_w,
-             len(list_intersect(list_distinct(ws),
-               ['the','be','to','of','and','that','have','with'])) AS stop_hits
-           FROM (
-             SELECT doc_id, coalesce(cleaned, '') AS text,
-               list_filter(regexp_split_to_array(trim(lower(coalesce(cleaned, ''))), '\s+'),
-                           x -> x <> '') AS ws,
-               string_split(coalesce(cleaned, ''), chr(10)) AS lines
-             FROM lc) t),
+         ${gopherMetricsCte("cleaned", "lc")},
          g AS (
            SELECT doc_id,
              ((n_words >= 50 AND n_words <= 100000)
@@ -837,16 +739,8 @@ private[graft] object StreamEntries {
               AND (alpha_w * 5 >= n_words * 4)
               AND (stop_hits >= 2)) AS p_go
            FROM gm),
-         tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
+         ${wsCte("tws", "documents")},
+         ${bigramCte("tbi", "tws")},
          c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
          c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
          v AS (SELECT count(DISTINCT tk) AS v
@@ -859,11 +753,7 @@ private[graft] object StreamEntries {
              list_filter(regexp_split_to_array(trim(lower(cleaned)), '\s+'),
                          x -> x <> '') AS w
            FROM lc),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
+         ${bigramCte("bi", "ws")},
          sc AS (
            SELECT bi.doc_id, count(*) AS n_bigrams,
              round(sum(coalesce(m.logp,
@@ -963,11 +853,7 @@ private[graft] object StreamEntries {
       // the streamed lake must equal batch cross-scoring of the SAME
       // derived probes + novel literals against the corpus-trained model
       // — full backoff-ladder replay, batch-split independence included
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
+      raw"""WITH ${wsCte("tws", "documents")},
          tgt AS (
            SELECT doc_id + 3000000 AS doc_id,
              text || ' qq zz qq zz' AS text
@@ -977,38 +863,11 @@ private[graft] object StreamEntries {
              (4000000, 'wholly novel planted stream document zyx about nothing previously modeled qqj at all'),
              (4000001, 'another genuinely novel planted document kvw carrying entirely fresh content pqz never scored before'))
              v(id, t)),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM tgt),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM tws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
-         sc AS (
-           SELECT bi.doc_id, count(*) AS n_bigrams,
-             cast(sum(CASE WHEN m.logp IS NULL THEN 1 ELSE 0 END) AS bigint) AS n_oov,
-             round(sum(coalesce(m.logp,
-               ln(1.0 / (coalesce(c1.c1, 0) + v.v)))), 4) AS logprob_sum
-           FROM bi
-           LEFT JOIN model m ON bi.w1 = m.w1 AND bi.w2 = m.w2
-           LEFT JOIN c1 ON bi.w1 = c1.w1
-           CROSS JOIN v
-           GROUP BY 1)
+         ${wsCte("ws", "tgt")},
+         ${bigramCte("tbi", "tws")},
+         ${bigramCte("bi", "ws")},
+         ${bigramModelCtes("tbi", "tws")},
+         ${backoffScoreCte("sc", "bi")}
          SELECT t.doc_id,
            coalesce(sc.n_bigrams, 0) AS n_bigrams,
            coalesce(sc.n_oov, 0) AS n_oov,
@@ -1024,16 +883,8 @@ private[graft] object StreamEntries {
       // replay, assigned by the static cuts — the full serving chain in
       // one SQL: a drained bucket that depended on wave composition (or
       // per-batch cutoffs) would diverge
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         cws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
+      raw"""WITH ${wsCte("tws", "documents WHERE length(source) = 4")},
+         ${wsCte("cws", "documents")},
          tgt AS (
            SELECT doc_id + 3000000 AS doc_id,
              text || ' qq zz qq zz' AS text
@@ -1043,28 +894,10 @@ private[graft] object StreamEntries {
              (4000000, 'wholly novel planted stream document zyx about nothing previously modeled qqj at all'),
              (4000001, 'another genuinely novel planted document kvw carrying entirely fresh content pqz never scored before'))
              v(id, t)),
-         pws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM tgt),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM tws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
-         cbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM cws) p),
+         ${wsCte("pws", "tgt")},
+         ${bigramCte("tbi", "tws")},
+         ${bigramModelCtes("tbi", "tws")},
+         ${bigramCte("cbi", "cws")},
          csc AS (
            SELECT cbi.doc_id,
              round(sum(coalesce(m.logp,
@@ -1080,32 +913,9 @@ private[graft] object StreamEntries {
              round(-csc.logprob_sum / csc.n_bigrams, 4) AS avg_nll
            FROM (SELECT DISTINCT doc_id FROM documents) d
            LEFT JOIN csc USING (doc_id)),
-         hist AS (SELECT avg_nll, count(*) AS cnt FROM doc_sc
-                  WHERE avg_nll IS NOT NULL GROUP BY 1),
-         cum AS (SELECT avg_nll, sum(cnt) OVER (ORDER BY avg_nll
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                 FROM hist),
-         tot AS (SELECT count(*) AS n_total FROM doc_sc
-                 WHERE avg_nll IS NOT NULL),
-         cuts AS (SELECT
-             min(CASE WHEN cum * 3 >= n_total THEN avg_nll END) AS cut_head,
-             min(CASE WHEN cum * 3 >= n_total * 2 THEN avg_nll END) AS cut_middle
-           FROM cum CROSS JOIN tot),
-         pbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM pws) p),
-         psc AS (
-           SELECT pbi.doc_id, count(*) AS n_bigrams,
-             cast(sum(CASE WHEN m.logp IS NULL THEN 1 ELSE 0 END) AS bigint) AS n_oov,
-             round(sum(coalesce(m.logp,
-               ln(1.0 / (coalesce(c1.c1, 0) + v.v)))), 4) AS logprob_sum
-           FROM pbi
-           LEFT JOIN model m ON pbi.w1 = m.w1 AND pbi.w2 = m.w2
-           LEFT JOIN c1 ON pbi.w1 = c1.w1
-           CROSS JOIN v
-           GROUP BY 1),
+         ${tertileCutCtes("doc_sc")},
+         ${bigramCte("pbi", "pws")},
+         ${backoffScoreCte("psc", "pbi")},
          probe_sc AS (
            SELECT t.doc_id,
              coalesce(psc.n_bigrams, 0) AS n_bigrams,
@@ -1124,12 +934,7 @@ private[graft] object StreamEntries {
       // the STREAMING drain of the same probe family must land on the
       // exact batch verdicts (batch-split independence): same golden rows
       // as novelty_near_dup
-      """SELECT CAST(doc_id AS BIGINT) AS doc_id, is_novel FROM (VALUES
-           (3000000, FALSE), (3000001, FALSE), (3000002, FALSE),
-           (3000003, FALSE), (3000004, FALSE), (3000005, FALSE),
-           (3000006, FALSE), (3000007, FALSE), (3000008, FALSE),
-           (3000009, FALSE), (4000000, TRUE), (4000001, TRUE))
-           t(doc_id, is_novel)""",
+      noveltyGoldenSql,
     "stream_phash_novelty" ->
       // structural replay, not pinned goldens: the planted arrival
       // families FORCE the ledger — exact byte copies hit the md5 tier;

@@ -92,7 +92,7 @@ private[graft] object TextEntries {
     * (a doc with no uncovered position is the drop), md5-ordered
     * domain cap 10. */
   private val curationChainSql: String =
-    """WITH corpus AS (
+    raw"""WITH corpus AS (
            SELECT doc_id, text, source FROM documents
            UNION ALL
            SELECT 9300001,
@@ -180,24 +180,7 @@ private[graft] object TextEntries {
            SELECT c.doc_id, c.text, k.source
            FROM cutdoc c JOIN corpus k USING (doc_id)
            WHERE trim(c.text) <> ''),
-         gm AS (
-           SELECT doc_id,
-             len(ws) AS n_words,
-             length(regexp_replace(text, '\s+', '', 'g')) AS n_chars,
-             length(text) - length(replace(text, '#', '')) AS hashes,
-             (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses,
-             len(lines) AS n_lines,
-             len(list_filter(lines, l -> regexp_matches(l, '^\s*[-*•]'))) AS bullets,
-             len(list_filter(lines, l -> regexp_matches(l, '\.\.\.\s*$'))) AS ell_lines,
-             len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS alpha_w,
-             len(list_intersect(list_distinct(ws),
-               ['the','be','to','of','and','that','have','with'])) AS stop_hits
-           FROM (
-             SELECT doc_id, coalesce(text, '') AS text,
-               list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'),
-                           x -> x <> '') AS ws,
-               string_split(coalesce(text, ''), chr(10)) AS lines
-             FROM s1) t),
+         ${gopherMetricsCte("text", "s1")},
          g AS (
            SELECT doc_id FROM gm
            WHERE (n_words >= 50 AND n_words <= 100000)
@@ -207,23 +190,9 @@ private[graft] object TextEntries {
              AND (ell_lines * 10 <= n_lines * 3)
              AND (alpha_w * 5 >= n_words * 4)
              AND (stop_hits >= 2)),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM s1),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM ws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
+         ${wsCte("ws", "s1")},
+         ${bigramCte("bi", "ws")},
+         ${bigramModelCtes("bi", "ws")},
          lmk AS (
            SELECT bi.doc_id FROM bi JOIN model USING (w1, w2)
            GROUP BY 1
@@ -258,11 +227,7 @@ private[graft] object TextEntries {
                i -> array_to_string(toks[i:i+2], ' '))) AS sh
            FROM (SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
                  FROM sd)),
-         nd_losers AS (
-           SELECT DISTINCT b.doc_id FROM ksh a JOIN ksh b
-             ON a.blk = b.blk AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh)) * 1.0
-                 / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
+         $nearDupLosersCte,
          snd AS (
            SELECT * FROM sd
            WHERE doc_id NOT IN (SELECT doc_id FROM nd_losers)),
@@ -1122,23 +1087,9 @@ private[graft] object TextEntries {
       // full model replay: same tokenization, same add-1 smoothing, same
       // round-the-SUM-then-derive discipline (avg_nll/ppl divide the
       // already-rounded sum, so both engines operate on identical doubles)
-      """WITH ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM ws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
+      raw"""WITH ${wsCte("ws", "documents")},
+         ${bigramCte("bi", "ws")},
+         ${bigramModelCtes("bi", "ws")},
          sc AS (
            SELECT bi.doc_id, count(*) AS n_bigrams,
              round(sum(logp), 4) AS logprob_sum
@@ -1154,43 +1105,8 @@ private[graft] object TextEntries {
     "ngram_lm_cross_score" ->
       // backoff replay: seen bigram → model logp; unseen under seen w1 →
       // ln(1/(c1+V)); w1 unseen → ln(1/V). n_oov counts model misses.
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM tws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
-         sc AS (
-           SELECT bi.doc_id, count(*) AS n_bigrams,
-             cast(sum(CASE WHEN m.logp IS NULL THEN 1 ELSE 0 END) AS bigint) AS n_oov,
-             round(sum(coalesce(m.logp,
-               ln(1.0 / (coalesce(c1.c1, 0) + v.v)))), 4) AS logprob_sum
-           FROM bi
-           LEFT JOIN model m ON bi.w1 = m.w1 AND bi.w2 = m.w2
-           LEFT JOIN c1 ON bi.w1 = c1.w1
-           CROSS JOIN v
-           GROUP BY 1)
+      raw"""WITH $crossModelCtes,
+         ${backoffScoreCte("sc", "bi")}
          SELECT d.doc_id,
            coalesce(sc.n_bigrams, 0) AS n_bigrams,
            coalesce(sc.n_oov, 0) AS n_oov,
@@ -1207,79 +1123,17 @@ private[graft] object TextEntries {
       // (unigram rung), the frozen expression grouping per rung, ln at
       // the end, round-the-SUM. D = 0.75 is exact binary; all other
       // inputs are integers, so both engines divide identical doubles.
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+      raw"""WITH ${wsCte("tws", "documents WHERE length(source) = 4")},
+         ${wsCte("ws", "documents")},
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3),
-         ctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
-                  FROM tri GROUP BY 1, 2),
-         contb AS (SELECT w2, w3, count(*) AS cb FROM tri GROUP BY 1, 2),
-         mid AS (SELECT w2, sum(cb) AS nmid, count(*) AS ndw3
-                 FROM contb GROUP BY 1),
-         tbt AS (
-           SELECT DISTINCT w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
-         sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
-                        (SELECT count(*) FROM contu) AS wtypes,
-                        (SELECT count(DISTINCT tk) FROM
-                          (SELECT unnest(w) AS tk FROM tws) u) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM ws) p),
-         joined AS (
-           SELECT s.doc_id, tri.c3, ctx2.cctx, ctx2.t2, contb.cb,
-             mid.nmid, mid.ndw3, contu.cu, sca.b, sca.wtypes, sca.v
-           FROM str s
-           LEFT JOIN tri ON s.w1 = tri.w1 AND s.w2 = tri.w2 AND s.w3 = tri.w3
-           LEFT JOIN ctx2 ON s.w1 = ctx2.w1 AND s.w2 = ctx2.w2
-           LEFT JOIN contb ON s.w2 = contb.w2 AND s.w3 = contb.w3
-           LEFT JOIN mid ON s.w2 = mid.w2
-           LEFT JOIN contu ON s.w3 = contu.w2
-           CROSS JOIN sca),
-         p1t AS (SELECT *, (greatest(coalesce(cu, 0) - 0.75, 0.0)
-                   + (0.75 * wtypes) / v) / b AS p1 FROM joined),
-         p2t AS (SELECT *, CASE WHEN nmid IS NULL THEN p1
-                   ELSE (greatest(coalesce(cb, 0) - 0.75, 0.0)
-                     + (0.75 * ndw3) * p1) / nmid END AS p2 FROM p1t),
-         p3t AS (SELECT *, CASE WHEN cctx IS NULL THEN p2
-                   ELSE (greatest(coalesce(c3, 0) - 0.75, 0.0)
-                     + (0.75 * t2) * p2) / cctx END AS p3 FROM p2t),
-         sc AS (
-           SELECT doc_id, count(*) AS n_trigrams,
-             cast(sum(CASE WHEN c3 IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit3,
-             cast(sum(CASE WHEN cb IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit2,
-             round(sum(ln(p3)), 4) AS logprob_sum
-           FROM p3t GROUP BY 1),
-         fin AS (
-           SELECT d.doc_id,
-             coalesce(sc.n_trigrams, 0) AS n_trigrams,
-             coalesce(sc.n_hit3, 0) AS n_hit3,
-             coalesce(sc.n_hit2, 0) AS n_hit2,
-             sc.logprob_sum,
-             (CAST(round(-sc.logprob_sum * 10000) AS BIGINT) * 2
-               + sc.n_trigrams) // (sc.n_trigrams * 2) / 10000.0 AS avg_nll
-           FROM (SELECT DISTINCT doc_id FROM documents) d
-           LEFT JOIN sc USING (doc_id))
-         SELECT doc_id, n_trigrams, n_hit3, n_hit2, logprob_sum, avg_nll,
-           round(exp(avg_nll), 4) AS ppl,
-           coalesce(avg_nll <= 3.5, false) AS keep
-         FROM fin""",
+         $knCtxCtes,
+         $knContinuationCtes,
+         $knScaCte,
+         ${knStrCte("ws")},
+         ${knJoinCte("joined")},
+         $knRungCtes,
+         ${knScoreCtes("documents")}""",
     "ngram_lm_kn_pruned" ->
       // the ngram_lm_kn replay with the ONE clause that defines count-
       // cutoff pruning: HAVING count(*) >= 2 on the trigram table. Every
@@ -1287,135 +1141,39 @@ private[graft] object TextEntries {
       // counts) already derives from tri, so the kept-table estimation —
       // and the wholesale backoff of fully-pruned contexts through the
       // null-denominator arm — falls out of the same frozen ladder.
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+      raw"""WITH ${wsCte("tws", "documents WHERE length(source) = 4")},
+         ${wsCte("ws", "documents")},
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3
                  HAVING count(*) >= 2),
-         ctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
-                  FROM tri GROUP BY 1, 2),
-         contb AS (SELECT w2, w3, count(*) AS cb FROM tri GROUP BY 1, 2),
-         mid AS (SELECT w2, sum(cb) AS nmid, count(*) AS ndw3
-                 FROM contb GROUP BY 1),
-         tbt AS (
-           SELECT DISTINCT w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
-         sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
-                        (SELECT count(*) FROM contu) AS wtypes,
-                        (SELECT count(DISTINCT tk) FROM
-                          (SELECT unnest(w) AS tk FROM tws) u) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM ws) p),
-         joined AS (
-           SELECT s.doc_id, tri.c3, ctx2.cctx, ctx2.t2, contb.cb,
-             mid.nmid, mid.ndw3, contu.cu, sca.b, sca.wtypes, sca.v
-           FROM str s
-           LEFT JOIN tri ON s.w1 = tri.w1 AND s.w2 = tri.w2 AND s.w3 = tri.w3
-           LEFT JOIN ctx2 ON s.w1 = ctx2.w1 AND s.w2 = ctx2.w2
-           LEFT JOIN contb ON s.w2 = contb.w2 AND s.w3 = contb.w3
-           LEFT JOIN mid ON s.w2 = mid.w2
-           LEFT JOIN contu ON s.w3 = contu.w2
-           CROSS JOIN sca),
-         p1t AS (SELECT *, (greatest(coalesce(cu, 0) - 0.75, 0.0)
-                   + (0.75 * wtypes) / v) / b AS p1 FROM joined),
-         p2t AS (SELECT *, CASE WHEN nmid IS NULL THEN p1
-                   ELSE (greatest(coalesce(cb, 0) - 0.75, 0.0)
-                     + (0.75 * ndw3) * p1) / nmid END AS p2 FROM p1t),
-         p3t AS (SELECT *, CASE WHEN cctx IS NULL THEN p2
-                   ELSE (greatest(coalesce(c3, 0) - 0.75, 0.0)
-                     + (0.75 * t2) * p2) / cctx END AS p3 FROM p2t),
-         sc AS (
-           SELECT doc_id, count(*) AS n_trigrams,
-             cast(sum(CASE WHEN c3 IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit3,
-             cast(sum(CASE WHEN cb IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit2,
-             round(sum(ln(p3)), 4) AS logprob_sum
-           FROM p3t GROUP BY 1),
-         fin AS (
-           SELECT d.doc_id,
-             coalesce(sc.n_trigrams, 0) AS n_trigrams,
-             coalesce(sc.n_hit3, 0) AS n_hit3,
-             coalesce(sc.n_hit2, 0) AS n_hit2,
-             sc.logprob_sum,
-             (CAST(round(-sc.logprob_sum * 10000) AS BIGINT) * 2
-               + sc.n_trigrams) // (sc.n_trigrams * 2) / 10000.0 AS avg_nll
-           FROM (SELECT DISTINCT doc_id FROM documents) d
-           LEFT JOIN sc USING (doc_id))
-         SELECT doc_id, n_trigrams, n_hit3, n_hit2, logprob_sum, avg_nll,
-           round(exp(avg_nll), 4) AS ppl,
-           coalesce(avg_nll <= 3.5, false) AS keep
-         FROM fin""",
+         $knCtxCtes,
+         $knContinuationCtes,
+         $knScaCte,
+         ${knStrCte("ws")},
+         ${knJoinCte("joined")},
+         $knRungCtes,
+         ${knScoreCtes("documents")}""",
     "ngram_lm_kn_prune_stats" ->
       // BOTH ladders replayed off the shared trigram aggregation (the
       // pruned one differs only in its frame CTEs re-derived from the
       // kept table), scores compared as the ladder's exact 1e4-scaled
       // integers — the sums cross the engines bit-for-bit — plus the
       // kept/dropped type and mass arithmetic from the same tri table
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+      raw"""WITH ${wsCte("tws", "documents WHERE length(source) = 4")},
+         ${wsCte("ws", "documents")},
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3),
          ptri AS (SELECT * FROM tri WHERE c3 >= 2),
-         ctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
-                  FROM tri GROUP BY 1, 2),
-         contb AS (SELECT w2, w3, count(*) AS cb FROM tri GROUP BY 1, 2),
-         mid AS (SELECT w2, sum(cb) AS nmid, count(*) AS ndw3
-                 FROM contb GROUP BY 1),
+         $knCtxCtes,
          pctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
                    FROM ptri GROUP BY 1, 2),
          pcontb AS (SELECT w2, w3, count(*) AS cb FROM ptri GROUP BY 1, 2),
          pmid AS (SELECT w2, sum(cb) AS nmid, count(*) AS ndw3
                   FROM pcontb GROUP BY 1),
-         tbt AS (
-           SELECT DISTINCT w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
-         sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
-                        (SELECT count(*) FROM contu) AS wtypes,
-                        (SELECT count(DISTINCT tk) FROM
-                          (SELECT unnest(w) AS tk FROM tws) u) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM ws) p),
-         jb AS (
-           SELECT s.doc_id, tri.c3, ctx2.cctx, ctx2.t2, contb.cb,
-             mid.nmid, mid.ndw3, contu.cu, sca.b, sca.wtypes, sca.v
-           FROM str s
-           LEFT JOIN tri ON s.w1 = tri.w1 AND s.w2 = tri.w2 AND s.w3 = tri.w3
-           LEFT JOIN ctx2 ON s.w1 = ctx2.w1 AND s.w2 = ctx2.w2
-           LEFT JOIN contb ON s.w2 = contb.w2 AND s.w3 = contb.w3
-           LEFT JOIN mid ON s.w2 = mid.w2
-           LEFT JOIN contu ON s.w3 = contu.w2
-           CROSS JOIN sca),
+         $knContinuationCtes,
+         $knScaCte,
+         ${knStrCte("ws")},
+         ${knJoinCte("jb")},
          bp1 AS (SELECT *, (greatest(coalesce(cu, 0) - 0.75, 0.0)
                    + (0.75 * wtypes) / v) / b AS p1 FROM jb),
          bp2 AS (SELECT *, CASE WHEN nmid IS NULL THEN p1
@@ -1490,20 +1248,9 @@ private[graft] object TextEntries {
       // counts), the Y/D1/D2/D3+ arithmetic with the degenerate-estimate
       // fallback CASE, class-picked discounts per count, and the
       // discounted-mass lambda — all integer inputs, frozen grouping
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+      raw"""WITH ${wsCte("tws", "documents WHERE length(source) = 4")},
+         ${wsCte("ws", "documents")},
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3),
          ctx2 AS (SELECT w1, w2, sum(c3) AS cctx,
                     sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS tn1,
@@ -1516,67 +1263,10 @@ private[graft] object TextEntries {
                    sum(CASE WHEN cb = 2 THEN 1 ELSE 0 END) AS bn2,
                    sum(CASE WHEN cb >= 3 THEN 1 ELSE 0 END) AS bn3
                  FROM contb GROUP BY 1),
-         tbt AS (
-           SELECT DISTINCT w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
-         tcoc AS (SELECT
-             sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS t_n1,
-             sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS t_n2,
-             sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END) AS t_n3,
-             sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END) AS t_n4
-           FROM tri),
-         bcoc AS (SELECT
-             sum(CASE WHEN cb = 1 THEN 1 ELSE 0 END) AS b_n1,
-             sum(CASE WHEN cb = 2 THEN 1 ELSE 0 END) AS b_n2,
-             sum(CASE WHEN cb = 3 THEN 1 ELSE 0 END) AS b_n3,
-             sum(CASE WHEN cb = 4 THEN 1 ELSE 0 END) AS b_n4
-           FROM contb),
-         rawd AS (
-           SELECT t_n1, t_n2, t_n3, t_n4, b_n1, b_n2, b_n3, b_n4,
-             1.0 - (2.0 * (t_n1 / (t_n1 + 2.0 * t_n2))) * (t_n2 / t_n1)
-               AS rtd1,
-             2.0 - (3.0 * (t_n1 / (t_n1 + 2.0 * t_n2))) * (t_n3 / t_n2)
-               AS rtd2,
-             3.0 - (4.0 * (t_n1 / (t_n1 + 2.0 * t_n2))) * (t_n4 / t_n3)
-               AS rtd3,
-             1.0 - (2.0 * (b_n1 / (b_n1 + 2.0 * b_n2))) * (b_n2 / b_n1)
-               AS rbd1,
-             2.0 - (3.0 * (b_n1 / (b_n1 + 2.0 * b_n2))) * (b_n3 / b_n2)
-               AS rbd2,
-             3.0 - (4.0 * (b_n1 / (b_n1 + 2.0 * b_n2))) * (b_n4 / b_n3)
-               AS rbd3
-           FROM tcoc CROSS JOIN bcoc),
-         disc AS (
-           SELECT
-             CASE WHEN t_n1 > 0 AND t_n2 > 0 AND t_n3 > 0 AND t_n4 > 0
-                   AND rtd1 > 0.0 AND rtd2 > 0.0 AND rtd3 > 0.0
-                  THEN rtd1 ELSE 0.75 END AS td1,
-             CASE WHEN t_n1 > 0 AND t_n2 > 0 AND t_n3 > 0 AND t_n4 > 0
-                   AND rtd1 > 0.0 AND rtd2 > 0.0 AND rtd3 > 0.0
-                  THEN rtd2 ELSE 0.75 END AS td2,
-             CASE WHEN t_n1 > 0 AND t_n2 > 0 AND t_n3 > 0 AND t_n4 > 0
-                   AND rtd1 > 0.0 AND rtd2 > 0.0 AND rtd3 > 0.0
-                  THEN rtd3 ELSE 0.75 END AS td3,
-             CASE WHEN b_n1 > 0 AND b_n2 > 0 AND b_n3 > 0 AND b_n4 > 0
-                   AND rbd1 > 0.0 AND rbd2 > 0.0 AND rbd3 > 0.0
-                  THEN rbd1 ELSE 0.75 END AS bd1,
-             CASE WHEN b_n1 > 0 AND b_n2 > 0 AND b_n3 > 0 AND b_n4 > 0
-                   AND rbd1 > 0.0 AND rbd2 > 0.0 AND rbd3 > 0.0
-                  THEN rbd2 ELSE 0.75 END AS bd2,
-             CASE WHEN b_n1 > 0 AND b_n2 > 0 AND b_n3 > 0 AND b_n4 > 0
-                   AND rbd1 > 0.0 AND rbd2 > 0.0 AND rbd3 > 0.0
-                  THEN rbd3 ELSE 0.75 END AS bd3
-           FROM rawd),
-         sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
-                        (SELECT count(*) FROM contu) AS wtypes,
-                        (SELECT count(DISTINCT tk) FROM
-                          (SELECT unnest(w) AS tk FROM tws) u) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM ws) p),
+         $knContinuationCtes,
+         $mknDiscountCtes,
+         $knScaCte,
+         ${knStrCte("ws")},
          joined AS (
            SELECT s.doc_id, tri.c3, ctx2.cctx, ctx2.tn1, ctx2.tn2,
              ctx2.tn3, contb.cb, mid.nmid, mid.bn1, mid.bn2, mid.bn3,
@@ -1603,48 +1293,16 @@ private[graft] object TextEntries {
                              WHEN c3 = 2 THEN td2 ELSE td3 END), 0.0) END
                      + (td1 * tn1 + td2 * tn2 + td3 * tn3) * p2) / cctx
                    END AS p3 FROM p2t),
-         sc AS (
-           SELECT doc_id, count(*) AS n_trigrams,
-             cast(sum(CASE WHEN c3 IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit3,
-             cast(sum(CASE WHEN cb IS NOT NULL THEN 1 ELSE 0 END) AS bigint)
-               AS n_hit2,
-             round(sum(ln(p3)), 4) AS logprob_sum
-           FROM p3t GROUP BY 1),
-         fin AS (
-           SELECT d.doc_id,
-             coalesce(sc.n_trigrams, 0) AS n_trigrams,
-             coalesce(sc.n_hit3, 0) AS n_hit3,
-             coalesce(sc.n_hit2, 0) AS n_hit2,
-             sc.logprob_sum,
-             (CAST(round(-sc.logprob_sum * 10000) AS BIGINT) * 2
-               + sc.n_trigrams) // (sc.n_trigrams * 2) / 10000.0 AS avg_nll
-           FROM (SELECT DISTINCT doc_id FROM documents) d
-           LEFT JOIN sc USING (doc_id))
-         SELECT doc_id, n_trigrams, n_hit3, n_hit2, logprob_sum, avg_nll,
-           round(exp(avg_nll), 4) AS ppl,
-           coalesce(avg_nll <= 3.5, false) AS keep
-         FROM fin""",
+         ${knScoreCtes("documents")}""",
     "ngram_lm_mkn_crosstab" ->
       // both KN-family ladders replayed off ONE shared trigram/type
       // aggregation (the fixed-0.75 frames and the estimated-discount
       // frames differ only in their per-context class columns and the
       // rung expression trees, each verbatim from its parent oracle),
       // both cutoff picks, then the doc-keyed crosstab
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+      raw"""WITH ${wsCte("tws", "documents WHERE length(source) = 4")},
+         ${wsCte("ws", "documents")},
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3),
          contb AS (SELECT w2, w3, count(*) AS cb FROM tri GROUP BY 1, 2),
          kctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
@@ -1661,67 +1319,10 @@ private[graft] object TextEntries {
                     sum(CASE WHEN cb = 2 THEN 1 ELSE 0 END) AS bn2,
                     sum(CASE WHEN cb >= 3 THEN 1 ELSE 0 END) AS bn3
                   FROM contb GROUP BY 1),
-         tbt AS (
-           SELECT DISTINCT w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
-         tcoc AS (SELECT
-             sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS t_n1,
-             sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS t_n2,
-             sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END) AS t_n3,
-             sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END) AS t_n4
-           FROM tri),
-         bcoc AS (SELECT
-             sum(CASE WHEN cb = 1 THEN 1 ELSE 0 END) AS b_n1,
-             sum(CASE WHEN cb = 2 THEN 1 ELSE 0 END) AS b_n2,
-             sum(CASE WHEN cb = 3 THEN 1 ELSE 0 END) AS b_n3,
-             sum(CASE WHEN cb = 4 THEN 1 ELSE 0 END) AS b_n4
-           FROM contb),
-         rawd AS (
-           SELECT t_n1, t_n2, t_n3, t_n4, b_n1, b_n2, b_n3, b_n4,
-             1.0 - (2.0 * (t_n1 / (t_n1 + 2.0 * t_n2))) * (t_n2 / t_n1)
-               AS rtd1,
-             2.0 - (3.0 * (t_n1 / (t_n1 + 2.0 * t_n2))) * (t_n3 / t_n2)
-               AS rtd2,
-             3.0 - (4.0 * (t_n1 / (t_n1 + 2.0 * t_n2))) * (t_n4 / t_n3)
-               AS rtd3,
-             1.0 - (2.0 * (b_n1 / (b_n1 + 2.0 * b_n2))) * (b_n2 / b_n1)
-               AS rbd1,
-             2.0 - (3.0 * (b_n1 / (b_n1 + 2.0 * b_n2))) * (b_n3 / b_n2)
-               AS rbd2,
-             3.0 - (4.0 * (b_n1 / (b_n1 + 2.0 * b_n2))) * (b_n4 / b_n3)
-               AS rbd3
-           FROM tcoc CROSS JOIN bcoc),
-         disc AS (
-           SELECT
-             CASE WHEN t_n1 > 0 AND t_n2 > 0 AND t_n3 > 0 AND t_n4 > 0
-                   AND rtd1 > 0.0 AND rtd2 > 0.0 AND rtd3 > 0.0
-                  THEN rtd1 ELSE 0.75 END AS td1,
-             CASE WHEN t_n1 > 0 AND t_n2 > 0 AND t_n3 > 0 AND t_n4 > 0
-                   AND rtd1 > 0.0 AND rtd2 > 0.0 AND rtd3 > 0.0
-                  THEN rtd2 ELSE 0.75 END AS td2,
-             CASE WHEN t_n1 > 0 AND t_n2 > 0 AND t_n3 > 0 AND t_n4 > 0
-                   AND rtd1 > 0.0 AND rtd2 > 0.0 AND rtd3 > 0.0
-                  THEN rtd3 ELSE 0.75 END AS td3,
-             CASE WHEN b_n1 > 0 AND b_n2 > 0 AND b_n3 > 0 AND b_n4 > 0
-                   AND rbd1 > 0.0 AND rbd2 > 0.0 AND rbd3 > 0.0
-                  THEN rbd1 ELSE 0.75 END AS bd1,
-             CASE WHEN b_n1 > 0 AND b_n2 > 0 AND b_n3 > 0 AND b_n4 > 0
-                   AND rbd1 > 0.0 AND rbd2 > 0.0 AND rbd3 > 0.0
-                  THEN rbd2 ELSE 0.75 END AS bd2,
-             CASE WHEN b_n1 > 0 AND b_n2 > 0 AND b_n3 > 0 AND b_n4 > 0
-                   AND rbd1 > 0.0 AND rbd2 > 0.0 AND rbd3 > 0.0
-                  THEN rbd3 ELSE 0.75 END AS bd3
-           FROM rawd),
-         sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
-                        (SELECT count(*) FROM contu) AS wtypes,
-                        (SELECT count(DISTINCT tk) FROM
-                          (SELECT unnest(w) AS tk FROM tws) u) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM ws) p),
+         $knContinuationCtes,
+         $mknDiscountCtes,
+         $knScaCte,
+         ${knStrCte("ws")},
          kj AS (
            SELECT s.doc_id, tri.c3, kctx2.cctx, kctx2.t2, contb.cb,
              kmid.nmid, kmid.ndw3, contu.cu, sca.b, sca.wtypes, sca.v
@@ -1744,30 +1345,7 @@ private[graft] object TextEntries {
            SELECT doc_id, count(*) AS n_trigrams,
              round(sum(ln(p3)), 4) AS logprob_sum
            FROM kp3 GROUP BY 1),
-         kdoc AS (
-           SELECT d.doc_id,
-             (CAST(round(-ksc.logprob_sum * 10000) AS BIGINT) * 2
-               + ksc.n_trigrams) // (ksc.n_trigrams * 2) / 10000.0 AS avg_nll
-           FROM (SELECT DISTINCT doc_id FROM documents) d
-           LEFT JOIN ksc USING (doc_id)),
-         khist AS (SELECT avg_nll, count(*) AS cnt FROM kdoc
-                   WHERE avg_nll IS NOT NULL GROUP BY 1),
-         kcum AS (SELECT avg_nll, sum(cnt) OVER (ORDER BY avg_nll
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                  FROM khist),
-         ktot AS (SELECT count(*) AS n_total FROM kdoc
-                  WHERE avg_nll IS NOT NULL),
-         kcuts AS (SELECT
-             min(CASE WHEN cum * 3 >= n_total THEN avg_nll END) AS cut_head,
-             min(CASE WHEN cum * 3 >= n_total * 2 THEN avg_nll END) AS cut_middle
-           FROM kcum CROSS JOIN ktot),
-         kbuck AS (
-           SELECT doc_id,
-             CASE WHEN avg_nll IS NULL THEN 'unscored'
-                  WHEN avg_nll <= cut_head THEN 'head'
-                  WHEN avg_nll <= cut_middle THEN 'middle'
-                  ELSE 'tail' END AS kn_bucket
-           FROM kdoc CROSS JOIN kcuts),
+         $knBucketCtes,
          mj AS (
            SELECT s.doc_id, tri.c3, mctx2.cctx, mctx2.tn1, mctx2.tn2,
              mctx2.tn3, contb.cb, mmid.nmid, mmid.bn1, mmid.bn2, mmid.bn3,
@@ -1830,33 +1408,7 @@ private[graft] object TextEntries {
       // cutoff pick verbatim from perplexity_bucket_assign's oracle, the
       // KN ladder verbatim from ngram_lm_kn's), then the doc-keyed
       // crosstab — the whole decision artifact second-engine-checked
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM tws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
+      raw"""WITH $crossModelCtes,
          bsc AS (
            SELECT bi.doc_id,
              round(sum(coalesce(m.logp,
@@ -1890,71 +1442,22 @@ private[graft] object TextEntries {
                   WHEN avg_nll <= cut_middle THEN 'middle'
                   ELSE 'tail' END AS bigram_bucket
            FROM bdoc CROSS JOIN bcuts),
-         ttr AS (
-           SELECT w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM tws) p),
+         $knTtrCte,
          tri AS (SELECT w1, w2, w3, count(*) AS c3 FROM ttr GROUP BY 1, 2, 3),
-         ctx2 AS (SELECT w1, w2, sum(c3) AS cctx, count(*) AS t2
-                  FROM tri GROUP BY 1, 2),
-         contb AS (SELECT w2, w3, count(*) AS cb FROM tri GROUP BY 1, 2),
-         mid AS (SELECT w2, sum(cb) AS nmid, count(*) AS ndw3
-                 FROM contb GROUP BY 1),
+         $knCtxCtes,
          tbt AS (SELECT DISTINCT w1, w2 FROM tbi),
-         contu AS (SELECT w2, count(*) AS cu FROM tbt GROUP BY 1),
+         $knContuCte,
          sca AS (SELECT (SELECT sum(cu) FROM contu) AS b,
                         (SELECT count(*) FROM contu) AS wtypes,
                         (SELECT v FROM v) AS v),
-         str AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2, w[i + 2] AS w3 FROM (
-             SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-             FROM ws) p),
-         joined AS (
-           SELECT s.doc_id, tri.c3, ctx2.cctx, ctx2.t2, contb.cb,
-             mid.nmid, mid.ndw3, contu.cu, sca.b, sca.wtypes, sca.v
-           FROM str s
-           LEFT JOIN tri ON s.w1 = tri.w1 AND s.w2 = tri.w2 AND s.w3 = tri.w3
-           LEFT JOIN ctx2 ON s.w1 = ctx2.w1 AND s.w2 = ctx2.w2
-           LEFT JOIN contb ON s.w2 = contb.w2 AND s.w3 = contb.w3
-           LEFT JOIN mid ON s.w2 = mid.w2
-           LEFT JOIN contu ON s.w3 = contu.w2
-           CROSS JOIN sca),
-         p1t AS (SELECT *, (greatest(coalesce(cu, 0) - 0.75, 0.0)
-                   + (0.75 * wtypes) / v) / b AS p1 FROM joined),
-         p2t AS (SELECT *, CASE WHEN nmid IS NULL THEN p1
-                   ELSE (greatest(coalesce(cb, 0) - 0.75, 0.0)
-                     + (0.75 * ndw3) * p1) / nmid END AS p2 FROM p1t),
-         p3t AS (SELECT *, CASE WHEN cctx IS NULL THEN p2
-                   ELSE (greatest(coalesce(c3, 0) - 0.75, 0.0)
-                     + (0.75 * t2) * p2) / cctx END AS p3 FROM p2t),
+         ${knStrCte("ws")},
+         ${knJoinCte("joined")},
+         $knRungCtes,
          ksc AS (
            SELECT doc_id, count(*) AS n_trigrams,
              round(sum(ln(p3)), 4) AS logprob_sum
            FROM p3t GROUP BY 1),
-         kdoc AS (
-           SELECT d.doc_id,
-             (CAST(round(-ksc.logprob_sum * 10000) AS BIGINT) * 2
-               + ksc.n_trigrams) // (ksc.n_trigrams * 2) / 10000.0 AS avg_nll
-           FROM (SELECT DISTINCT doc_id FROM documents) d
-           LEFT JOIN ksc USING (doc_id)),
-         khist AS (SELECT avg_nll, count(*) AS cnt FROM kdoc
-                   WHERE avg_nll IS NOT NULL GROUP BY 1),
-         kcum AS (SELECT avg_nll, sum(cnt) OVER (ORDER BY avg_nll
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                  FROM khist),
-         ktot AS (SELECT count(*) AS n_total FROM kdoc
-                  WHERE avg_nll IS NOT NULL),
-         kcuts AS (SELECT
-             min(CASE WHEN cum * 3 >= n_total THEN avg_nll END) AS cut_head,
-             min(CASE WHEN cum * 3 >= n_total * 2 THEN avg_nll END) AS cut_middle
-           FROM kcum CROSS JOIN ktot),
-         kbuck AS (
-           SELECT doc_id,
-             CASE WHEN avg_nll IS NULL THEN 'unscored'
-                  WHEN avg_nll <= cut_head THEN 'head'
-                  WHEN avg_nll <= cut_middle THEN 'middle'
-                  ELSE 'tail' END AS kn_bucket
-           FROM kdoc CROSS JOIN kcuts)
+         $knBucketCtes
          SELECT bigram_bucket, kn_bucket, count(*) AS n_docs
          FROM bbuck JOIN kbuck USING (doc_id)
          GROUP BY 1, 2""",
@@ -1963,43 +1466,8 @@ private[graft] object TextEntries {
       // cutoffs picked off the cumulative 4dp-nll histogram with
       // cross-multiplied integer comparisons (3·cum ≥ n), value-based
       // bucket membership (ties share a bucket in both engines)
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM tws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
-         sc AS (
-           SELECT bi.doc_id, count(*) AS n_bigrams,
-             cast(sum(CASE WHEN m.logp IS NULL THEN 1 ELSE 0 END) AS bigint) AS n_oov,
-             round(sum(coalesce(m.logp,
-               ln(1.0 / (coalesce(c1.c1, 0) + v.v)))), 4) AS logprob_sum
-           FROM bi
-           LEFT JOIN model m ON bi.w1 = m.w1 AND bi.w2 = m.w2
-           LEFT JOIN c1 ON bi.w1 = c1.w1
-           CROSS JOIN v
-           GROUP BY 1),
+      raw"""WITH $crossModelCtes,
+         ${backoffScoreCte("sc", "bi")},
          doc_sc AS (
            SELECT d.doc_id,
              coalesce(sc.n_bigrams, 0) AS n_bigrams,
@@ -2007,17 +1475,7 @@ private[graft] object TextEntries {
              round(-sc.logprob_sum / sc.n_bigrams, 4) AS avg_nll
            FROM (SELECT DISTINCT doc_id FROM documents) d
            LEFT JOIN sc USING (doc_id)),
-         hist AS (SELECT avg_nll, count(*) AS cnt FROM doc_sc
-                  WHERE avg_nll IS NOT NULL GROUP BY 1),
-         cum AS (SELECT avg_nll, sum(cnt) OVER (ORDER BY avg_nll
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                 FROM hist),
-         tot AS (SELECT count(*) AS n_total FROM doc_sc
-                 WHERE avg_nll IS NOT NULL),
-         cuts AS (SELECT
-             min(CASE WHEN cum * 3 >= n_total THEN avg_nll END) AS cut_head,
-             min(CASE WHEN cum * 3 >= n_total * 2 THEN avg_nll END) AS cut_middle
-           FROM cum CROSS JOIN tot)
+         ${tertileCutCtes("doc_sc")}
          SELECT doc_id, n_bigrams, n_oov, avg_nll,
            CASE WHEN avg_nll IS NULL THEN 'unscored'
                 WHEN avg_nll <= cut_head THEN 'head'
@@ -2026,43 +1484,8 @@ private[graft] object TextEntries {
          FROM doc_sc CROSS JOIN cuts""",
     "perplexity_buckets" ->
       // same replay rolled up per bucket, with the two global cutoffs
-      """WITH tws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents WHERE length(source) = 4),
-         ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         tbi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM tws) p),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         c12 AS (SELECT w1, w2, count(*) AS c12 FROM tbi GROUP BY 1, 2),
-         c1 AS (SELECT w1, count(*) AS c1 FROM tbi GROUP BY 1),
-         v AS (SELECT count(DISTINCT tk) AS v
-               FROM (SELECT unnest(w) AS tk FROM tws) u),
-         model AS (
-           SELECT w1, w2, ln((c12 + 1.0) / (c1 + 1.0 * v)) AS logp
-           FROM c12 JOIN c1 USING (w1) CROSS JOIN v),
-         sc AS (
-           SELECT bi.doc_id, count(*) AS n_bigrams,
-             cast(sum(CASE WHEN m.logp IS NULL THEN 1 ELSE 0 END) AS bigint) AS n_oov,
-             round(sum(coalesce(m.logp,
-               ln(1.0 / (coalesce(c1.c1, 0) + v.v)))), 4) AS logprob_sum
-           FROM bi
-           LEFT JOIN model m ON bi.w1 = m.w1 AND bi.w2 = m.w2
-           LEFT JOIN c1 ON bi.w1 = c1.w1
-           CROSS JOIN v
-           GROUP BY 1),
+      raw"""WITH $crossModelCtes,
+         ${backoffScoreCte("sc", "bi")},
          doc_sc AS (
            SELECT d.doc_id,
              coalesce(sc.n_bigrams, 0) AS n_bigrams,
@@ -2070,17 +1493,7 @@ private[graft] object TextEntries {
              round(-sc.logprob_sum / sc.n_bigrams, 4) AS avg_nll
            FROM (SELECT DISTINCT doc_id FROM documents) d
            LEFT JOIN sc USING (doc_id)),
-         hist AS (SELECT avg_nll, count(*) AS cnt FROM doc_sc
-                  WHERE avg_nll IS NOT NULL GROUP BY 1),
-         cum AS (SELECT avg_nll, sum(cnt) OVER (ORDER BY avg_nll
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-                 FROM hist),
-         tot AS (SELECT count(*) AS n_total FROM doc_sc
-                 WHERE avg_nll IS NOT NULL),
-         cuts AS (SELECT
-             min(CASE WHEN cum * 3 >= n_total THEN avg_nll END) AS cut_head,
-             min(CASE WHEN cum * 3 >= n_total * 2 THEN avg_nll END) AS cut_middle
-           FROM cum CROSS JOIN tot),
+         ${tertileCutCtes("doc_sc")},
          asg AS (
            SELECT doc_id, n_bigrams, n_oov, avg_nll,
              CASE WHEN avg_nll IS NULL THEN 'unscored'
@@ -2096,16 +1509,8 @@ private[graft] object TextEntries {
            max(cut_head) AS cut_head, max(cut_middle) AS cut_middle
          FROM asg GROUP BY bucket""",
     "ngram_lm_top_bigrams" ->
-      """WITH ws AS (
-           SELECT doc_id,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         bi AS (
-           SELECT doc_id, w[i] AS w1, w[i + 1] AS w2 FROM (
-             SELECT doc_id, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
+      raw"""WITH ${wsCte("ws", "documents")},
+         ${bigramCte("bi", "ws")},
          c12 AS (SELECT w1, w2, count(*) AS c12 FROM bi GROUP BY 1, 2),
          c1 AS (SELECT w1, count(*) AS c1 FROM bi GROUP BY 1),
          v AS (SELECT count(DISTINCT tk) AS v
@@ -2238,25 +1643,7 @@ private[graft] object TextEntries {
          FROM t""",
     "gopher_quality_rules" ->
       // every ratio in cross-multiplied integer form — no float anywhere
-      """WITH t AS (
-           SELECT doc_id, coalesce(text, '') AS text,
-             list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'),
-                         x -> x <> '') AS ws,
-             string_split(coalesce(text, ''), chr(10)) AS lines
-           FROM documents),
-         m AS (
-           SELECT doc_id,
-             len(ws) AS n_words,
-             length(regexp_replace(text, '\s+', '', 'g')) AS n_chars,
-             length(text) - length(replace(text, '#', '')) AS hashes,
-             (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses,
-             len(lines) AS n_lines,
-             len(list_filter(lines, l -> regexp_matches(l, '^\s*[-*•]'))) AS bullets,
-             len(list_filter(lines, l -> regexp_matches(l, '\.\.\.\s*$'))) AS ell_lines,
-             len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS alpha_w,
-             len(list_intersect(list_distinct(ws),
-               ['the','be','to','of','and','that','have','with'])) AS stop_hits
-           FROM t)
+      raw"""WITH $gopherRuleCtes
          SELECT doc_id,
            n_words >= 50 AND n_words <= 100000 AS word_count,
            n_chars >= n_words * 3 AND n_chars <= n_words * 10 AS mean_word_len,
@@ -2274,25 +1661,7 @@ private[graft] object TextEntries {
              AND (stop_hits >= 2) AS pass_all
          FROM m""",
     "gopher_rule_stats" ->
-      """WITH t AS (
-           SELECT doc_id, coalesce(text, '') AS text,
-             list_filter(regexp_split_to_array(trim(lower(coalesce(text, ''))), '\s+'),
-                         x -> x <> '') AS ws,
-             string_split(coalesce(text, ''), chr(10)) AS lines
-           FROM documents),
-         m AS (
-           SELECT doc_id,
-             len(ws) AS n_words,
-             length(regexp_replace(text, '\s+', '', 'g')) AS n_chars,
-             length(text) - length(replace(text, '#', '')) AS hashes,
-             (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses,
-             len(lines) AS n_lines,
-             len(list_filter(lines, l -> regexp_matches(l, '^\s*[-*•]'))) AS bullets,
-             len(list_filter(lines, l -> regexp_matches(l, '\.\.\.\s*$'))) AS ell_lines,
-             len(list_filter(ws, w -> regexp_matches(w, '[a-z]'))) AS alpha_w,
-             len(list_intersect(list_distinct(ws),
-               ['the','be','to','of','and','that','have','with'])) AS stop_hits
-           FROM t),
+      raw"""WITH $gopherRuleCtes,
          flags AS (
            SELECT
              n_words >= 50 AND n_words <= 100000 AS word_count,
@@ -2352,33 +1721,7 @@ private[graft] object TextEntries {
     "dsir_weights" ->
       // full DSIR replay: same tokenize, same md5-prefix buckets, same
       // add-1-over-the-bucket-space smoothing, round-the-SUM discipline
-      """WITH ws AS (
-           SELECT doc_id, length(source) = 4 AS tgt,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         uni AS (SELECT doc_id, tgt, unnest(w) AS f FROM ws),
-         bi AS (
-           SELECT doc_id, tgt, w[i] || ' ' || w[i + 1] AS f FROM (
-             SELECT doc_id, tgt, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         feats AS (
-           SELECT doc_id, tgt,
-             ('0x' || substr(md5(f), 1, 4))::BIGINT % 1024 AS b
-           FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) u),
-         hist AS (
-           SELECT doc_id, tgt, b, count(*) AS n FROM feats GROUP BY 1, 2, 3),
-         bucket AS (
-           SELECT b, sum(n) AS cr,
-             sum(CASE WHEN tgt THEN n ELSE 0 END) AS ct
-           FROM hist GROUP BY 1),
-         tot AS (SELECT sum(cr) AS r, sum(ct) AS t FROM bucket),
-         ratio AS (
-           SELECT b,
-             ln((ct + 1.0) / (t + 1024.0)) - ln((cr + 1.0) / (r + 1024.0))
-               AS logratio
-           FROM bucket CROSS JOIN tot),
+      raw"""WITH $dsirRatioCtes,
          sc AS (
            SELECT doc_id, CAST(sum(n) AS BIGINT) AS n_feats,
              round(sum(n * logratio), 4) AS weight
@@ -2389,36 +1732,8 @@ private[graft] object TextEntries {
          LEFT JOIN sc USING (doc_id)""",
     "dsir_mix_shift" ->
       // per-source census over the dsir_weights body
-      """WITH ws AS (
-           SELECT doc_id, length(source) = 4 AS tgt,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         uni AS (SELECT doc_id, tgt, unnest(w) AS f FROM ws),
-         bi AS (
-           SELECT doc_id, tgt, w[i] || ' ' || w[i + 1] AS f FROM (
-             SELECT doc_id, tgt, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         feats AS (
-           SELECT doc_id, tgt,
-             ('0x' || substr(md5(f), 1, 4))::BIGINT % 1024 AS b
-           FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) u),
-         hist AS (
-           SELECT doc_id, tgt, b, count(*) AS n FROM feats GROUP BY 1, 2, 3),
-         bucket AS (
-           SELECT b, sum(n) AS cr,
-             sum(CASE WHEN tgt THEN n ELSE 0 END) AS ct
-           FROM hist GROUP BY 1),
-         tot AS (SELECT sum(cr) AS r, sum(ct) AS t FROM bucket),
-         ratio AS (
-           SELECT b,
-             ln((ct + 1.0) / (t + 1024.0)) - ln((cr + 1.0) / (r + 1024.0))
-               AS logratio
-           FROM bucket CROSS JOIN tot),
-         sc AS (
-           SELECT doc_id, round(sum(n * logratio), 4) AS weight
-           FROM hist JOIN ratio USING (b) GROUP BY 1),
+      raw"""WITH $dsirRatioCtes,
+         $dsirWeightCte,
          w AS (
            SELECT d.doc_id, sc.weight,
              coalesce(sc.weight >= 0.0, false) AS keep
@@ -2433,36 +1748,8 @@ private[graft] object TextEntries {
       // the dsir_weights body + the exact Gumbel-key replay: u from the
       // same md5-prefix arithmetic ((v + 0.5)/2^32 is exact binary, so u
       // is the identical double), key rounded at 4dp, doc_id tiebreak
-      """WITH ws AS (
-           SELECT doc_id, length(source) = 4 AS tgt,
-             list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                         x -> x <> '') AS w
-           FROM documents),
-         uni AS (SELECT doc_id, tgt, unnest(w) AS f FROM ws),
-         bi AS (
-           SELECT doc_id, tgt, w[i] || ' ' || w[i + 1] AS f FROM (
-             SELECT doc_id, tgt, w,
-               unnest(generate_series(1, len(w) - 1)) AS i
-             FROM ws) p),
-         feats AS (
-           SELECT doc_id, tgt,
-             ('0x' || substr(md5(f), 1, 4))::BIGINT % 1024 AS b
-           FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi) u),
-         hist AS (
-           SELECT doc_id, tgt, b, count(*) AS n FROM feats GROUP BY 1, 2, 3),
-         bucket AS (
-           SELECT b, sum(n) AS cr,
-             sum(CASE WHEN tgt THEN n ELSE 0 END) AS ct
-           FROM hist GROUP BY 1),
-         tot AS (SELECT sum(cr) AS r, sum(ct) AS t FROM bucket),
-         ratio AS (
-           SELECT b,
-             ln((ct + 1.0) / (t + 1024.0)) - ln((cr + 1.0) / (r + 1024.0))
-               AS logratio
-           FROM bucket CROSS JOIN tot),
-         sc AS (
-           SELECT doc_id, round(sum(n * logratio), 4) AS weight
-           FROM hist JOIN ratio USING (b) GROUP BY 1),
+      raw"""WITH $dsirRatioCtes,
+         $dsirWeightCte,
          keyed AS (
            SELECT doc_id, weight,
              round(weight - ln(-ln(
@@ -2512,15 +1799,15 @@ private[graft] object TextEntries {
     "split_leakage" ->
       // same md5-prefix bucket arithmetic as dataset_split; duplicate
       // content groups + the distinct splits they span
-      """WITH u AS (
+      raw"""WITH u AS (
            SELECT doc_id, text FROM documents
            UNION ALL
            SELECT doc_id + 5000000, text FROM documents WHERE doc_id < 5),
          s AS (
            SELECT doc_id, text,
-             CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
+             CASE WHEN $docMd5Prefix
                     % 100 < 80 THEN 'train'
-                  WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
+                  WHEN $docMd5Prefix
                     % 100 < 90 THEN 'val'
                   ELSE 'test' END AS split
            FROM u),
@@ -2716,10 +2003,10 @@ private[graft] object TextEntries {
     "dataset_split" ->
       // same md5-prefix bucket arithmetic as Sample.hashSplit: bucket in
       // [0,100), boundaries at 80/90
-      """SELECT
-           CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
+      raw"""SELECT
+           CASE WHEN $docMd5Prefix
                   % 100 < 80 THEN 'train'
-                WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT
+                WHEN $docMd5Prefix
                   % 100 < 90 THEN 'val'
                 ELSE 'test' END AS split,
            lang,
@@ -2729,11 +2016,7 @@ private[graft] object TextEntries {
          FROM documents GROUP BY 1, 2""",
     "token_budget_sample" ->
       // same md5 draw order, same exclusive running sum, same budgets
-      """WITH t AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
-             md5(CAST(doc_id AS VARCHAR)) AS ok
-           FROM documents),
+      raw"""WITH $mixtureDocsCte,
          w AS (
            SELECT *, coalesce(sum(n_tokens) OVER (
                PARTITION BY lang ORDER BY ok, doc_id
@@ -2749,11 +2032,7 @@ private[graft] object TextEntries {
       // allocation) AND the md5-ordered exclusive-running-sum draw, both
       // replayed; sqrt is IEEE-correctly-rounded in both engines so the
       // budgets agree bit-for-bit
-      """WITH t AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+'))::BIGINT AS n_tokens,
-             md5(CAST(doc_id AS VARCHAR)) AS ok
-           FROM documents),
+      raw"""WITH $mixtureDocsCte,
          m AS (SELECT lang, CAST(sum(n_tokens) AS DOUBLE) AS mass
                FROM t GROUP BY lang),
          wt AS (SELECT lang, sqrt(mass) AS w FROM m),
@@ -2788,7 +2067,7 @@ private[graft] object TextEntries {
       // so the equality IS the conservation proof, and the scrub ledger
       // (tokens_before − tokens_removed entering chunking) pins the two
       // new stage edges.
-      """WITH base AS (
+      raw"""WITH base AS (
            SELECT doc_id,
              CASE WHEN doc_id BETWEEN 20 AND 39
                THEN text || ' common license boilerplate notice follows' ||
@@ -2810,15 +2089,7 @@ private[graft] object TextEntries {
            FROM base WHERE doc_id >= 10 AND doc_id < 20
            UNION ALL
            SELECT doc_id, text FROM mb),
-         norm AS (
-           SELECT doc_id,
-             lower(trim(regexp_replace(regexp_replace(nfc_normalize(text),
-               '\s+', ' ', 'g'), '[\x00-\x1f]', '', 'g'))) AS t
-           FROM src),
-         ded AS (
-           SELECT doc_id, t,
-             row_number() OVER (PARTITION BY md5(t) ORDER BY doc_id) AS rn
-           FROM norm),
+         ${normDedCtes("src")},
          kept AS (
            SELECT doc_id, t FROM ded
            WHERE rn = 1
@@ -2851,32 +2122,11 @@ private[graft] object TextEntries {
                i -> array_to_string(toks[i:i+2], ' '))) AS sh
            FROM (SELECT doc_id, t,
                    string_split_regex(trim(t), '\s+') AS toks FROM kept)),
-         nd_losers AS (
-           SELECT DISTINCT b.doc_id FROM ksh a JOIN ksh b
-             ON a.blk = b.blk AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh)) * 1.0
-                 / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
+         $nearDupLosersCte,
          nd AS (
            SELECT doc_id, t, toks FROM ksh
            WHERE doc_id NOT IN (SELECT doc_id FROM nd_losers)),
-         winstr AS (
-           SELECT doc_id, n, st, array_to_string(toks[st:st+7], ' ') AS wstr
-           FROM (SELECT doc_id, toks, len(toks) AS n,
-                   CAST(unnest(generate_series(1, greatest(len(toks) - 7, 1)))
-                     AS INT) AS st
-                 FROM nd)),
-         rep AS (SELECT wstr FROM winstr GROUP BY wstr HAVING count(*) >= 2),
-         repst AS (
-           SELECT doc_id, st, least(st + 7, n) AS en
-           FROM winstr WHERE wstr IN (SELECT wstr FROM rep)),
-         post AS (
-           SELECT doc_id, p, toks[p] AS tok
-           FROM (SELECT doc_id, toks,
-                   CAST(unnest(generate_series(1, len(toks))) AS INT) AS p
-                 FROM nd)),
-         covered AS (
-           SELECT DISTINCT x.doc_id, x.p FROM post x JOIN repst r
-             ON r.doc_id = x.doc_id AND x.p BETWEEN r.st AND r.en),
+         ${scrubCoverCtes("nd")},
          scrub AS (
            SELECT x.doc_id, string_agg(x.tok, ' ' ORDER BY x.p) AS t
            FROM post x LEFT JOIN covered cv
@@ -2929,7 +2179,7 @@ private[graft] object TextEntries {
       // filter → analytic chunk-sum chain as the corpus_pipeline oracle
       // (near-dup/scrub off, so the neardup/scrub ledger columns read
       // pass-through: docs_after_neardup = docs_kept, removed = 0)
-      """WITH corpus AS (
+      raw"""WITH corpus AS (
            SELECT doc_id,
              CASE WHEN doc_id BETWEEN 40 AND 59
                THEN 'Subscribe to our newsletter today!' || chr(10) || text
@@ -2959,24 +2209,8 @@ private[graft] object TextEntries {
                chr(10) ORDER BY n.idx), '') AS text
            FROM lc_normed n LEFT JOIN lc_rep r ON n.lnorm = r.lnorm
            GROUP BY n.doc_id),
-         norm AS (
-           SELECT doc_id,
-             lower(trim(regexp_replace(regexp_replace(nfc_normalize(text),
-               '\s+', ' ', 'g'), '[\x00-\x1f]', '', 'g'))) AS t
-           FROM src),
-         ded AS (
-           SELECT doc_id, t,
-             row_number() OVER (PARTITION BY md5(t) ORDER BY doc_id) AS rn
-           FROM norm),
-         kept AS (
-           SELECT doc_id, t FROM ded
-           WHERE rn = 1
-             AND length(t) >= 100
-             AND length(regexp_replace(t, '[^0-9]', '', 'g')) * 1.0
-                 / greatest(length(t), 1) <= 0.2
-             AND length(regexp_replace(t, '\s+', '', 'g')) * 1.0
-                 / greatest(len(string_split_regex(trim(t), '\s+')), 1)
-                 BETWEEN 3 AND 12),
+         ${normDedCtes("src")},
+         $keptCte,
          ktoks AS (
            SELECT doc_id, string_split_regex(trim(t), '\s+') AS toks
            FROM kept),

@@ -57,14 +57,7 @@ private[graft] object TokenEntries {
            $wpVocabValues
          ) v(id, piece)),
          corpus AS ($corpusCte),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM (SELECT doc_id, string_split_regex(text, '\\s+') AS ws
-                   FROM corpus) u0) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
+         ${wordPosCtes("corpus")},
          greedy AS (
            SELECT w, length(w) AS len, CAST(0 AS BIGINT) AS pos,
              CAST([] AS BIGINT[]) AS ids, FALSE AS failed
@@ -718,37 +711,11 @@ private[graft] object TokenEntries {
       // the bpe_token_count recursion (same pinned merge table) over the
       // plain corpus, rolled up per lang; ratios divide the exact integer
       // sums (identical doubles in any IEEE engine), zero-guard via nullif
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         words AS (
-           SELECT doc_id, w, count(*) AS n_occ FROM (
-             SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS w
-             FROM documents) u WHERE w <> '' GROUP BY doc_id, w),
-         dw AS (SELECT DISTINCT w FROM words),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         counts AS (
-           SELECT w, len(string_split(s, ',')) - 2 AS n_tok
-           FROM rec WHERE r = 16),
+      raw"""WITH RECURSIVE
+         $bpeMergeCte,
+         ${bpeWordCountCtes("documents")},
+         $bpeRecCte,
+         $bpeCountsCte,
          perdoc AS (
            SELECT doc_id, sum(n_occ * n_tok) AS n_bpe, sum(n_occ) AS n_w
            FROM words JOIN counts USING (w) GROUP BY doc_id),
@@ -778,49 +745,12 @@ private[graft] object TokenEntries {
       // stripped. The final LEFT JOIN keeps a (doc_id, 0, 0) row for a
       // doc with zero words — matching the engine, which projects over
       // every doc
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT * FROM (VALUES
-             (9000001, 'caf' || chr(233) || ' d' || chr(233) || 'j' ||
-                       chr(224) || ' na' || chr(239) || 've entr' ||
-                       chr(233) || 'e'),
-             (9000002, chr(252) || 'ber stra' || chr(223) || 'e gr' ||
-                       chr(246) || chr(223) || 'er'),
-             (9000003, chr(27169) || chr(22411) || ' ' || chr(35757) ||
-                       chr(32451) || ' ' || chr(25968) || chr(25454))
-           ) AS t(doc_id, text)),
-         words AS (
-           SELECT doc_id, w, count(*) AS n_occ FROM (
-             SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS w
-             FROM corpus) u WHERE w <> '' GROUP BY doc_id, w),
-         dw AS (SELECT DISTINCT w FROM words),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         counts AS (
-           SELECT w, len(string_split(s, ',')) - 2 AS n_tok
-           FROM rec WHERE r = 16),
+      raw"""WITH RECURSIVE
+         $bpeMergeCte,
+         $bpePlantedCorpusCte,
+         ${bpeWordCountCtes("corpus")},
+         $bpeRecCte,
+         $bpeCountsCte,
          perdoc AS (
            SELECT doc_id, sum(n_occ * n_tok) AS n_bpe, sum(n_occ) AS n_w
            FROM words JOIN counts USING (w) GROUP BY doc_id)
@@ -838,66 +768,12 @@ private[graft] object TokenEntries {
       // expand in lockstep, and per-doc positions rebuild from
       // (word index, symbol index) — so the COMPLETE id sequence of every
       // doc, planted non-ASCII included, is checked token for token
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT * FROM (VALUES
-             (9000001, 'caf' || chr(233) || ' d' || chr(233) || 'j' ||
-                       chr(224) || ' na' || chr(239) || 've entr' ||
-                       chr(233) || 'e'),
-             (9000002, chr(252) || 'ber stra' || chr(223) || 'e gr' ||
-                       chr(246) || chr(223) || 'er'),
-             (9000003, chr(27169) || chr(22411) || ' ' || chr(35757) ||
-                       chr(32451) || ' ' || chr(25968) || chr(25454))
-           ) AS t(doc_id, text)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM corpus),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows)
+      raw"""WITH RECURSIVE
+         $bpeMergeCte,
+         $bpePlantedCorpusCte,
+         ${bpeWordPosCtes("corpus")},
+         $bpeRecCte,
+         $bpeSymbolIdsCtes
          SELECT doc_id,
            row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
              AS pos,
@@ -914,7 +790,7 @@ private[graft] object TokenEntries {
       // byte-fallback pieces, derived (not pinned) in both engines; the
       // VALUES rows keep their rank and shift by the 256 reserved ids
       // in SQL.
-      """SELECT CAST(i + 1 AS BIGINT) AS piece_id,
+      raw"""SELECT CAST(i + 1 AS BIGINT) AS piece_id,
            '<0x' || upper(printf('%02x', i)) || '>' AS piece,
            CAST(0 AS BIGINT) AS logp_scaled
          FROM range(0, 256) t(i)
@@ -922,25 +798,7 @@ private[graft] object TokenEntries {
          SELECT CAST(piece_id + 256 AS BIGINT) AS piece_id, piece,
            CAST(logp_scaled AS BIGINT) AS logp_scaled
          FROM (VALUES
-           (1,'a',-3464386),(2,'agg',-3440802),(3,'b',-10244307),
-           (4,'batch',-3401624),(5,'big',-3468941),(6,'c',-10244307),
-           (7,'column',-3404831),(8,'custom',-3404831),(9,'d',-10244307),
-           (10,'data',-3433063),(11,'dup',-6986211),(12,'e',-10244307),
-           (13,'er',-3404831),(14,'f',-10244307),(15,'fast',-3494376),
-           (16,'filter',-3405902),(17,'g',-10244307),(18,'group',-3466661),
-           (19,'h',-10244307),(20,'hash',-3391008),(21,'i',-10244307),
-           (22,'j',-10244307),(23,'join',-3373216),(24,'k',-10244307),
-           (25,'key',-3446367),(26,'l',-10244307),(27,'line',-3430863),
-           (28,'m',-10244307),(29,'merge',-3422110),(30,'n',-10244307),
-           (31,'o',-10244307),(32,'order',-3428667),(33,'p',-10244307),
-           (34,'part',-3466661),(35,'q',-10244307),(36,'query',-3474665),
-           (37,'r',-10244307),(38,'row',-3395241),(39,'s',-10244307),
-           (40,'scan',-3402692),(41,'slow',-3422110),(42,'small',-3411276),
-           (43,'sort',-3473518),(44,'spark',-3464386),(45,'stream',-3455336),
-           (46,'t',-10244307),(47,'table',-3433063),(48,'the',-3510906),
-           (49,'u',-10244307),(50,'v',-10244307),(51,'value',-3445252),
-           (52,'vector',-3428667),(53,'w',-10244307),(54,'window',-3457591),
-           (55,'y',-10244307)
+           $unigramVocabValues
          ) AS t(piece_id, piece, logp_scaled)""",
     "unigram_fertility" ->
       // the Viterbi DP again (same pinned piece table, same list-DP
@@ -950,64 +808,12 @@ private[graft] object TokenEntries {
       // count == emitted-id count here because the gate corpus is fully
       // covered (an unseen char would emit one id per UTF-8 byte); the
       // vocab CTE's ids are never consumed, only piece + lp
-      """WITH RECURSIVE
+      raw"""WITH RECURSIVE
          vocab AS (SELECT * FROM (VALUES
-           (1,'a',-3464386),(2,'agg',-3440802),(3,'b',-10244307),
-           (4,'batch',-3401624),(5,'big',-3468941),(6,'c',-10244307),
-           (7,'column',-3404831),(8,'custom',-3404831),(9,'d',-10244307),
-           (10,'data',-3433063),(11,'dup',-6986211),(12,'e',-10244307),
-           (13,'er',-3404831),(14,'f',-10244307),(15,'fast',-3494376),
-           (16,'filter',-3405902),(17,'g',-10244307),(18,'group',-3466661),
-           (19,'h',-10244307),(20,'hash',-3391008),(21,'i',-10244307),
-           (22,'j',-10244307),(23,'join',-3373216),(24,'k',-10244307),
-           (25,'key',-3446367),(26,'l',-10244307),(27,'line',-3430863),
-           (28,'m',-10244307),(29,'merge',-3422110),(30,'n',-10244307),
-           (31,'o',-10244307),(32,'order',-3428667),(33,'p',-10244307),
-           (34,'part',-3466661),(35,'q',-10244307),(36,'query',-3474665),
-           (37,'r',-10244307),(38,'row',-3395241),(39,'s',-10244307),
-           (40,'scan',-3402692),(41,'slow',-3422110),(42,'small',-3411276),
-           (43,'sort',-3473518),(44,'spark',-3464386),(45,'stream',-3455336),
-           (46,'t',-10244307),(47,'table',-3433063),(48,'the',-3510906),
-           (49,'u',-10244307),(50,'v',-10244307),(51,'value',-3445252),
-           (52,'vector',-3428667),(53,'w',-10244307),(54,'window',-3457591),
-           (55,'y',-10244307)
+           $unigramVocabValues
          ) v(id, piece, lp)),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM (SELECT doc_id, string_split_regex(text, '\s+') AS ws
-                   FROM documents) u0) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         dprec AS (
-           SELECT w, length(w) AS len, 0 AS pos,
-             [CAST(0 AS BIGINT)] AS dp, [CAST(0 AS INT)] AS bp
-           FROM dw
-           UNION ALL
-           SELECT r.w, r.len, r.pos + 1,
-             list_append(r.dp, greatest(
-               coalesce((r.dp[r.pos + 1] + coalesce(v1.lp, -20000000)), -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 2 THEN (r.dp[r.pos + 0] + v2.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 3 THEN (r.dp[r.pos - 1] + v3.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 4 THEN (r.dp[r.pos - 2] + v4.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 5 THEN (r.dp[r.pos - 3] + v5.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 6 THEN (r.dp[r.pos - 4] + v6.lp) END, -4611686018427387904))),
-             list_append(r.bp, CAST(((greatest(
-               coalesce((r.dp[r.pos + 1] + coalesce(v1.lp, -20000000)) * 8 + 1, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 2 THEN (r.dp[r.pos + 0] + v2.lp) * 8 + 2 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 3 THEN (r.dp[r.pos - 1] + v3.lp) * 8 + 3 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 4 THEN (r.dp[r.pos - 2] + v4.lp) * 8 + 4 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 5 THEN (r.dp[r.pos - 3] + v5.lp) * 8 + 5 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 6 THEN (r.dp[r.pos - 4] + v6.lp) * 8 + 6 END, -4611686018427387904)) % 8) + 8) % 8 AS INT))
-           FROM dprec r
-           LEFT JOIN vocab v1 ON v1.piece = substr(r.w, r.pos + 1, 1)
-           LEFT JOIN vocab v2 ON r.pos + 1 >= 2 AND v2.piece = substr(r.w, r.pos + 0, 2)
-           LEFT JOIN vocab v3 ON r.pos + 1 >= 3 AND v3.piece = substr(r.w, r.pos - 1, 3)
-           LEFT JOIN vocab v4 ON r.pos + 1 >= 4 AND v4.piece = substr(r.w, r.pos - 2, 4)
-           LEFT JOIN vocab v5 ON r.pos + 1 >= 5 AND v5.piece = substr(r.w, r.pos - 3, 5)
-           LEFT JOIN vocab v6 ON r.pos + 1 >= 6 AND v6.piece = substr(r.w, r.pos - 4, 6)
-           WHERE r.pos < r.len),
+         ${wordPosCtes("documents")},
+         $unigramDpCte,
          walk AS (
            SELECT w, bp, len AS pos, CAST(0 AS BIGINT) AS n_tok
            FROM dprec WHERE pos = len
@@ -1066,27 +872,9 @@ private[graft] object TokenEntries {
       // the identical byte-fallback expansion — and per-doc order
       // reassembles from word positions. Integer scores end to end — no
       // float comparison in either engine.
-      """WITH RECURSIVE
+      raw"""WITH RECURSIVE
          vocab AS (SELECT * FROM (VALUES
-           (1,'a',-3464386),(2,'agg',-3440802),(3,'b',-10244307),
-           (4,'batch',-3401624),(5,'big',-3468941),(6,'c',-10244307),
-           (7,'column',-3404831),(8,'custom',-3404831),(9,'d',-10244307),
-           (10,'data',-3433063),(11,'dup',-6986211),(12,'e',-10244307),
-           (13,'er',-3404831),(14,'f',-10244307),(15,'fast',-3494376),
-           (16,'filter',-3405902),(17,'g',-10244307),(18,'group',-3466661),
-           (19,'h',-10244307),(20,'hash',-3391008),(21,'i',-10244307),
-           (22,'j',-10244307),(23,'join',-3373216),(24,'k',-10244307),
-           (25,'key',-3446367),(26,'l',-10244307),(27,'line',-3430863),
-           (28,'m',-10244307),(29,'merge',-3422110),(30,'n',-10244307),
-           (31,'o',-10244307),(32,'order',-3428667),(33,'p',-10244307),
-           (34,'part',-3466661),(35,'q',-10244307),(36,'query',-3474665),
-           (37,'r',-10244307),(38,'row',-3395241),(39,'s',-10244307),
-           (40,'scan',-3402692),(41,'slow',-3422110),(42,'small',-3411276),
-           (43,'sort',-3473518),(44,'spark',-3464386),(45,'stream',-3455336),
-           (46,'t',-10244307),(47,'table',-3433063),(48,'the',-3510906),
-           (49,'u',-10244307),(50,'v',-10244307),(51,'value',-3445252),
-           (52,'vector',-3428667),(53,'w',-10244307),(54,'window',-3457591),
-           (55,'y',-10244307)
+           $unigramVocabValues
          ) v(id, piece, lp)),
          corpus AS (
            SELECT doc_id, text FROM documents
@@ -1096,42 +884,8 @@ private[graft] object TokenEntries {
              (9100002, chr(945) || chr(946) || chr(947) || ' sort'),
              (9100003, chr(128578) || ' data')
            ) t(doc_id, text)),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM (SELECT doc_id, string_split_regex(text, '\s+') AS ws
-                   FROM corpus) u0) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         dprec AS (
-           SELECT w, length(w) AS len, 0 AS pos,
-             [CAST(0 AS BIGINT)] AS dp, [CAST(0 AS INT)] AS bp
-           FROM dw
-           UNION ALL
-           SELECT r.w, r.len, r.pos + 1,
-             list_append(r.dp, greatest(
-               coalesce((r.dp[r.pos + 1] + coalesce(v1.lp, -20000000)), -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 2 THEN (r.dp[r.pos + 0] + v2.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 3 THEN (r.dp[r.pos - 1] + v3.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 4 THEN (r.dp[r.pos - 2] + v4.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 5 THEN (r.dp[r.pos - 3] + v5.lp) END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 6 THEN (r.dp[r.pos - 4] + v6.lp) END, -4611686018427387904))),
-             list_append(r.bp, CAST(((greatest(
-               coalesce((r.dp[r.pos + 1] + coalesce(v1.lp, -20000000)) * 8 + 1, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 2 THEN (r.dp[r.pos + 0] + v2.lp) * 8 + 2 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 3 THEN (r.dp[r.pos - 1] + v3.lp) * 8 + 3 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 4 THEN (r.dp[r.pos - 2] + v4.lp) * 8 + 4 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 5 THEN (r.dp[r.pos - 3] + v5.lp) * 8 + 5 END, -4611686018427387904),
-               coalesce(CASE WHEN r.pos + 1 >= 6 THEN (r.dp[r.pos - 4] + v6.lp) * 8 + 6 END, -4611686018427387904)) % 8) + 8) % 8 AS INT))
-           FROM dprec r
-           LEFT JOIN vocab v1 ON v1.piece = substr(r.w, r.pos + 1, 1)
-           LEFT JOIN vocab v2 ON r.pos + 1 >= 2 AND v2.piece = substr(r.w, r.pos + 0, 2)
-           LEFT JOIN vocab v3 ON r.pos + 1 >= 3 AND v3.piece = substr(r.w, r.pos - 1, 3)
-           LEFT JOIN vocab v4 ON r.pos + 1 >= 4 AND v4.piece = substr(r.w, r.pos - 2, 4)
-           LEFT JOIN vocab v5 ON r.pos + 1 >= 5 AND v5.piece = substr(r.w, r.pos - 3, 5)
-           LEFT JOIN vocab v6 ON r.pos + 1 >= 6 AND v6.piece = substr(r.w, r.pos - 4, 6)
-           WHERE r.pos < r.len),
+         ${wordPosCtes("corpus")},
+         $unigramDpCte,
          back AS (
            SELECT w, bp, len AS pos, CAST([] AS BIGINT[]) AS ids
            FROM dprec WHERE pos = len
@@ -1262,12 +1016,7 @@ private[graft] object TokenEntries {
       // rebuilt from the same pinned merge table bpe_merges gates: 256
       // base-byte rows plus one row per FIRST-occurrence concatenation
       // (min-rank rule — a duplicate concatenation never mints an id)
-      """WITH m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b))
+      raw"""WITH $bpeMergeCte
          SELECT CAST(i AS BIGINT) AS token_id, printf('%02x', i) AS symbol_hex
          FROM range(0, 256) t(i)
          UNION ALL
@@ -1284,18 +1033,7 @@ private[graft] object TokenEntries {
       // out so RE2-vs-Java class differences can't leak in; planted
       // non-ASCII docs (chr() codepoints) prove multi-byte UTF-8 survives
       // the id roundtrip as STRINGS, not just ids
-      """WITH corpus AS (
-           SELECT doc_id, text FROM documents
-           UNION ALL
-           SELECT * FROM (VALUES
-             (9000001, 'caf' || chr(233) || ' d' || chr(233) || 'j' ||
-                       chr(224) || ' na' || chr(239) || 've entr' ||
-                       chr(233) || 'e'),
-             (9000002, chr(252) || 'ber stra' || chr(223) || 'e gr' ||
-                       chr(246) || chr(223) || 'er'),
-             (9000003, chr(27169) || chr(22411) || ' ' || chr(35757) ||
-                       chr(32451) || ' ' || chr(25968) || chr(25454))
-           ) AS t(doc_id, text))
+      raw"""WITH $bpePlantedCorpusCte
          SELECT doc_id,
            regexp_replace(text, '[ \t\n\x0B\f\r]+', '', 'g') AS decoded
          FROM corpus""",
@@ -1308,80 +1046,8 @@ private[graft] object TokenEntries {
       // overflow test, LEAST(n, budget) increment); window offsets plus
       // per-doc token order rebuild every stream position. 92k tokens,
       // checked token for token
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows),
-         doctok AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
-               AS dpos,
-             token_id
-           FROM wordpos JOIN ids USING (w)),
-         dcount AS (SELECT doc_id, count(*) AS n FROM doctok GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n > 512 THEN LEAST(o.n, 512)
-                  ELSE p.used + LEAST(o.n, 512) END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      raw"""$packedStreamFrontCtes,
+         ${packedStreamPackCte(0)},
          offs AS (
            SELECT shard, doc_id, seq,
              coalesce(sum(n) OVER (PARTITION BY shard, seq ORDER BY doc_id
@@ -1397,80 +1063,8 @@ private[graft] object TokenEntries {
       // charges one extra budget slot per doc (used + n + 1 > 512),
       // offsets advance by n + 1, and each doc contributes one EOS row
       // (reserved id 272 = 256 base + 16 merges) at off + n
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows),
-         doctok AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
-               AS dpos,
-             token_id
-           FROM wordpos JOIN ids USING (w)),
-         dcount AS (SELECT doc_id, count(*) AS n FROM doctok GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) + 1 AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n + 1 > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n + 1 > 512 THEN LEAST(o.n, 512) + 1
-                  ELSE p.used + LEAST(o.n, 512) + 1 END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      raw"""$packedStreamFrontCtes,
+         ${packedStreamPackCte(1)},
          offs AS (
            SELECT shard, doc_id, n, seq,
              coalesce(sum(n + 1) OVER (PARTITION BY shard, seq ORDER BY doc_id
@@ -1489,80 +1083,8 @@ private[graft] object TokenEntries {
       // the eos-packer replay plus the document ordinal within each
       // (shard, seq) — seg_id is a pure function of the same recursive
       // packer state, one extra row_number in the offs CTE
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows),
-         doctok AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
-               AS dpos,
-             token_id
-           FROM wordpos JOIN ids USING (w)),
-         dcount AS (SELECT doc_id, count(*) AS n FROM doctok GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) + 1 AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n + 1 > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n + 1 > 512 THEN LEAST(o.n, 512) + 1
-                  ELSE p.used + LEAST(o.n, 512) + 1 END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      raw"""$packedStreamFrontCtes,
+         ${packedStreamPackCte(1)},
          offs AS (
            SELECT shard, doc_id, n, seq,
              coalesce(sum(n + 1) OVER (PARTITION BY shard, seq ORDER BY doc_id
@@ -1585,80 +1107,8 @@ private[graft] object TokenEntries {
       // the export_eos manifest replay with the two segment columns:
       // per-shard (seq, seg) count and the position-weighted segment
       // checksum over the same stream rebuild
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows),
-         doctok AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
-               AS dpos,
-             token_id
-           FROM wordpos JOIN ids USING (w)),
-         dcount AS (SELECT doc_id, count(*) AS n FROM doctok GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) + 1 AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n + 1 > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n + 1 > 512 THEN LEAST(o.n, 512) + 1
-                  ELSE p.used + LEAST(o.n, 512) + 1 END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      raw"""$packedStreamFrontCtes,
+         ${packedStreamPackCte(1)},
          offs AS (
            SELECT shard, doc_id, n, seq,
              coalesce(sum(n + 1) OVER (PARTITION BY shard, seq ORDER BY doc_id
@@ -1689,59 +1139,16 @@ private[graft] object TokenEntries {
       // computed with no BPE machinery at all — the bpe_decode contract:
       // decode(segment) must equal the raw doc with every \s+ run
       // deleted, byte for byte
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         words AS (
-           SELECT doc_id, w, count(*) AS n_occ FROM (
-             SELECT doc_id, unnest(string_split_regex(text, '\s+')) AS w
-             FROM documents) u WHERE w <> '' GROUP BY doc_id, w),
-         dw AS (SELECT DISTINCT w FROM words),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         counts AS (
-           SELECT w, len(string_split(s, ',')) - 2 AS n_tok
-           FROM rec WHERE r = 16),
+      raw"""WITH RECURSIVE
+         $bpeMergeCte,
+         ${bpeWordCountCtes("documents")},
+         $bpeRecCte,
+         $bpeCountsCte,
          dcount AS (
            SELECT doc_id, CAST(sum(n_occ * n_tok) AS BIGINT) AS n
            FROM words JOIN counts USING (w) GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) + 1 AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n + 1 > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n + 1 > 512 THEN LEAST(o.n, 512) + 1
-                  ELSE p.used + LEAST(o.n, 512) + 1 END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+         $packedStreamShardCtes,
+         ${packedStreamPackCte(1)},
          seg AS (
            SELECT shard, doc_id, n, seq,
              row_number() OVER (PARTITION BY shard, seq ORDER BY doc_id)
@@ -1756,80 +1163,8 @@ private[graft] object TokenEntries {
     "token_stream_export_eos" ->
       // the separator stream's export manifest: same chain, rolled up per
       // shard — the position-weighted checksum now pins every EOS slot
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows),
-         doctok AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
-               AS dpos,
-             token_id
-           FROM wordpos JOIN ids USING (w)),
-         dcount AS (SELECT doc_id, count(*) AS n FROM doctok GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) + 1 AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n + 1 > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n + 1 > 512 THEN LEAST(o.n, 512) + 1
-                  ELSE p.used + LEAST(o.n, 512) + 1 END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      raw"""$packedStreamFrontCtes,
+         ${packedStreamPackCte(1)},
          offs AS (
            SELECT shard, doc_id, n, seq,
              coalesce(sum(n + 1) OVER (PARTITION BY shard, seq ORDER BY doc_id
@@ -1852,80 +1187,8 @@ private[graft] object TokenEntries {
       // count, and the position-weighted checksum Σ (pos+1)·token_id
       // mod 1e9+7 — the gate proves the parquet write→read roundtrip
       // preserved every token AT its position
-      """WITH RECURSIVE
-         m AS (SELECT * FROM (VALUES
-           (0,'65','72'),(1,'69','6e'),(2,'6f','77'),(3,'6f','72'),
-           (4,'73','74'),(5,'6d','6572'),(6,'61','74'),(7,'6c','75'),
-           (8,'61','72'),(9,'70','6172'),(10,'6a','6f'),(11,'6a6f','696e'),
-           (12,'61','73'),(13,'6173','68'),(14,'68','617368'),
-           (15,'72','6f77')) AS t(rank, a, b)),
-         doclists AS (
-           SELECT doc_id, string_split_regex(text, '\s+') AS ws FROM documents),
-         wordpos AS (
-           SELECT doc_id, widx, w FROM (
-             SELECT doc_id, generate_subscripts(ws, 1) AS widx,
-                    unnest(ws) AS w
-             FROM doclists) u
-           WHERE w <> ''),
-         dw AS (SELECT DISTINCT w FROM wordpos),
-         rec AS (
-           SELECT w, ',' || array_to_string(
-                    regexp_extract_all(lower(hex(w)), '[0-9a-f]{2}'),
-                    ',') || ',' AS s,
-                  0 AS r
-           FROM dw
-           UNION ALL
-           SELECT w,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN regexp_replace(s, ',' || a || ',' || b || ',',
-                                      ',' || a || b || ',')
-                  ELSE s END,
-             CASE WHEN contains(s, ',' || a || ',' || b || ',')
-                  THEN r ELSE r + 1 END
-           FROM rec JOIN m ON m.rank = rec.r
-           WHERE rec.r < 16),
-         wsyms AS (
-           SELECT w, list_filter(string_split(s, ','), x -> x <> '') AS syms
-           FROM rec WHERE r = 16),
-         symrows AS (
-           SELECT w, sidx, sym FROM (
-             SELECT w, generate_subscripts(syms, 1) AS sidx,
-                    unnest(syms) AS sym
-             FROM wsyms) u),
-         ids AS (
-           SELECT w, sidx,
-             CASE WHEN length(sym) = 2 THEN
-               (strpos('0123456789abcdef', sym[1]) - 1) * 16
-                 + (strpos('0123456789abcdef', sym[2]) - 1)
-             ELSE 256 + (SELECT min(rank) FROM m WHERE m.a || m.b = sym)
-             END AS token_id
-           FROM symrows),
-         doctok AS (
-           SELECT doc_id,
-             row_number() OVER (PARTITION BY doc_id ORDER BY widx, sidx) - 1
-               AS dpos,
-             token_id
-           FROM wordpos JOIN ids USING (w)),
-         dcount AS (SELECT doc_id, count(*) AS n FROM doctok GROUP BY doc_id),
-         sharded AS (
-           SELECT doc_id, n,
-             ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT % 4
-               AS shard
-           FROM dcount WHERE n > 0),
-         ordered AS (
-           SELECT shard, doc_id, n,
-             row_number() OVER (PARTITION BY shard ORDER BY doc_id) AS rn
-           FROM sharded),
-         pack AS (
-           SELECT shard, doc_id, n, rn,
-             CAST(0 AS BIGINT) AS seq, LEAST(n, 512) AS used
-           FROM ordered WHERE rn = 1
-           UNION ALL
-           SELECT o.shard, o.doc_id, o.n, o.rn,
-             CASE WHEN p.used + o.n > 512 THEN p.seq + 1 ELSE p.seq END,
-             CASE WHEN p.used + o.n > 512 THEN LEAST(o.n, 512)
-                  ELSE p.used + LEAST(o.n, 512) END
-           FROM pack p JOIN ordered o ON o.shard = p.shard AND o.rn = p.rn + 1),
+      raw"""$packedStreamFrontCtes,
+         ${packedStreamPackCte(0)},
          offs AS (
            SELECT shard, doc_id, seq,
              coalesce(sum(n) OVER (PARTITION BY shard, seq ORDER BY doc_id

@@ -57,4 +57,31 @@ class EntrySurfaceSpec extends AnyFunSuite with SparkSpec {
     assert(shadowed.isEmpty,
       s"rowsOnly entries that actually have oracles (stale exemption): ${shadowed.toSeq.sorted.mkString(", ")}")
   }
+
+  test("shared oracle fragments have one copy in src/main, inside EntryOps") {
+    val root = new java.io.File("src/main")
+    assume(root.isDirectory)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
+      try f.getPath -> src.mkString finally src.close()
+    }
+    // one signature literal per folded fragment: the whitespace tokenizer,
+    // the BPE merge table, the BPE recursion, the md5 shard prefix and the
+    // KN continuation counts. A pasted copy anywhere else fails here.
+    val signatures = Seq(
+      "list_filter(regexp_split_to_array(trim(lower(text))",
+      "(0,'65','72')",
+      "regexp_extract_all(lower(hex(w))",
+      "('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))::BIGINT",
+      "contu AS (SELECT w2, count(*) AS cu")
+    val ops = "src/main/scala/graft/EntryOps.scala"
+    for (sig <- signatures) {
+      val copies = sources.map { case (p, src) =>
+        p -> (src.split(java.util.regex.Pattern.quote(sig), -1).length - 1)
+      }.filter(_._2 > 0).toMap
+      assert(copies === Map(ops -> 1), s"copies of `$sig`: $copies")
+    }
+  }
 }
