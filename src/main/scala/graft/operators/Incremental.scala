@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.{LakeCommit, Tables}
+import graft.sources.{LakeCommit, Sink, Tables}
 
 /** Incremental corpus preparation — the loop [[Snapshot]] exists to feed.
   * A production corpus refreshes continuously (the reference's sensor
@@ -239,7 +239,7 @@ object Incremental {
     // paying two serial ledger-scan roundtrips per refresh
     var prevSurvAff: DataFrame = null
     var newSurvAff: DataFrame = null
-    graft.sources.Sink.inParallel(Seq(
+    Sink.inParallel(Seq(
       () => prevSurvAff = pin(survivorIds(
         prevLedger.join(broadcast(affectedHashes), Seq("norm_hash"), "left_semi"))),
       () => newSurvAff = pin(survivorIds(
@@ -297,8 +297,7 @@ object Incremental {
     * [[refreshInPlace]] refreshes without touching unaffected
     * directories. */
   def writePacked(packed: DataFrame, path: String): Unit =
-    packed
-      .repartition(col("shard"))
+    Sink.byPartition(packed, "shard")
       .sortWithinPartitions(col("shard"), col("seq_id"), col("chunk_id"))
       .write.mode("overwrite").partitionBy("shard").parquet(path)
 

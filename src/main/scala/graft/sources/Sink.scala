@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -34,32 +36,76 @@ import graft.operators.Dedup
 object Sink {
 
   /** Write `df` as parquet partitioned by `partitionCol`, replacing only the
-    * partitions present in `df` (dynamic overwrite). Rows are repartitioned
-    * by the partition column first so each day is written by one task —
-    * without this every task holding any row of a day emits its own file
-    * per day (tasks × days small files, the classic partitioned-write
-    * mistake at scale). The dynamic mode is this writer's option, never
-    * the session's: a session-wide setting would silently turn every later
-    * `mode("overwrite").partitionBy` write in the session dynamic. */
+    * partitions present in `df` (dynamic overwrite). Rows are spread by
+    * [[byPartition]] first, so the days are spread over the session's
+    * shuffle-partition count of tasks and each day is written by exactly
+    * one of them — without this every task holding any row of a day emits
+    * its own file per day (tasks × days small files, the classic
+    * partitioned-write mistake at scale). The dynamic mode is this
+    * writer's option, never the session's: a session-wide setting would
+    * silently turn every later `mode("overwrite").partitionBy` write in the
+    * session dynamic. */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.repartition(col(partitionCol))
+    byPartition(df, partitionCol)
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
 
+  /** The spread of every partitioned lake write: hash `partitionCol` into
+    * the session's shuffle-partition count. Each partition value lands in
+    * exactly one task (one file per directory), and the explicit count
+    * keeps AQE from coalescing the exchange, which at lake-refresh sizes
+    * folded every day into one task and wrote the day files serially. */
+  private[graft] def byPartition(df: DataFrame, partitionCol: String): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+      col(partitionCol))
+
+  /** The distinct values of `df`'s one column in ONE Spark job: each task
+    * dedups its own rows and the driver unions the per-task sets
+    * (`distinct().collect()` takes two under AQE: the aggregate's shuffle
+    * stage, then the collect). The driver holds O(tasks × values), so this
+    * is for partition values, bounded by the table's partition count. */
+  private[graft] def distinctValues(df: DataFrame): Array[Any] = {
+    val rows = df.queryExecution.toRdd
+    val dataType = df.schema.head.dataType
+    val toScala = CatalystTypeConverters.createToScalaConverter(dataType)
+    df.sparkSession.sparkContext.runJob(rows, DistinctRows, rows.partitions.indices)
+      .flatten.distinct.map(r => toScala(r.get(0, dataType)))
+  }
+
+  /** One task's distinct rows, copied out of the reused row buffer. A named
+    * function, not a lambda: before shipping a lambda Spark's closure
+    * cleaner parses the bytecode of the class that defines it, which cost
+    * the driver more time per call than the saved job (and the internal
+    * lambdas of `Dataset.rdd` and `RDD.collect` pay the same parse). */
+  private object DistinctRows
+      extends ((TaskContext, Iterator[InternalRow]) => Array[InternalRow]) with Serializable {
+    def apply(task: TaskContext, rows: Iterator[InternalRow]): Array[InternalRow] = {
+      val seen = scala.collection.mutable.HashSet.empty[InternalRow]
+      rows.foreach(r => if (!seen.contains(r)) seen += r.copy())
+      seen.toArray
+    }
+  }
+
   /** Latest-wins upsert of `updates` into the partitioned parquet table at
     * `path` — Postgres `ON CONFLICT (keys) DO UPDATE` semantics with
-    * `orderCol` (+ `tieBreak`) deciding the winner.
+    * `orderCol` (+ `tieBreak`) deciding the winner, within the batch as
+    * well as against the stored rows (the first load dedups too).
     *
     * Assumes the partition value is stable per key (true for the reference:
     * an event's date never moves across loads), so the merge only needs the
     * partitions present in the update batch: existing rows there are
-    * unioned with the updates, deduped by key, and exactly those partitions
-    * are replaced. The merged slice is staged beside the table (Spark
-    * correctly refuses a plan that reads the same files an overwrite is
-    * deleting) and each staged partition directory is SWAPPED into the
-    * table by [[LakeCommit]] — one write job per merge, no second
-    * overwrite pass. The first load stages the whole table and swaps it in
-    * with one rename.
+    * unioned with the updates, deduped by (partition, key) — under the
+    * contract the same rows as by key — and exactly those partitions are
+    * replaced. The merge runs through ONE exchange: rows are hashed by the
+    * partition column ([[byPartition]]), which already clusters the
+    * latest-wins window on (partition, keys) and is the layout the write
+    * wants, so the planner drops the write's own repartition. The touched
+    * partitions are learned in one job ([[distinctValues]]). The merged
+    * slice is staged beside the table (Spark correctly refuses a plan that
+    * reads the same files an overwrite is deleting) and each staged
+    * partition directory is SWAPPED into the table by [[LakeCommit]] — one
+    * write job per merge, no second overwrite pass. The first load stages
+    * the whole table and swaps it in with one rename.
     *
     * Crash safety (single writer): the swap never destroys the only copy
     * of a row, and entry first heals an interrupted run — an orphaned
@@ -76,16 +122,17 @@ object Sink {
       // Partition values in the batch: bounded by the table's partition
       // count (days), so the driver-side collect is O(days), never O(rows).
       val touched =
-        if (fresh) Array.empty[Any]
-        else updates.select(partitionCol).distinct().collect().map(_.get(0))
-      def merged = Dedup.latestWins(
-        Tables.parquet(spark, path)
+        if (fresh) Array.empty[Any] else distinctValues(updates.select(partitionCol))
+      val rows =
+        if (fresh) updates
+        else Tables.parquet(spark, path)
           .filter(col(partitionCol).isin(touched: _*))   // partition pruning
           .select(updates.columns.map(col): _*)
-          .unionByName(updates), keys, orderCol, tieBreak)
+          .unionByName(updates)
+      val merged = Dedup.latestWins(byPartition(rows, partitionCol),
+        (partitionCol +: keys).distinct, orderCol, tieBreak)
       LakeCommit.stage(spark, path, whole = fresh) { dir =>
-        if (fresh) writePartitioned(updates, dir, partitionCol)
-        else if (touched.nonEmpty) writePartitioned(merged, dir, partitionCol)
+        if (fresh || touched.nonEmpty) writePartitioned(merged, dir, partitionCol)
       } -> (())
     }
 
@@ -143,7 +190,7 @@ object Sink {
       LakeCommit.stage(spark, path) { dir =>
         sel.foreach(s => Tables.parquet(spark, path)
           .filter(s) // pruned
-          .repartition(col(partitionCol)) // one task → one file per partition
+          .transform(byPartition(_, partitionCol)) // one task → one file per partition
           .write.mode("overwrite").partitionBy(partitionCol).parquet(dir))
       } -> files
     }

@@ -190,7 +190,9 @@ object EventStream {
     * by key — `ON CONFLICT DO UPDATE` per batch via foreachBatch +
     * [[graft.sources.Sink.upsertPartitioned]]. Later batches win
     * (batchId is the version); re-delivered keys within a batch resolve by
-    * newest `ts`. Exactly-once to the table comes from the idempotence of
+    * newest `ts`, on the first batch as on every later one (a key's day,
+    * the date of its `ts`, is the stable partition value the merge
+    * assumes). Exactly-once to the table comes from the idempotence of
     * the merge + the checkpointed source offsets: if the driver dies
     * anywhere in the sink's [[graft.sources.LakeCommit]] swap or before
     * the offset commit, the batch REPLAYS under the same batchId, heals

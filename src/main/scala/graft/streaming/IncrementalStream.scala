@@ -58,7 +58,7 @@ object IncrementalStream {
     Sink.inParallel(Seq(
       () => docs.select(col(idCol), col(textCol),
           docShard(col(idCol)).cast("int").as("__shard"))
-        .repartition(col("__shard"))
+        .transform(Sink.byPartition(_, "__shard"))
         .write.mode("overwrite").partitionBy("__shard").parquet(rawPath),
       () => Incremental.writePacked(
         Incremental.batch(docs, idCol, textCol, keep,
@@ -78,9 +78,9 @@ object IncrementalStream {
                          docShard: Column => Column): Unit =
     LakeCommit.replace(spark, rawPath) {
       val ids = wave.select(col(idCol)).distinct()
-      val touched = wave
-        .select(docShard(col(idCol)).cast("int").as("__shard")).distinct()
-        .collect().map(_.getInt(0))
+      val touched = Sink.distinctValues(wave
+        .select(docShard(col(idCol)).cast("int").as("__shard")))
+        .map(_.asInstanceOf[Int])
       val newRows = Tables.parquet(spark, rawPath)
         .filter(col("__shard").isin(touched.map(Integer.valueOf): _*))
         .join(broadcast(ids), Seq(idCol), "left_anti")

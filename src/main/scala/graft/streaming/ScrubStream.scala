@@ -59,17 +59,17 @@ object ScrubStream {
     Sink.inParallel(Seq(
       () => docs.select(col(idCol), col(textCol),
           docShard(col(idCol)).cast("int").as("__shard"))
-        .repartition(col("__shard"))
+        .transform(Sink.byPartition(_, "__shard"))
         .write.mode("overwrite").partitionBy("__shard").parquet(rawPath),
       () => st.wins.withColumn("__shard", docShard(col("id")).cast("int"))
-        .repartition(col("__shard"))
+        .transform(Sink.byPartition(_, "__shard"))
         .write.mode("overwrite").partitionBy("__shard").parquet(winsPath),
       () => st.df.withColumn("__hbkt",
           pmod(col("whash"), lit(hashBuckets.toLong)).cast("int"))
-        .repartition(col("__hbkt"))
+        .transform(Sink.byPartition(_, "__hbkt"))
         .write.mode("overwrite").partitionBy("__hbkt").parquet(dfPath),
       () => st.scrubbed.withColumn("__shard", docShard(col("id")).cast("int"))
-        .repartition(col("__shard"))
+        .transform(Sink.byPartition(_, "__shard"))
         .write.mode("overwrite").partitionBy("__shard").parquet(scrubPath)))
     // release only THIS build's tracked caches (the posting-index persist
     // inside IncrementalScrub.state) — a catalog-wide clearCache would
@@ -122,11 +122,11 @@ object ScrubStream {
             .select(col(idCol), col(textCol))))
 
         // touched-partition sets, all delta-bound collects — three
-        // independent jobs over pinned (localCheckpoint'd) delta frames,
-        // overlapped so the wave pays one collect roundtrip, not three
-        // (guide §2.6)
+        // independent one-job collects over pinned (localCheckpoint'd)
+        // delta frames, overlapped so the wave pays one collect
+        // roundtrip, not three (guide §2.6)
         def ints(df: DataFrame): Array[Int] =
-          df.distinct().collect().map(_.getInt(0))
+          Sink.distinctValues(df).map(_.asInstanceOf[Int])
         var winsTouched: Array[Int] = null
         var dfTouchedBkts: Array[Int] = null
         var scrubTouched: Array[Int] = null

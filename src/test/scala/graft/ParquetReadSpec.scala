@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
@@ -9,8 +8,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.GraftTestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -38,22 +35,6 @@ class ParquetReadSpec extends AnyFunSuite with SparkSpec {
     val df = Tables.parquet(spark, paths: _*)
     assert(df.schema === spark.read.parquet(paths: _*).schema, paths.mkString(", "))
     df
-  }
-
-  /** The jobs started while `build` runs, counted once the listener bus
-    * has delivered every event. */
-  private def jobsDuring[T](build: => T): (T, Int) = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(ev: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = build
-      GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   private def lake(): String = {

@@ -17,20 +17,34 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
   private def table(rows: (Long, String, Double, Int)*): DataFrame =
     rows.toDF("id", "day", "value", "version")
 
+  /** Two version-0 rows on each of `n` January days. */
+  private def dayTable(n: Int): (Seq[String], DataFrame) = {
+    val ds = (1 to n).map(d => f"2024-01-$d%02d")
+    (ds, table(ds.zipWithIndex.flatMap { case (d, i) =>
+      Seq((2L * i, d, 1.0, 0), (2L * i + 1, d, 2.0, 0)) }: _*))
+  }
+
   test("writePartitioned: roundtrip preserves rows; one file per partition") {
     val path = tmp()
-    Sink.writePartitioned(
-      table((1, "2024-01-01", 1.0, 0), (2, "2024-01-01", 2.0, 0), (3, "2024-01-02", 3.0, 0)),
-      path, "day")
+    // more days than the session's shuffle partitions, so a one-file-per-day
+    // write over several tasks is only possible if every day has one task
+    val (ds, df) = dayTable(3 * spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Sink.writePartitioned(df, path, "day")
     val back = spark.read.parquet(path)
-    assert(back.count() === 3)
-    assert(back.select("day").distinct().as[String].collect().sorted
-      === Array("2024-01-01", "2024-01-02"))
-    // repartition-by-day ⇒ exactly one part file per day directory
-    new java.io.File(path).listFiles.filter(_.getName.startsWith("day=")).foreach { d =>
-      assert(d.listFiles.count(_.getName.endsWith(".parquet")) === 1,
-        s"expected 1 file in ${d.getName}")
+    assert(back.count() === 2L * ds.size)
+    assert(back.select("day").distinct().as[String].collect().sorted === ds.toArray)
+    // hash-by-day ⇒ exactly one part file per day directory
+    val dayDirs = new java.io.File(path).listFiles.filter(_.getName.startsWith("day="))
+    val files = dayDirs.map { d =>
+      val fs = d.listFiles.filter(_.getName.endsWith(".parquet"))
+      assert(fs.length === 1, s"expected 1 file in ${d.getName}")
+      fs.head.getName
     }
+    assert(dayDirs.length === ds.size)
+    // part-NNNNN names the writing task's partition: the days were written
+    // by more than one task, not folded into a single one
+    val tasks = files.map(_.take("part-00000".length)).toSet
+    assert(tasks.size > 1, s"every day was written by one task: ${files.mkString(", ")}")
   }
 
   test("writePartitioned: dynamic overwrite replaces only the written partitions") {
@@ -81,6 +95,68 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     // day 1 was not in the update batch: its file must be byte-identical
     assert(day1File.lastModified() === mtimeBefore,
       "partition outside the update batch was rewritten")
+  }
+
+  test("upsertPartitioned: a batch with two versions of a key keeps the latest, on a new lake as on an existing one") {
+    val batch = table((1, "2024-01-01", 1.0, 0), (1, "2024-01-01", 2.0, 1),
+      (2, "2024-01-02", 3.0, 2), (2, "2024-01-02", 4.0, 1))
+    def rows(path: String) = spark.read.parquet(path).select("id", "day", "value")
+      .as[(Long, String, Double)].collect().sorted
+    val fresh = tmp()
+    Sink.upsertPartitioned(spark, fresh, batch, Seq("id"), "version", "id", "day")
+    val existing = tmp()
+    Sink.upsertPartitioned(spark, existing, table((9, "2024-01-09", 9.0, 0)),
+      Seq("id"), "version", "id", "day")
+    Sink.upsertPartitioned(spark, existing, batch, Seq("id"), "version", "id", "day")
+    val latest = Array((1L, "2024-01-01", 2.0), (2L, "2024-01-02", 3.0))
+    assert(rows(fresh) === latest)
+    assert(rows(existing) === latest :+ ((9L, "2024-01-09", 9.0)))
+  }
+
+  test("upsertPartitioned: job counts, and the merge runs through one exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val shuffles = "spark.sql.shuffle.partitions"
+    val before = spark.conf.getOption(shuffles)
+    // the executed plan of every write, with its adaptive stages
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (aqe.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      spark.conf.set(shuffles, "4")
+      val (_, base) = dayTable(12)
+      val (_, writeJobs) = jobsDuring(Sink.writePartitioned(base, tmp(), "day"))
+      val path = tmp()
+      val (_, loadJobs) = jobsDuring(
+        Sink.upsertPartitioned(spark, path, base, Seq("id"), "version", "id", "day"))
+      val updates = table((0, "2024-01-01", 9.0, 1), (5, "2024-01-03", 9.0, 1))
+      writes.clear() // jobsDuring drained the bus: the first load's write is in
+      val (_, mergeJobs) = jobsDuring(
+        Sink.upsertPartitioned(spark, path, updates, Seq("id"), "version", "id", "day"))
+      val plans = writes.toArray(Array.empty[SparkPlan]).toSeq
+      assert(plans.size === 1, s"one write per merge: ${plans.size}")
+      val exchanges = aqe.collect(plans.head) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, s"the merge's plan:\n${plans.head}")
+      // write: the day exchange + the write; first load: the same two (the
+      // latest-wins window rides the day exchange); merge: one touched-day
+      // collect + the same two
+      assert((writeJobs, loadJobs, mergeJobs) === ((2, 2, 3)))
+      assert(spark.read.parquet(path).filter("id in (0, 5)").select("value")
+        .as[Double].collect().toSeq === Seq(9.0, 9.0))
+    } finally {
+      spark.listenerManager.unregister(listener)
+      before.fold(spark.conf.unset(shuffles))(spark.conf.set(shuffles, _))
+    }
   }
 
   test("upsertPartitioned: older version loses against the stored row") {

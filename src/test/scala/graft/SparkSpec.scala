@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
@@ -7,6 +11,22 @@ import org.scalatest.Suite
   * forked JVM; re-creating SparkContexts per suite dominates test time). */
 trait SparkSpec { self: Suite =>
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The jobs started while `build` runs, counted once the listener bus
+    * has delivered every event. */
+  protected def jobsDuring[T](build: => T): (T, Int) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = build
+      GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
