@@ -20,9 +20,7 @@ object Bench {
     // Drop warmup debris (persisted dedup frames, cached model predictions)
     // before timing: the timed loop should pay each operator's own cost,
     // not the GC pressure of another scale factor's leftovers.
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    spark.catalog.clearCache()
-    System.gc()
+    GraftSession.releaseAll(spark)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // sample host weather around the timed window only (not warmup): the
     // artifact must say what the TIMINGS were taken under

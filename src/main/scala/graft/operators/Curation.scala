@@ -287,13 +287,10 @@ object Curation {
       // (each was eagerly localCheckpoint'd or persisted in stagedIds),
       // so they are independent cheap jobs — one overlapped roundtrip
       // instead of one serial job per stage (guide §2.6)
-      val counts = new Array[Long](stages.size)
-      graft.sources.Sink.inParallel(stages.zipWithIndex.map {
-        case ((_, ids), i) => () => counts(i) = ids.count()
+      val counts = graft.sources.Sink.inParallel(stages.map {
+        case (_, ids) => () => ids.count()
       })
-      val ns = ("raw", n0) +: stages.zipWithIndex.map {
-        case ((name, _), i) => (name, counts(i))
-      }
+      val ns = ("raw", n0) +: stages.map(_._1).zip(counts)
       ns.zipWithIndex.zip(n0 +: ns.map(_._2)).map {
         case (((name, n), i), prev) => (i, name, n, prev - n)
       }.toDF("stage", "stage_name", "n_docs", "n_dropped")

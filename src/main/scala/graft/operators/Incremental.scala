@@ -237,13 +237,10 @@ object Incremental {
     // the two survivor-slice pins depend on affectedHashes but not on each
     // other — overlap their materializing actions (guide §2.6) instead of
     // paying two serial ledger-scan roundtrips per refresh
-    var prevSurvAff: DataFrame = null
-    var newSurvAff: DataFrame = null
-    Sink.inParallel(Seq(
-      () => prevSurvAff = pin(survivorIds(
-        prevLedger.join(broadcast(affectedHashes), Seq("norm_hash"), "left_semi"))),
-      () => newSurvAff = pin(survivorIds(
-        newLedger.join(broadcast(affectedHashes), Seq("norm_hash"), "left_semi")))))
+    val Seq(prevSurvAff, newSurvAff) = Sink.inParallel(Seq(prevLedger, newLedger).map {
+      ledger => () => pin(survivorIds(
+        ledger.join(broadcast(affectedHashes), Seq("norm_hash"), "left_semi")))
+    })
     val touch = pin(
       dIds
         .unionByName(newSurvAff.join(prevSurvAff, Seq("id"), "left_anti"))
@@ -297,9 +294,10 @@ object Incremental {
     * [[refreshInPlace]] refreshes without touching unaffected
     * directories. */
   def writePacked(packed: DataFrame, path: String): Unit =
-    Sink.byPartition(packed, "shard")
-      .sortWithinPartitions(col("shard"), col("seq_id"), col("chunk_id"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
+    Sink.writeLake(packed, path, "shard", packedOrder)
+
+  /** A packed lake's row order within each shard file. */
+  private val packedOrder = Seq("seq_id", "chunk_id")
 
   /** One refresh applied IN PLACE to a [[writePacked]] lake: only the
     * AFFECTED shard directories are rewritten, unaffected directories are
@@ -346,9 +344,9 @@ object Incremental {
     // hop does that, materializes the (delta-bound) frame exactly once,
     // and unlike localCheckpoint survives an executor loss mid-refresh.
     // The staging is written in its final shard layout, so the apply is
-    // pure directory renames — the staged bytes move once.
-    (LakeCommit.stage(spark, packedPath,
-      LakeCommit.partitionDirs("shard", affectedIds))(writePacked(parts.repacked, _)),
-      parts.newLedger)
+    // pure directory renames — the staged bytes move once. The repack holds
+    // every row of the affected shards, so the old ones are not read.
+    (Sink.stagePartitions(spark, packedPath, "shard", affectedIds.toSeq, packedOrder)(
+      _ => parts.repacked), parts.newLedger)
   }
 }

@@ -10,7 +10,9 @@ import org.apache.spark.sql.SparkSession
   *
   *  - [[stage]]: clear the lake's one staging directory (`<lake>__staging`)
   *    and write the replacement there in its final partition layout
-  *    (`col=value` dirs), or as a whole new lake.
+  *    (`col=value` dirs), or as a whole new lake. A touched-partition
+  *    rewrite stages through `Sink.stagePartitions`, which names the
+  *    touched dirs with `Sink.partitionDir`, Spark's own encoding.
   *  - [[swap]]: move the staged data into place by rename, never by a
   *    second Spark write. Per partition: touched partitions the staged data
   *    emptied are deleted FIRST, then each staged dir swaps in (live dir →
@@ -66,10 +68,6 @@ object LakeCommit {
   private[graft] def leftovers(lake: String): Seq[String] =
     Seq(staging(lake), tombstones(lake), tombstoneDir(lake), marker(lake),
       marker(lake) + ".tmp")
-
-  /** `col=value` partition dir names for integer partition values. */
-  def partitionDirs(col: String, values: Iterable[Int]): Seq[String] =
-    values.map(v => s"$col=$v").toSeq
 
   /** Crash-injection seam: called with a stable label (`stage wins`,
     * `swap-out scrub/__shard=3`, `marker write`) before every mutation

@@ -1,16 +1,17 @@
 package graft.sources
 
+import java.io.File
 import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
-/** Hadoop's local filesystem with `chmod` done in-process.
+/** Hadoop's local filesystem with `chmod` and `readlink` done in-process.
   *
   * Without the native Hadoop library, `RawLocalFileSystem.setPermission`
   * forks `/bin/chmod` for every directory, data file and `.crc` sidecar a
@@ -21,7 +22,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   * [[Raw]] sets the same mode (already umask-applied by its callers) with
   * `Files.setPosixFilePermissions`, which is `chmod(2)` as the native library
   * calls it; a sticky bit (which the POSIX view cannot express) and a file
-  * store without POSIX permissions still take Hadoop's own path.
+  * store without POSIX permissions still take Hadoop's own path. Likewise
+  * `getFileLinkStatus` (every `FileContext` rename calls it) tests for a
+  * symlink through `java.nio` instead of forking `readlink`; only a real
+  * symlink takes Hadoop's path.
   *
   * Both of Hadoop's APIs get it: [[Checksummed]] for `FileSystem` (what
   * Spark's writers and `Sink` use) and [[Context]] for `FileContext` (what
@@ -37,6 +41,14 @@ object LocalFs {
       else
         try Files.setPosixFilePermissions(pathToFile(p).toPath, posix(permission.toShort))
         catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+
+    /** Stock, minus the `readlink` fork for a path that is no symlink
+      * (every path a lake or a checkpoint renames): `FileUtil.readLink`
+      * forks `readlink` per call, and every `FileContext` rename calls this.
+      * The link test looks at `new File(f.toString)`, the file stock reads. */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(new File(f.toString).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
   }
 
   class Checksummed extends LocalFileSystem(new Raw)

@@ -4,7 +4,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StringType
 
 import graft.operators.Dedup
 
@@ -26,6 +30,12 @@ import graft.operators.Dedup
   *    the update batch touches a handful of days; rewriting the whole table
   *    (or shuffling it) per load would be the scale bug.
   *
+  * Every partitioned lake write in graft goes through [[writeLake]], and
+  * every touched-partition rewrite (upsert merge, compaction, the stream
+  * gates' keyed deltas, the packed lake's refresh) through
+  * [[stagePartitions]], whose touched dirs [[partitionDir]] names as
+  * Spark's writer does.
+  *
   * Every lake mutation here ([[upsertPartitioned]], [[compactPartitions]],
   * [[writeBatchStamped]]) commits through [[LakeCommit]]'s one protocol:
   * stage the replacement beside the lake, swap it in by directory rename,
@@ -36,19 +46,32 @@ import graft.operators.Dedup
 object Sink {
 
   /** Write `df` as parquet partitioned by `partitionCol`, replacing only the
-    * partitions present in `df` (dynamic overwrite). Rows are spread by
-    * [[byPartition]] first, so the days are spread over the session's
-    * shuffle-partition count of tasks and each day is written by exactly
-    * one of them — without this every task holding any row of a day emits
-    * its own file per day (tasks × days small files, the classic
-    * partitioned-write mistake at scale). The dynamic mode is this
-    * writer's option, never the session's: a session-wide setting would
-    * silently turn every later `mode("overwrite").partitionBy` write in the
-    * session dynamic. */
+    * partitions present in `df` (dynamic overwrite), through [[writeLake]].
+    * The dynamic mode is this writer's option, never the session's: a
+    * session-wide setting would silently turn every later
+    * `mode("overwrite").partitionBy` write in the session dynamic. */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    byPartition(df, partitionCol)
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+    writeLake(df, path, partitionCol, dynamic = true)
+
+  /** The one `partitionBy` lake writer. Rows are spread by [[byPartition]]
+    * first, so each partition is written by exactly one task — without
+    * this every task holding any row of a day emits its own file per day
+    * (tasks × days small files, the classic partitioned-write mistake at
+    * scale). `sortBy` orders rows within each dir behind the partition
+    * column, the order FileFormatWriter requires, so it adds no sort of its
+    * own. Static overwrite unless `dynamic`: a staging dir is fresh, and
+    * dynamic mode would add Spark's per-partition staging renames (its
+    * one other difference: it leaves no `_SUCCESS` marker in `path`). */
+  private[graft] def writeLake(df: DataFrame, path: String, partitionCol: String,
+                               sortBy: Seq[String] = Nil, dynamic: Boolean = false): Unit = {
+    val spread = byPartition(df, partitionCol)
+    val rows =
+      if (sortBy.isEmpty) spread
+      else spread.sortWithinPartitions((partitionCol +: sortBy).map(col): _*)
+    val w = rows.write.mode("overwrite")
+    (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy(partitionCol).parquet(path)
+  }
 
   /** The spread of every partitioned lake write: hash `partitionCol` into
     * the session's shuffle-partition count. Each partition value lands in
@@ -58,6 +81,57 @@ object Sink {
   private[graft] def byPartition(df: DataFrame, partitionCol: String): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
       col(partitionCol))
+
+  /** The directory name Spark's writer gives value `value` of
+    * `partitionCol` (`ExternalCatalogUtils.getPartitionPathString` over
+    * its [[partitionKey]]). A swap deletes touched dirs by these names, so
+    * a wrong name would delete a live partition. */
+  private[graft] def partitionDir(partitionCol: String, value: Any): String =
+    ExternalCatalogUtils.getPartitionPathString(partitionCol, partitionKey(value))
+
+  /** A partition value's dir name before escaping: the value cast to
+    * string in the session time zone, and for null and the empty string
+    * the default partition's name (the dir Spark reads back as null). */
+  private def partitionKey(value: Any): String =
+    Option(Cast(Literal(value), StringType, Option(SQLConf.get.sessionLocalTimeZone)).eval())
+      .map(_.toString).filter(_.nonEmpty).getOrElse(DefaultPartition)
+
+  /** [[partitionKey]] of a lake's partition column as Spark reads it. */
+  private def keyOf(partitionCol: String): Column =
+    coalesce(col(partitionCol).cast("string"), lit(DefaultPartition))
+
+  /** The [[partitionKey]] a partition dir name holds. */
+  private def dirKey(dir: String): String =
+    ExternalCatalogUtils.unescapePathName(dir.substring(dir.indexOf('=') + 1))
+
+  private val DefaultPartition = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+
+  /** The one touched-partition rewrite: `rewrite` maps `lake`'s rows in
+    * the `touched` partitions (values of `partitionCol`; no other dir is
+    * read) to their replacement, staged for [[LakeCommit]] in its final
+    * `col=value` layout. The swap replaces every touched dir and deletes
+    * each one the replacement left empty, so rows `rewrite` adds must lie
+    * in touched partitions. The old rows are by-name: a rewrite that
+    * ignores them reads nothing. Nothing touched, nothing written. */
+  private[graft] def stagePartitions(spark: SparkSession, lake: String, partitionCol: String,
+                                     touched: Seq[Any], sortBy: Seq[String] = Nil)
+                                    (rewrite: (=> DataFrame) => DataFrame): LakeCommit.Staged =
+    LakeCommit.stage(spark, lake, touched.map(partitionDir(partitionCol, _))) { dir =>
+      if (touched.nonEmpty) writeLake(rewrite(Tables.parquet(spark, lake)
+        .filter(keyOf(partitionCol).isin(touched.map(partitionKey): _*))), dir, partitionCol, sortBy)
+    }
+
+  /** [[stagePartitions]] for a keyed delta: drop the rows of `removed`'s
+    * `key`s and add `added`. The touched partitions are those `part` (the
+    * partition value as an expression of the key) gives `removed`, found
+    * in one job ([[distinctValues]]); every key `added` holds must also be
+    * in `removed`. */
+  private[graft] def stageKeyed(spark: SparkSession, lake: String, partitionCol: String,
+                                part: Column, key: String, removed: DataFrame,
+                                added: DataFrame): LakeCommit.Staged =
+    stagePartitions(spark, lake, partitionCol, distinctValues(removed.select(part)).toSeq)(
+      _.join(broadcast(removed), Seq(key), "left_anti")
+        .unionByName(added.withColumn(partitionCol, part)))
 
   /** The distinct values of `df`'s one column in ONE Spark job: each task
     * dedups its own rows and the driver unions the per-task sets
@@ -101,11 +175,12 @@ object Sink {
     * latest-wins window on (partition, keys) and is the layout the write
     * wants, so the planner drops the write's own repartition. The touched
     * partitions are learned in one job ([[distinctValues]]). The merged
-    * slice is staged beside the table (Spark correctly refuses a plan that
-    * reads the same files an overwrite is deleting) and each staged
-    * partition directory is SWAPPED into the table by [[LakeCommit]] — one
-    * write job per merge, no second overwrite pass. The first load stages
-    * the whole table and swaps it in with one rename.
+    * slice is staged beside the table by [[stagePartitions]] (Spark
+    * correctly refuses a plan that reads the same files an overwrite is
+    * deleting) and each staged partition directory is SWAPPED into the
+    * table by [[LakeCommit]] — one write job per merge, no second overwrite
+    * pass. The first load stages the whole table and swaps it in with one
+    * rename.
     *
     * Crash safety (single writer): the swap never destroys the only copy
     * of a row, and entry first heals an interrupted run — an orphaned
@@ -118,21 +193,17 @@ object Sink {
                         keys: Seq[String], orderCol: String, tieBreak: String,
                         partitionCol: String): Unit =
     LakeCommit.replace(spark, path) {
-      val fresh = !fileSystem(spark, path).exists(new Path(path))
+      def merge(rows: DataFrame) = Dedup.latestWins(byPartition(rows, partitionCol),
+        (partitionCol +: keys).distinct, orderCol, tieBreak)
+      // the first load stays a dynamic write: that commit leaves no
+      // `_SUCCESS` marker in the staged root, which swaps in whole
+      if (!fileSystem(spark, path).exists(new Path(path)))
+        LakeCommit.stage(spark, path, whole = true)(writePartitioned(merge(updates), _, partitionCol)) -> (())
       // Partition values in the batch: bounded by the table's partition
       // count (days), so the driver-side collect is O(days), never O(rows).
-      val touched =
-        if (fresh) Array.empty[Any] else distinctValues(updates.select(partitionCol))
-      val rows =
-        if (fresh) updates
-        else Tables.parquet(spark, path)
-          .filter(col(partitionCol).isin(touched: _*))   // partition pruning
-          .select(updates.columns.map(col): _*)
-          .unionByName(updates)
-      val merged = Dedup.latestWins(byPartition(rows, partitionCol),
-        (partitionCol +: keys).distinct, orderCol, tieBreak)
-      LakeCommit.stage(spark, path, whole = fresh) { dir =>
-        if (fresh || touched.nonEmpty) writePartitioned(merged, dir, partitionCol)
+      else stagePartitions(spark, path, partitionCol,
+        distinctValues(updates.select(partitionCol)).toSeq) { old =>
+        merge(old.select(updates.columns.map(col): _*).unionByName(updates))
       } -> (())
     }
 
@@ -140,15 +211,16 @@ object Sink {
     * micro-batched ingest eventually owes: each partition directory whose
     * data-file count exceeds `maxFilesPerPartition` is rewritten by ONE
     * task into one file (the same one-task-per-partition invariant
-    * [[writePartitioned]] establishes at write time), and swapped in by
-    * [[LakeCommit]]'s tombstone-protected rename, so readers never see a
-    * partially compacted partition and a crash strands no data: entry heals
-    * an interrupted swap's tombstones before listing, so an orphaned day is
-    * restored, audited and kept, never deleted. Untouched
-    * partitions are not rewritten — the rewrite cost scales with the
-    * fragmented fraction, not the table. Returns the per-partition audit
-    * frame (partition value, files_before, files_after, n_rows AFTER the
-    * pass) — row counts must be invariant, which is the correctness gate.
+    * [[writeLake]] establishes at write time) by [[stagePartitions]], and
+    * swapped in by [[LakeCommit]]'s tombstone-protected rename, so readers
+    * never see a partially compacted partition and a crash strands no
+    * data: entry heals an interrupted swap's tombstones before listing, so
+    * an orphaned day is restored, audited and kept, never deleted.
+    * Untouched partitions are not rewritten — the rewrite cost scales with
+    * the fragmented fraction, not the table. Returns the per-partition
+    * audit frame (partition value as text, null for the default partition;
+    * n_rows AFTER the pass, files_before, files_after) — row counts must be
+    * invariant, which is the correctness gate.
     *
     * Driver-side material is O(partitions) directory listings — bounded
     * by days-of-history like the upsert's touched-partition discovery. A
@@ -158,54 +230,28 @@ object Sink {
   def compactPartitions(spark: SparkSession, path: String, partitionCol: String,
                         maxFilesPerPartition: Int = 1): DataFrame = {
     val fs = fileSystem(spark, path)
-    val tableDir = new Path(path)
     def dataFiles(p: Path): Int = fs.listStatus(p).count { f =>
       f.isFile && !f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith(".")
     }
-    def partDirs() = fs.listStatus(tableDir)
+    def fileCounts() = fs.listStatus(new Path(path))
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    // Spark writes null (and empty-string) partition values to the
-    // __HIVE_DEFAULT_PARTITION__ dir and reads that dir back as null, so
-    // the dir name is the storage layer's OWN null encoding — we keep it
-    // as the audit join key (a value-level sentinel can't collide here:
-    // any data value that maps to this dir is read back as null by Spark
-    // itself) and select on isNull rather than a cast (cast of null is
-    // null, so an isin filter would silently skip the partition).
-    val nullDir = "__HIVE_DEFAULT_PARTITION__"
-    def decode(name: String): String =
-      java.net.URLDecoder.decode(name.substring(name.indexOf('=') + 1), "UTF-8")
+      .map(s => s.getPath.getName -> dataFiles(s.getPath)).toMap
     val before = LakeCommit.replace(spark, path) {
-      val files = partDirs().map(p => p.getPath.getName -> dataFiles(p.getPath)).toMap
-      val needy = files.filter(_._2 > maxFilesPerPartition).keys.toSeq
-      val (needyNull, needyVals) = needy.map(decode).partition(_ == nullDir)
-      val sel = {
-        val byValue =
-          if (needyVals.nonEmpty) Some(col(partitionCol).cast("string").isin(needyVals: _*))
-          else None
-        val byNull =
-          if (needyNull.nonEmpty) Some(col(partitionCol).isNull) else None
-        (byValue ++ byNull).reduceOption(_ || _)
-      }
-      LakeCommit.stage(spark, path) { dir =>
-        sel.foreach(s => Tables.parquet(spark, path)
-          .filter(s) // pruned
-          .transform(byPartition(_, partitionCol)) // one task → one file per partition
-          .write.mode("overwrite").partitionBy(partitionCol).parquet(dir))
-      } -> files
+      val files = fileCounts()
+      val needy = files.collect { case (dir, n) if n > maxFilesPerPartition => dirKey(dir) }
+      stagePartitions(spark, path, partitionCol, needy.toSeq)(old => old) -> files
     }
-    val after = partDirs().map(p => p.getPath.getName -> dataFiles(p.getPath)).toMap
+    val after = fileCounts()
     import spark.implicits._
     val audit = before.keys.toSeq.sorted
-      .map(n => (decode(n), before(n), after.getOrElse(n, 0)))
+      .map(d => (dirKey(d), before(d), after.getOrElse(d, 0)))
       .toDF("__part", "files_before", "files_after")
     Tables.parquet(spark, path)
-      .groupBy(coalesce(col(partitionCol).cast("string"), lit(nullDir)).as("__part"))
+      .groupBy(keyOf(partitionCol).as("__part"))
       .agg(count(lit(1)).as("n_rows"))
       .join(broadcast(audit), Seq("__part"))
-      .select(
-        when(col("__part") === nullDir, lit(null).cast("string"))
-          .otherwise(col("__part")).as(partitionCol),
+      .select(nullif(col("__part"), lit(DefaultPartition)).as(partitionCol),
         col("n_rows"), col("files_before"), col("files_after"))
   }
 
@@ -446,11 +492,11 @@ object Sink {
     * rows per shard (same bound as [[exportShards]]'s checksum; size
     * nShards to stay under it).
     *
-    * Scale shape: one hash shuffle on the shard id (repartition by the
-    * column guarantees each shard directory gets exactly one file), one
-    * in-task sort leading with the partition column so FileFormatWriter
-    * injects no second sort, and the manifest aggregation
-    * map-side-combines to nShards rows. */
+    * Scale shape: one hash shuffle on the shard id ([[writeLake]]'s
+    * spread: each shard directory gets exactly one file), one in-task sort
+    * leading with the partition column so FileFormatWriter injects no
+    * second sort, and the manifest aggregation map-side-combines to
+    * nShards rows. */
   def exportTokenStream(spark: SparkSession, stream: DataFrame,
                         path: String): DataFrame = {
     // segment-aware extension (D29c): a stream carrying `seg_id` (the
@@ -462,10 +508,7 @@ object Sink {
     // every token survived. Streams without the column keep the original
     // 4-column manifest bit-for-bit.
     val hasSegs = stream.columns.contains("seg_id")
-    stream
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("seq_id"), col("pos"))
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
+    writeLake(stream, path, "shard", sortBy = Seq("seq_id", "pos"))
     val base = Tables.parquet(spark, path)
       .groupBy(col("shard").cast("long").as("shard"))
     if (hasSegs)
@@ -536,9 +579,9 @@ object Sink {
     * task may read a path another task writes. Spark's scheduler runs
     * concurrent jobs FIFO and its session/catalog are thread-safe for
     * action submission; job-description thread-locals are not inherited,
-    * which only affects UI labels. */
-  private[graft] def inParallel(tasks: Seq[() => Unit]): Unit =
-    if (tasks.sizeIs <= 1) tasks.foreach(_.apply())
+    * which only affects UI labels. Returns the tasks' results in order. */
+  private[graft] def inParallel[T](tasks: Seq[() => T]): Seq[T] =
+    if (tasks.sizeIs <= 1) tasks.map(_.apply())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         tasks.size,
@@ -547,8 +590,8 @@ object Sink {
         })
       try {
         val fs = tasks.map { t =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = t()
+          pool.submit(new java.util.concurrent.Callable[T] {
+            def call(): T = t()
           })
         }
         // Await EVERY task before returning or rethrowing: an orphaned
@@ -558,14 +601,16 @@ object Sink {
         // task, so every task is already running, and a cancelled
         // FutureTask's get() returns at once while its thread runs on.
         var firstFailure: Throwable = null
-        fs.foreach { f =>
+        val results = fs.map { f =>
           try f.get()
           catch {
             case e: java.util.concurrent.ExecutionException =>
               if (firstFailure == null) firstFailure = e.getCause
+              null.asInstanceOf[T]
           }
         }
         if (firstFailure != null) throw firstFailure
+        results
       } finally { pool.shutdown(): Unit }
     }
 

@@ -17,7 +17,7 @@ import graft.sources.{LakeCommit, Sink, Tables}
   *      doc-keyed routing as the packed lake): only shard directories
   *      the wave touches are rewritten (emptied dirs deleted) — the
   *      wave's upserts replace, its deletes drop, everyone else's
-  *      directory is never opened;
+  *      directory is never opened (`Sink.stageKeyed`);
   *   2. the PACKED lake (`packedPath`): [[Incremental.stageRefresh]] —
   *      delta-only text work, ledger-recomputed membership, affected
   *      shards only;
@@ -56,10 +56,7 @@ object IncrementalStream {
     // three independent lake writes (distinct paths, none reading
     // another's output) — overlapped per guide §2.6
     Sink.inParallel(Seq(
-      () => docs.select(col(idCol), col(textCol),
-          docShard(col(idCol)).cast("int").as("__shard"))
-        .transform(Sink.byPartition(_, "__shard"))
-        .write.mode("overwrite").partitionBy("__shard").parquet(rawPath),
+      () => writeRaw(docs, rawPath, idCol, textCol, docShard),
       () => Incremental.writePacked(
         Incremental.batch(docs, idCol, textCol, keep,
           maxTokens, overlap, budget, shards, docShard),
@@ -68,27 +65,26 @@ object IncrementalStream {
         .write.mode("overwrite").parquet(ledgerPath)))
   }
 
+  /** Write corpus version 0 as the raw lake: (idCol, textCol) rows in
+    * `__shard` dirs by `docShard`. [[ScrubStream]] bootstraps the same lake. */
+  private[streaming] def writeRaw(docs: DataFrame, rawPath: String, idCol: String,
+                                  textCol: String, docShard: Column => Column): Unit =
+    Sink.writeLake(docs.select(col(idCol), col(textCol),
+      docShard(col(idCol)).cast("int").as("__shard")), rawPath, "__shard")
+
   /** Advance the raw corpus lake by one wave: rewrite ONLY the shard
     * directories the wave touches (upserts replace by id, deletes drop),
-    * delete the ones the wave emptied — one partitioned staging write,
-    * applied by directory renames ([[LakeCommit.replace]]; its heal makes
-    * a replay read every partition). */
+    * delete the ones the wave emptied — one partitioned staging write
+    * ([[Sink.stageKeyed]]), applied by directory renames
+    * ([[LakeCommit.replace]]; its heal makes a replay read every
+    * partition). */
   private[streaming] def advanceRaw(spark: SparkSession, rawPath: String,
                          wave: DataFrame, idCol: String, textCol: String,
                          docShard: Column => Column): Unit =
     LakeCommit.replace(spark, rawPath) {
-      val ids = wave.select(col(idCol)).distinct()
-      val touched = Sink.distinctValues(wave
-        .select(docShard(col(idCol)).cast("int").as("__shard")))
-        .map(_.asInstanceOf[Int])
-      val newRows = Tables.parquet(spark, rawPath)
-        .filter(col("__shard").isin(touched.map(Integer.valueOf): _*))
-        .join(broadcast(ids), Seq(idCol), "left_anti")
-        .unionByName(wave.filter(col("op") =!= "delete")
-          .select(col(idCol), col(textCol),
-            docShard(col(idCol)).cast("int").as("__shard")))
-      LakeCommit.stage(spark, rawPath, LakeCommit.partitionDirs("__shard", touched))(
-        Sink.writePartitioned(newRows, _, "__shard")) -> (())
+      Sink.stageKeyed(spark, rawPath, "__shard", docShard(col(idCol)).cast("int"), idCol,
+        wave.select(col(idCol)),
+        wave.filter(col("op") =!= "delete").select(col(idCol), col(textCol))) -> (())
     }
 
   /** One wave through the commit protocol — the foreachBatch body,

@@ -26,7 +26,8 @@ import graft.sources.{LakeCommit, Sink, Tables}
   *      holders of threshold-crossing windows — the honest ripple cost)
   *      rewrite.
   *
-  * Lakes 2-4 commit together under one [[LakeCommit.commit]] marker keyed
+  * All four rewrite the same way (`Sink.stageKeyed`). Lakes 2-4 commit
+  * together under one [[LakeCommit.commit]] marker keyed
   * by the batch id: every replacement row-set is staged before any lake
   * is swapped (the refresh plan reads the pre-wave lakes, so an in-place
   * overwrite mid-plan would corrupt its own inputs), and a replay finishes
@@ -57,20 +58,11 @@ object ScrubStream {
     // materialized safely under concurrency by Spark's block-level
     // cache locking.
     Sink.inParallel(Seq(
-      () => docs.select(col(idCol), col(textCol),
-          docShard(col(idCol)).cast("int").as("__shard"))
-        .transform(Sink.byPartition(_, "__shard"))
-        .write.mode("overwrite").partitionBy("__shard").parquet(rawPath),
-      () => st.wins.withColumn("__shard", docShard(col("id")).cast("int"))
-        .transform(Sink.byPartition(_, "__shard"))
-        .write.mode("overwrite").partitionBy("__shard").parquet(winsPath),
-      () => st.df.withColumn("__hbkt",
-          pmod(col("whash"), lit(hashBuckets.toLong)).cast("int"))
-        .transform(Sink.byPartition(_, "__hbkt"))
-        .write.mode("overwrite").partitionBy("__hbkt").parquet(dfPath),
-      () => st.scrubbed.withColumn("__shard", docShard(col("id")).cast("int"))
-        .transform(Sink.byPartition(_, "__shard"))
-        .write.mode("overwrite").partitionBy("__shard").parquet(scrubPath)))
+      () => IncrementalStream.writeRaw(docs, rawPath, idCol, textCol, docShard),
+      () => Sink.writeLake(st.wins.withColumn("__shard", shardOf(docShard)), winsPath, "__shard"),
+      () => Sink.writeLake(st.df.withColumn("__hbkt", bucketOf(hashBuckets)), dfPath, "__hbkt"),
+      () => Sink.writeLake(st.scrubbed.withColumn("__shard", shardOf(docShard)),
+        scrubPath, "__shard")))
     // release only THIS build's tracked caches (the posting-index persist
     // inside IncrementalScrub.state) — a catalog-wide clearCache would
     // evict the caller's unrelated cached frames as collateral
@@ -121,60 +113,23 @@ object ScrubStream {
           deltaDocs = Some(wave.filter(col("op") =!= "delete")
             .select(col(idCol), col(textCol))))
 
-        // touched-partition sets, all delta-bound collects — three
-        // independent one-job collects over pinned (localCheckpoint'd)
-        // delta frames, overlapped so the wave pays one collect
-        // roundtrip, not three (guide §2.6)
-        def ints(df: DataFrame): Array[Int] =
-          Sink.distinctValues(df).map(_.asInstanceOf[Int])
-        var winsTouched: Array[Int] = null
-        var dfTouchedBkts: Array[Int] = null
-        var scrubTouched: Array[Int] = null
+        // per lake, one delta-bound collect over a pinned delta frame, then
+        // a staged rewrite of the PRE-wave lake's touched partitions: the
+        // three read no path another writes, so they overlap, and the
+        // marker lands strictly after ALL three (inParallel joins)
         Sink.inParallel(Seq(
-          () => winsTouched = ints(parts.dIds
-            .select(docShard(col("id")).cast("int"))),
-          () => dfTouchedBkts = ints(parts.dfTouched
-            .select(pmod(col("whash"), lit(hashBuckets.toLong)).cast("int"))),
-          () => scrubTouched = ints(parts.gone
-            .select(docShard(col("id")).cast("int")))))
-
-        // replacement content per touched partition (reads the PRE-wave
-        // lakes; no corpus-sized frame — the untouched partitions never
-        // enter these plans)
-        def inParts(c: Column, touched: Array[Int]): Column =
-          c.isin(touched.map(Integer.valueOf): _*)
-        val winsNew = Tables.parquet(spark, winsPath)
-          .filter(inParts(col("__shard"), winsTouched))
-          .join(broadcast(parts.dIds), Seq("id"), "left_anti")
-          .unionByName(parts.newDeltaWins
-            .withColumn("__shard", docShard(col("id")).cast("int")))
-        val dfNew = Tables.parquet(spark, dfPath)
-          .filter(inParts(col("__hbkt"), dfTouchedBkts))
-          .join(broadcast(parts.dfTouched), Seq("whash"), "left_anti")
-          .unionByName(parts.dfUpdated.withColumn("__hbkt",
-            pmod(col("whash"), lit(hashBuckets.toLong)).cast("int")))
-        val scrubNew = Tables.parquet(spark, scrubPath)
-          .filter(inParts(col("__shard"), scrubTouched))
-          .join(broadcast(parts.gone), Seq("id"), "left_anti")
-          .unionByName(parts.rescrubbed
-            .withColumn("__shard", docShard(col("id")).cast("int")))
-
-        // the three staging writes read only PRE-wave lakes + pinned delta
-        // frames and write three distinct staging dirs — independent, so
-        // they overlap (guide §2.6); the marker still lands strictly after
-        // ALL three complete (inParallel joins)
-        def stage(df: DataFrame, lake: String, partCol: String,
-                  touched: Array[Int]) =
-          LakeCommit.stage(spark, lake, LakeCommit.partitionDirs(partCol, touched))(
-            Sink.writePartitioned(df, _, partCol))
-        val staged = new Array[LakeCommit.Staged](3)
-        Sink.inParallel(Seq(
-          () => staged(0) = stage(winsNew, winsPath, "__shard", winsTouched),
-          () => staged(1) = stage(dfNew, dfPath, "__hbkt", dfTouchedBkts),
-          () => staged(2) = stage(scrubNew, scrubPath, "__shard", scrubTouched)))
-        staged.toSeq
+          () => Sink.stageKeyed(spark, winsPath, "__shard", shardOf(docShard), "id",
+            parts.dIds, parts.newDeltaWins),
+          () => Sink.stageKeyed(spark, dfPath, "__hbkt", bucketOf(hashBuckets), "whash",
+            parts.dfTouched, parts.dfUpdated),
+          () => Sink.stageKeyed(spark, scrubPath, "__shard", shardOf(docShard), "id",
+            parts.gone, parts.rescrubbed)))
       }
     }
+
+  // the partition columns: the doc-keyed lakes' shard, the df table's bucket
+  private def shardOf(docShard: Column => Column) = docShard(col("id")).cast("int")
+  private def bucketOf(hashBuckets: Int) = pmod(col("whash"), lit(hashBuckets.toLong)).cast("int")
 
   /** Drain the landing directory: one micro-batch per delivery file
     * ([[EventStream.landing]]), each applying one wave to the four lakes

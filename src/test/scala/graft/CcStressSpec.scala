@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.GraftTestBridge
+import org.apache.spark.GraftListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,7 +48,7 @@ class CcStressSpec extends AnyFunSuite with SparkSpec {
       try {
         val r = Dedup.connectedComponentsStats(pairs, "id_a", "id_b", maxIter = 18)
         val out = (r._1.as[(Long, Long)].collect(), r._2)
-        GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
+        GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
         out
       } finally spark.sparkContext.removeSparkListener(listener)
 

@@ -118,4 +118,31 @@ class LocalFsSpec extends AnyFunSuite with SparkSpec {
     }
     assert(got === Seq("1755", "1755"))
   }
+
+  test("getFileLinkStatus matches stock Hadoop for a file, a dir, links and a missing path") {
+    val root = tmp()
+    def raw(fs: RawLocalFileSystem) = { fs.initialize(URI.create("file:///"), new Configuration()); fs }
+    Files.write(Paths.get(root, "file"), "abc".getBytes("UTF-8"))
+    Files.createDirectory(Paths.get(root, "dir"))
+    Files.createSymbolicLink(Paths.get(root, "link"), Paths.get(root, "file"))
+    Files.createSymbolicLink(Paths.get(root, "rel"), Paths.get("dir"))
+    Files.createSymbolicLink(Paths.get(root, "dangling"), Paths.get(root, "gone"))
+    val names = Seq("file", "dir", "link", "rel", "dangling")
+    // unqualified paths, and a file:-qualified one (where stock reads no link)
+    val paths = names.map(n => new Path(s"$root/$n")) :+ new Path(s"file:$root/link")
+    def status(fs: RawLocalFileSystem, p: Path) = {
+      val s = fs.getFileLinkStatus(p)
+      (s.getPath, s.isFile, s.isDirectory, s.isSymlink, if (s.isSymlink) s.getSymlink else null,
+        s.getLen, s.getPermission, s.getOwner, s.getGroup, s.getModificationTime)
+    }
+    val (ours, stock) = (raw(new LocalFs.Raw), raw(new RawLocalFileSystem))
+    for (p <- paths) assert(status(ours, p) === status(stock, p), p)
+    assert(status(ours, paths(2))._4 && status(ours, paths(2))._5 === new Path(s"file:$root/file"))
+    assert(status(ours, paths(3))._5 === new Path(s"file:$root/dir"))
+    assert(!status(ours, paths(5))._4)
+    val missing = new Path(s"$root/missing")
+    val (e1, e2) = (intercept[IOException](ours.getFileLinkStatus(missing)),
+      intercept[IOException](stock.getFileLinkStatus(missing)))
+    assert((e1.getClass, e1.getMessage) === ((e2.getClass, e2.getMessage)))
+  }
 }

@@ -493,4 +493,89 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     val zDay = scanned(zPath, dayPred)
     assert(zDay < n / 2, s"z-order should still skip on day: $zDay of $n")
   }
+
+  test("partitionDir names a value's dir exactly as Spark's writer does, nulls included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def written(dt: DataType, values: Seq[Any]): Set[String] = {
+      val path = tmp()
+      val rows = values.zipWithIndex.map { case (v, i) => Row(i, v) }
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+          StructType(Seq(StructField("i", IntegerType), StructField("p", dt))))
+        .write.partitionBy("p").parquet(path)
+      new java.io.File(path).list().filter(_.startsWith("p=")).toSet
+    }
+    val cases = Seq(
+      IntegerType -> Seq(3, -7, 0, null),
+      DateType -> Seq(java.sql.Date.valueOf("2024-01-31"), java.sql.Date.valueOf("1999-12-01"), null),
+      StringType -> Seq("plain", "a/b", "k=v", "50%", "a b", "2024-01-01", "", null))
+    for ((dt, values) <- cases) {
+      val dirs = written(dt, values)
+      assert(values.map(Sink.partitionDir("p", _)).toSet === dirs, dt)
+    }
+    assert(Sink.partitionDir("p", java.time.LocalDate.parse("2024-01-31")) === "p=2024-01-31")
+    assert(Sink.partitionDir("p", null) === "p=__HIVE_DEFAULT_PARTITION__")
+  }
+
+  test("upsertPartitioned: partitions whose dir names are escaped, or null, merge in place") {
+    val path = tmp()
+    def rows = spark.read.parquet(path).select("id", "day", "value")
+      .as[(Long, Option[String], Double)].collect().sortBy(_._1).toSeq
+    Sink.upsertPartitioned(spark, path,
+      Seq((1L, "a/b", 1.0, 0), (2L, "a/b", 2.0, 0), (3L, "50% off", 3.0, 0),
+        (4L, null, 4.0, 0), (5L, null, 5.0, 0)).toDF("id", "day", "value", "version"),
+      Seq("id"), "version", "id", "day")
+    // update one row in "a/b" and one in the null partition: the others in
+    // those partitions must survive the swap, and "50% off" is untouched
+    Sink.upsertPartitioned(spark, path,
+      Seq((1L, "a/b", 10.0, 1), (4L, null, 40.0, 1)).toDF("id", "day", "value", "version"),
+      Seq("id"), "version", "id", "day")
+    assert(rows === Seq((1L, Some("a/b"), 10.0), (2L, Some("a/b"), 2.0),
+      (3L, Some("50% off"), 3.0), (4L, None, 40.0), (5L, None, 5.0)))
+  }
+
+  test("src/main writes partitionBy lakes and filters touched partitions only in Sink") {
+    val root = new java.io.File("src/main")
+    assume(root.isDirectory)
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val sources = files(root).filter(_.getName.endsWith(".scala")).map { f =>
+      val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
+      try f.getPath -> src.getLines().toVector finally src.close()
+    }
+    def code(l: String) = !Seq("*", "/*", "//").exists(l.trim.startsWith)
+    val query = "^\\s*\"(\\w+)\" -> \\(\\(.*".r
+    // each hit named by its file and the nearest enclosing `def` or
+    // registered query; a window spec (`Window` on the line or the one
+    // before) is not a lake write
+    def owners(token: String): Seq[String] = sources.flatMap { case (path, lines) =>
+      lines.indices.filter { i =>
+        lines(i).contains(token) && code(lines(i)) &&
+          !(token == "partitionBy(" && (lines(i) +: lines.lift(i - 1).toSeq).exists(_.contains("Window")))
+      }.map { i =>
+        val owner = lines.take(i + 1).reverse.filter(code).collectFirst {
+          case l if l.contains("def ") =>
+            l.trim.replaceFirst("^private(\\[\\w+\\])? ", "").stripPrefix("def ").takeWhile(_ != '(')
+          case query(name) => name
+        }
+        s"$path:${owner.getOrElse("?")}"
+      }
+    }
+    val sink = "src/main/scala/graft/sources/Sink.scala"
+    // the one write outside Sink is compact_partitions' fixture, which
+    // fragments its lake on purpose
+    assert(owners("partitionBy(").sorted === Seq(
+      "src/main/scala/graft/entryLake.scala:compact_partitions",
+      s"$sink:exportShards", s"$sink:writeLake", s"$sink:writePartitionedSorted"))
+    // a touched-partition filter is Sink.stagePartitions' alone; the other
+    // isin( filters test row values against fixed lists
+    assert(owners("isin(").sorted === Seq(
+      "src/main/scala/graft/entryCore.scala:quarantine_stats",
+      "src/main/scala/graft/operators/Dedup.scala:anchoredSubstringPairs",
+      "src/main/scala/graft/operators/Quality.scala:domainValidation",
+      "src/main/scala/graft/operators/Toxicity.scala:blocklistScore",
+      "src/main/scala/graft/operators/UrlRules.scala:urlFilter",
+      "src/main/scala/graft/operators/UrlRules.scala:urlFilter",
+      s"$sink:stagePartitions"))
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.GraftTestBridge
+import org.apache.spark.GraftListenerBusBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
@@ -19,11 +19,11 @@ trait SparkSpec { self: Suite =>
     val listener = new SparkListener {
       override def onJobStart(ev: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
+    GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val out = build
-      GraftTestBridge.waitUntilListenerEmpty(spark.sparkContext)
+      GraftListenerBusBridge.waitUntilEmpty(spark.sparkContext)
       (out, jobs.get)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
