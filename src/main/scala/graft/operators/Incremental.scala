@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.sources.{LakeCommit, Sink, Tables}
 
@@ -346,7 +347,8 @@ object Incremental {
     // The staging is written in its final shard layout, so the apply is
     // pure directory renames — the staged bytes move once. The repack holds
     // every row of the affected shards, so the old ones are not read.
-    (Sink.stagePartitions(spark, packedPath, "shard", affectedIds.toSeq, packedOrder)(
-      _ => parts.repacked), parts.newLedger)
+    (Sink.stagePartitions(spark, packedPath, "shard", IntegerType,
+      affectedIds.toSeq.map(Sink.partitionDir("shard", _)), packedOrder)(_ => parts.repacked),
+      parts.newLedger)
   }
 }

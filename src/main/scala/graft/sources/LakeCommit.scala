@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   *    and write the replacement there in its final partition layout
   *    (`col=value` dirs), or as a whole new lake. A touched-partition
   *    rewrite stages through `Sink.stagePartitions`, which names the
-  *    touched dirs with `Sink.partitionDir`, Spark's own encoding.
+  *    touched dirs with `Sink.partitionDir`, Spark's own encoding, and
+  *    reads their old rows by path.
   *  - [[swap]]: move the staged data into place by rename, never by a
   *    second Spark write. Per partition: touched partitions the staged data
   *    emptied are deleted FIRST, then each staged dir swaps in (live dir →
@@ -223,7 +224,7 @@ object LakeCommit {
 
   private def name(lake: String): String = new Path(lake).getName
 
-  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+  private[graft] def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** FileSystem.rename reports failure by returning false (e.g. a missing

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, StringType}
 
 import graft.operators.Dedup
 
@@ -83,53 +83,48 @@ object Sink {
       col(partitionCol))
 
   /** The directory name Spark's writer gives value `value` of
-    * `partitionCol` (`ExternalCatalogUtils.getPartitionPathString` over
-    * its [[partitionKey]]). A swap deletes touched dirs by these names, so
-    * a wrong name would delete a live partition. */
+    * `partitionCol`: the value cast to string in the session time zone
+    * (null and the empty string name the default partition, which Spark
+    * reads back as null), escaped by `ExternalCatalogUtils`. A swap deletes
+    * touched dirs by these names, so a wrong name would delete a live one. */
   private[graft] def partitionDir(partitionCol: String, value: Any): String =
-    ExternalCatalogUtils.getPartitionPathString(partitionCol, partitionKey(value))
+    ExternalCatalogUtils.getPartitionPathString(partitionCol,
+      Option(Cast(Literal(value), StringType, Option(SQLConf.get.sessionLocalTimeZone)).eval())
+        .map(_.toString).filter(_.nonEmpty).getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
 
-  /** A partition value's dir name before escaping: the value cast to
-    * string in the session time zone, and for null and the empty string
-    * the default partition's name (the dir Spark reads back as null). */
-  private def partitionKey(value: Any): String =
-    Option(Cast(Literal(value), StringType, Option(SQLConf.get.sessionLocalTimeZone)).eval())
-      .map(_.toString).filter(_.nonEmpty).getOrElse(DefaultPartition)
-
-  /** [[partitionKey]] of a lake's partition column as Spark reads it. */
-  private def keyOf(partitionCol: String): Column =
-    coalesce(col(partitionCol).cast("string"), lit(DefaultPartition))
-
-  /** The [[partitionKey]] a partition dir name holds. */
-  private def dirKey(dir: String): String =
-    ExternalCatalogUtils.unescapePathName(dir.substring(dir.indexOf('=') + 1))
-
-  private val DefaultPartition = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-
-  /** The one touched-partition rewrite: `rewrite` maps `lake`'s rows in
-    * the `touched` partitions (values of `partitionCol`; no other dir is
-    * read) to their replacement, staged for [[LakeCommit]] in its final
-    * `col=value` layout. The swap replaces every touched dir and deletes
-    * each one the replacement left empty, so rows `rewrite` adds must lie
-    * in touched partitions. The old rows are by-name: a rewrite that
-    * ignores them reads nothing. Nothing touched, nothing written. */
+  /** The one touched-partition rewrite: `rewrite` maps the rows of
+    * `lake`'s partition dirs `touched` ([[partitionDir]] names, read by
+    * path with `partitionCol` typed `partType` by [[Tables.partitions]],
+    * so no value comparison can miss a dir) to their replacement, staged
+    * for [[LakeCommit]] in its final `col=value` layout. The swap replaces
+    * every touched dir and deletes each one the replacement left empty, so
+    * rows `rewrite` adds must lie in touched dirs. The old rows are
+    * by-name: a rewrite that ignores them reads nothing. Nothing touched,
+    * nothing written. */
   private[graft] def stagePartitions(spark: SparkSession, lake: String, partitionCol: String,
-                                     touched: Seq[Any], sortBy: Seq[String] = Nil)
+                                     partType: DataType, touched: Seq[String],
+                                     sortBy: Seq[String] = Nil)
                                     (rewrite: (=> DataFrame) => DataFrame): LakeCommit.Staged =
-    LakeCommit.stage(spark, lake, touched.map(partitionDir(partitionCol, _))) { dir =>
-      if (touched.nonEmpty) writeLake(rewrite(Tables.parquet(spark, lake)
-        .filter(keyOf(partitionCol).isin(touched.map(partitionKey): _*))), dir, partitionCol, sortBy)
+    LakeCommit.stage(spark, lake, touched) { dir =>
+      if (touched.nonEmpty) writeLake(rewrite(
+        Tables.partitions(spark, lake, touched, partitionCol, partType)), dir, partitionCol, sortBy)
     }
+
+  /** [[stagePartitions]] over the partitions `values`' one column, the
+    * partition column, holds, found in one job ([[distinctValues]]). */
+  private def stageTouched(spark: SparkSession, lake: String, values: DataFrame)
+                          (rewrite: (=> DataFrame) => DataFrame): LakeCommit.Staged =
+    stagePartitions(spark, lake, values.columns.head, values.schema.head.dataType,
+      distinctValues(values).toSeq.map(partitionDir(values.columns.head, _)).distinct)(rewrite)
 
   /** [[stagePartitions]] for a keyed delta: drop the rows of `removed`'s
     * `key`s and add `added`. The touched partitions are those `part` (the
-    * partition value as an expression of the key) gives `removed`, found
-    * in one job ([[distinctValues]]); every key `added` holds must also be
-    * in `removed`. */
+    * partition value as an expression of the key) gives `removed`; every
+    * key `added` holds must also be in `removed`. */
   private[graft] def stageKeyed(spark: SparkSession, lake: String, partitionCol: String,
                                 part: Column, key: String, removed: DataFrame,
                                 added: DataFrame): LakeCommit.Staged =
-    stagePartitions(spark, lake, partitionCol, distinctValues(removed.select(part)).toSeq)(
+    stageTouched(spark, lake, removed.select(part.as(partitionCol)))(
       _.join(broadcast(removed), Seq(key), "left_anti")
         .unionByName(added.withColumn(partitionCol, part)))
 
@@ -197,12 +192,11 @@ object Sink {
         (partitionCol +: keys).distinct, orderCol, tieBreak)
       // the first load stays a dynamic write: that commit leaves no
       // `_SUCCESS` marker in the staged root, which swaps in whole
-      if (!fileSystem(spark, path).exists(new Path(path)))
+      if (!LakeCommit.fileSystem(spark, path).exists(new Path(path)))
         LakeCommit.stage(spark, path, whole = true)(writePartitioned(merge(updates), _, partitionCol)) -> (())
       // Partition values in the batch: bounded by the table's partition
       // count (days), so the driver-side collect is O(days), never O(rows).
-      else stagePartitions(spark, path, partitionCol,
-        distinctValues(updates.select(partitionCol)).toSeq) { old =>
+      else stageTouched(spark, path, updates.select(partitionCol)) { old =>
         merge(old.select(updates.columns.map(col): _*).unionByName(updates))
       } -> (())
     }
@@ -222,14 +216,14 @@ object Sink {
     * n_rows AFTER the pass, files_before, files_after) — row counts must be
     * invariant, which is the correctness gate.
     *
-    * Driver-side material is O(partitions) directory listings — bounded
-    * by days-of-history like the upsert's touched-partition discovery. A
-    * partition too large for one file belongs in
+    * Driver-side material is O(partitions) directory listings and audit
+    * rows — bounded by days-of-history like the upsert's touched-partition
+    * discovery. A partition too large for one file belongs in
     * [[writePartitionedSorted]]'s range-split layout instead; compaction
     * restores the small-file invariant, it does not re-shard. */
   def compactPartitions(spark: SparkSession, path: String, partitionCol: String,
                         maxFilesPerPartition: Int = 1): DataFrame = {
-    val fs = fileSystem(spark, path)
+    val fs = LakeCommit.fileSystem(spark, path)
     def dataFiles(p: Path): Int = fs.listStatus(p).count { f =>
       f.isFile && !f.getPath.getName.startsWith("_") &&
         !f.getPath.getName.startsWith(".")
@@ -239,20 +233,17 @@ object Sink {
       .map(s => s.getPath.getName -> dataFiles(s.getPath)).toMap
     val before = LakeCommit.replace(spark, path) {
       val files = fileCounts()
-      val needy = files.collect { case (dir, n) if n > maxFilesPerPartition => dirKey(dir) }
-      stagePartitions(spark, path, partitionCol, needy.toSeq)(old => old) -> files
+      val needy = files.collect { case (dir, n) if n > maxFilesPerPartition => dir }
+      stagePartitions(spark, path, partitionCol, StringType, needy.toSeq)(old => old) -> files
     }
     val after = fileCounts()
     import spark.implicits._
-    val audit = before.keys.toSeq.sorted
-      .map(d => (dirKey(d), before(d), after.getOrElse(d, 0)))
-      .toDF("__part", "files_before", "files_after")
-    Tables.parquet(spark, path)
-      .groupBy(keyOf(partitionCol).as("__part"))
-      .agg(count(lit(1)).as("n_rows"))
-      .join(broadcast(audit), Seq("__part"))
-      .select(nullif(col("__part"), lit(DefaultPartition)).as(partitionCol),
-        col("n_rows"), col("files_before"), col("files_after"))
+    // rows per dir after the pass, each dir's value read off its name
+    Tables.partitions(spark, path, after.keys.toSeq, partitionCol, StringType)
+      .groupBy(partitionCol).count().as[(String, Long)].collect().toSeq.flatMap { case (v, n) =>
+        val dir = partitionDir(partitionCol, v)
+        before.get(dir).map((v, n, _, after(dir)))
+      }.toDF(partitionCol, "n_rows", "files_before", "files_after")
   }
 
   /** Bucketed+sorted managed copy of a table: hash-bucketed on the join
@@ -509,23 +500,12 @@ object Sink {
     // 4-column manifest bit-for-bit.
     val hasSegs = stream.columns.contains("seg_id")
     writeLake(stream, path, "shard", sortBy = Seq("seq_id", "pos"))
-    val base = Tables.parquet(spark, path)
-      .groupBy(col("shard").cast("long").as("shard"))
-    if (hasSegs)
-      base.agg(
-        countDistinct(col("seq_id")).as("n_seqs"),
-        count(lit(1)).as("n_tokens"),
-        sum((col("pos") + 1L) * col("token_id") % 1000000007L)
-          .cast("long").as("checksum"),
-        countDistinct(col("seq_id"), col("seg_id")).as("n_segments"),
-        sum((col("pos") + 1L) * col("seg_id") % 1000000007L)
-          .cast("long").as("seg_checksum"))
-    else
-      base.agg(
-        countDistinct(col("seq_id")).as("n_seqs"),
-        count(lit(1)).as("n_tokens"),
-        sum((col("pos") + 1L) * col("token_id") % 1000000007L)
-          .cast("long").as("checksum"))
+    def weighted(c: String) = sum((col("pos") + 1L) * col(c) % 1000000007L).cast("long")
+    val aggs = Seq(countDistinct(col("seq_id")).as("n_seqs"), count(lit(1)).as("n_tokens"),
+      weighted("token_id").as("checksum")) ++ (if (!hasSegs) Nil else Seq(
+      countDistinct(col("seq_id"), col("seg_id")).as("n_segments"), weighted("seg_id").as("seg_checksum")))
+    Tables.parquet(spark, path).groupBy(col("shard").cast("long").as("shard"))
+      .agg(aggs.head, aggs.tail: _*)
   }
 
   /** Idempotent micro-batch append for foreachBatch sinks: the batch's
@@ -652,7 +632,4 @@ object Sink {
     bg.await()
     result
   }
-
-  private def fileSystem(spark: SparkSession, path: String): FileSystem =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 }

@@ -7,11 +7,12 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Parquet table loaders for the driver testdata layout
   * (`<sfDir>/<table>.parquet`), and [[parquet]], the one parquet read every
-  * table, lake and sink read-back in graft goes through.
+  * table, lake and sink read-back in graft goes through ([[partitions]]
+  * reads chosen partition dirs of a lake the same way).
   *
   * A schema-less `spark.read.parquet` infers its schema by launching a Spark
   * job (`parallelize(files).mapPartitions(readFooter).collect()`) even when,
@@ -41,6 +42,23 @@ object Tables {
       case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
+
+  /** The rows of `lake`'s partition dirs named `dirs` (no other dir is
+    * listed; a name with no dir reads as no rows), with `partitionCol`
+    * parsed from each dir's own name as `partType`, not inferred: a string
+    * partition `01` reads back as `"01"`, never as the int 1. */
+  private[graft] def partitions(spark: SparkSession, lake: String, dirs: Seq[String],
+                                partitionCol: String, partType: DataType): DataFrame = {
+    val present = LakeCommit.fileSystem(spark, lake).listStatus(new Path(lake))
+      .map(_.getPath.getName).toSet
+    val paths = dirs.distinct.filter(present).map(new Path(lake, _).toString)
+    val read = if (paths.isEmpty) Seq(lake) else paths
+    val base = spark.read.option("basePath", lake)
+    val data = footerSchema(spark, read).getOrElse(base.parquet(read: _*).schema)
+    val rows = base.schema(StructType(data.filterNot(_.name == partitionCol) :+
+      StructField(partitionCol, partType))).parquet(read: _*)
+    if (paths.isEmpty) rows.where(lit(false)) else rows
+  }
 
   private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
     // with schema merging on every footer matters: Spark must read them all

@@ -534,7 +534,37 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
       (3L, Some("50% off"), 3.0), (4L, None, 40.0), (5L, None, 5.0)))
   }
 
-  test("src/main writes partitionBy lakes and filters touched partitions only in Sink") {
+  test("compaction and upsert keep string partitions whose dir text Spark infers as numbers") {
+    // "01" and "1.50" read back through type inference as the doubles 1.0
+    // and 1.5: a rewrite that picked the touched rows by value would miss
+    // every row of both dirs, and the swap would delete them
+    def dirs(path: String) = new java.io.File(path).list().filter(_.startsWith("p=")).toSet
+    def rows(path: String) = spark.read.parquet(path).select("id", "value")
+      .as[(Long, Double)].collect().sortBy(_._1).toSeq
+    val compacted = tmp()
+    (1L to 20L).map(i => (i, if (i % 2 == 0) "01" else "1.50", i * 1.0)).toDF("id", "p", "value")
+      .repartition(4, org.apache.spark.sql.functions.col("id"))
+      .write.partitionBy("p").parquet(compacted)
+    val audit = Sink.compactPartitions(spark, compacted, "p")
+      .as[(String, Long, Int, Int)].collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(audit.keySet === Set("01", "1.50"))
+    assert(audit.values.forall { case (n, before, after) => n === 10L && before > 1 && after === 1 },
+      audit)
+    assert(dirs(compacted) === Set("p=01", "p=1.50"))
+    assert(rows(compacted) === (1L to 20L).map(i => (i, i * 1.0)))
+
+    val upserted = tmp()
+    def batch(rs: (Long, String, Double, Int)*) = rs.toDF("id", "p", "value", "version")
+    Sink.upsertPartitioned(spark, upserted,
+      batch((1L, "01", 1.0, 0), (2L, "01", 2.0, 0), (3L, "1.50", 3.0, 0)),
+      Seq("id"), "version", "id", "p")
+    Sink.upsertPartitioned(spark, upserted,
+      batch((1L, "01", 10.0, 1), (4L, "1.50", 4.0, 0)), Seq("id"), "version", "id", "p")
+    assert(dirs(upserted) === Set("p=01", "p=1.50"))
+    assert(rows(upserted) === Seq((1L, 10.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)))
+  }
+
+  test("src/main writes partitionBy lakes and stages touched partitions only in Sink") {
     val root = new java.io.File("src/main")
     assume(root.isDirectory)
     def files(d: java.io.File): Seq[java.io.File] =
@@ -543,39 +573,23 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
       val src = scala.io.Source.fromFile(f)(scala.io.Codec.UTF8)
       try f.getPath -> src.getLines().toVector finally src.close()
     }
-    def code(l: String) = !Seq("*", "/*", "//").exists(l.trim.startsWith)
-    val query = "^\\s*\"(\\w+)\" -> \\(\\(.*".r
-    // each hit named by its file and the nearest enclosing `def` or
-    // registered query; a window spec (`Window` on the line or the one
-    // before) is not a lake write
-    def owners(token: String): Seq[String] = sources.flatMap { case (path, lines) =>
-      lines.indices.filter { i =>
-        lines(i).contains(token) && code(lines(i)) &&
-          !(token == "partitionBy(" && (lines(i) +: lines.lift(i - 1).toSeq).exists(_.contains("Window")))
-      }.map { i =>
-        val owner = lines.take(i + 1).reverse.filter(code).collectFirst {
-          case l if l.contains("def ") =>
-            l.trim.replaceFirst("^private(\\[\\w+\\])? ", "").stripPrefix("def ").takeWhile(_ != '(')
-          case query(name) => name
-        }
-        s"$path:${owner.getOrElse("?")}"
-      }
-    }
     val sink = "src/main/scala/graft/sources/Sink.scala"
-    // the one write outside Sink is compact_partitions' fixture, which
-    // fragments its lake on purpose
-    assert(owners("partitionBy(").sorted === Seq(
-      "src/main/scala/graft/entryLake.scala:compact_partitions",
-      s"$sink:exportShards", s"$sink:writeLake", s"$sink:writePartitionedSorted"))
-    // a touched-partition filter is Sink.stagePartitions' alone; the other
-    // isin( filters test row values against fixed lists
-    assert(owners("isin(").sorted === Seq(
-      "src/main/scala/graft/entryCore.scala:quarantine_stats",
-      "src/main/scala/graft/operators/Dedup.scala:anchoredSubstringPairs",
-      "src/main/scala/graft/operators/Quality.scala:domainValidation",
-      "src/main/scala/graft/operators/Toxicity.scala:blocklistScore",
-      "src/main/scala/graft/operators/UrlRules.scala:urlFilter",
-      "src/main/scala/graft/operators/UrlRules.scala:urlFilter",
-      s"$sink:stagePartitions"))
+    // the file of every code line that `hit` picks
+    def hits(hit: (Vector[String], Int) => Boolean): Seq[String] =
+      sources.flatMap { case (path, lines) =>
+        lines.indices.filter(i => !Seq("*", "/*", "//").exists(lines(i).trim.startsWith) &&
+          hit(lines, i)).map(_ => path)
+      }
+    // a writer's partitionBy, not a window spec's (`Window` on the line or
+    // the one before); the one write outside Sink is compact_partitions'
+    // fixture, which fragments its lake on purpose
+    assert(hits((ls, i) => ls(i).contains("partitionBy(") &&
+      !ls.slice(i - 1, i + 1).exists(_.contains("Window"))).filterNot(_ == sink) ===
+      Seq("src/main/scala/graft/entryLake.scala"))
+    // a partial stage names touched dirs, which only Sink encodes
+    assert(hits((ls, i) => ls(i).contains("LakeCommit.stage(") &&
+      !ls(i).contains("whole = true")).filterNot(_ == sink) === Nil)
+    // and no lake-committing file picks partitions by value
+    assert(hits((ls, i) => ls(i).contains("isin(") && ls.exists(_.contains("LakeCommit"))) === Nil)
   }
 }
